@@ -4,7 +4,9 @@ read-only sf0.1 tables (documents: per-copy token shuffle so copies are
 bag-identical but sequence-distinct; embeddings: float32 + small seeded
 noise). Used to probe operator scaling (SURVEY.md §8.3):
     python3 scripts/gen_scale_stress.py
-    sbt "runMain graft.tools.Prof /tmp/scale20 q_dedup_minhash_lsh ..."
+then, from `sbt console` with a SparkSession `spark`, run one registered
+query over the fixture:
+    graft.SparkEntry.queries("<name>")(spark, "/tmp/scale20")
 """
 import os
 import random

@@ -20,13 +20,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * Scale shape: each generation is ONE narrow Spark job — candidates are
  * exploded from elites, mutated (seeded, keyed), hash-embedded and
  * cosine-scored in whole-stage codegen, then TakeOrdered'd down to the
- * elite set. The default loop keeps O(pop_size) per-generation state on
- * the driver (the reference's pop=60 operating point); the FRAME loop
- * ([[evolutionarySearchDF]], r14) keeps the population as a per-generation
- * checkpointed DataFrame and breeds from a keyed per-offspring plan
- * ([[breedPlan]]) — identical answers (spec-pinned), pop_size past driver
- * memory. Greedy restarts are embarrassingly parallel: one executor-local
- * hill-climb per restart inside mapPartitions, zero Spark jobs per step.
+ * elite set. The loop keeps O(pop_size) per-generation state on the
+ * driver (the reference's pop=60 operating point) and breeds each
+ * offspring from a keyed plan ([[breedPlan]]). Greedy restarts are
+ * embarrassingly parallel: one executor-local hill-climb per restart
+ * inside mapPartitions, zero Spark jobs per step.
  */
 object Inversion {
 
@@ -156,10 +154,8 @@ object Inversion {
 
   // ---- evolutionary search (app.py:100-171) ----------------------------
 
-  /** Member `i` of the seed population — a PURE function of (params, i),
-    * so the driver loop and the frame loop seed the identical population
-    * without a driver-side Seq (app.py:106-128's lexicon phrases with 1-4
-    * mutations each). */
+  /** Member `i` of the seed population — a PURE function of (params, i)
+    * (app.py:106-128's lexicon phrases with 1-4 mutations each). */
   private[attack] def seedOne(p: Params, i: Int): String = {
     val seeds = (0 until 8).map { s =>
       (0 until 4).map(j => Lexicon((s * 3 + j * 5) % Lexicon.length)).mkString(" ")
@@ -181,9 +177,8 @@ object Inversion {
     * independent SplitMix64 streams. The pre-r14 driver loop drew these
     * from ONE sequential per-generation RNG whose consumed-draw count
     * depended on each crossover branch, so offspring `i`'s draws depended
-    * on every earlier offspring's branch — unreplayable anywhere but the
-    * driver; keyed streams make the plan computable per offspring on any
-    * executor (the frame loop's parallelism contract) while keeping the
+    * on every earlier offspring's branch; keyed streams make each
+    * offspring's plan independent of the others while keeping the
     * determinism pin (same seeds → same attack, bit for bit). */
   private[attack] def breedPlan(seed: Long, gen: Int, i: Int, nElite: Int,
                                 crossoverP: Double): (Int, Int, Long, Long) = {
@@ -198,7 +193,7 @@ object Inversion {
   }
 
   /** Breed one offspring from its plan (crossover when a partner was
-    * drawn, then the mutation pipeline) — shared by both loops. */
+    * drawn, then the mutation pipeline). */
   private[attack] def breedOne(a: String, b: Option[String],
                                crossSeed: Long, mutSeed: Long): String =
     mutate(b.fold(a)(bb => crossover(a, bb, crossSeed)), mutSeed)
@@ -207,16 +202,12 @@ object Inversion {
     * embed stage goes through the pluggable [[graft.functions.Embedder]]
     * seam (hash kernel by default; a real model via BatchedModelEmbedder —
     * either way the scoring plan is the same narrow map + cosine). */
-  private def scoreFrame(cands: DataFrame, target: Array[Float],
-                         embedder: Embedder): DataFrame =
-    embedder.embed(cands, "text", "emb")
-      .withColumn("score", VF.cosine(col("emb"), typedlit(target)))
-      .select("text", "score")
-
   private def scoreGeneration(spark: SparkSession, cands: Seq[String],
                               target: Array[Float], embedder: Embedder): DataFrame = {
     import spark.implicits._
-    scoreFrame(cands.toDF("text"), target, embedder)
+    embedder.embed(cands.toDF("text"), "text", "emb")
+      .withColumn("score", VF.cosine(col("emb"), typedlit(target)))
+      .select("text", "score")
   }
 
   /** Evolutionary attack loop. Returns (deduped per-generation bests,
@@ -243,80 +234,13 @@ object Inversion {
       else {
         // offspring: crossover pairs of elites (p=.12) then mutate, until
         // pop is refilled (app.py:150-168), each offspring from its KEYED
-        // [[breedPlan]] — the same plan the frame loop computes per
-        // executor, so the two loops breed identically. Driver-side
-        // string ops are O(popSize); embed/score stay distributed.
+        // [[breedPlan]]. Driver-side string ops are O(popSize);
+        // embed/score stay distributed.
         population = elites.map(_.text) ++ (nElite until p.popSize).map { i =>
           val (ai, bi, cs, ms) = breedPlan(p.seed, gen, i, nElite, p.crossoverP)
           breedOne(elites(ai).text,
             if (bi >= 0) Some(elites(bi).text) else None, cs, ms)
         }
-      }
-      gen += 1
-    }
-    (dedupMax(bests.toSeq), bests.map(_.score).toSeq)
-  }
-
-  /** [[evolutionarySearch]] with the POPULATION as a FRAME — the scale
-    * lane for pop sizes past driver memory (the one remaining
-    * driver-bounded loop until r14): per generation the population never
-    * collects; only the 1-row generation best does (the trajectory).
-    *
-    *  - scoring is the same [[scoreFrame]] plan over the population frame;
-    *  - the elite cut is a global (score desc, text asc) sort + limit —
-    *    the funnel task sees ≤ nElite ANSWER rows, never the population —
-    *    ranked by a window whose input is the already-cut elite frame,
-    *    and checkpointed per generation (the lineage-cut cadence, SURVEY
-    *    §4.3.3: constant-depth plans across arbitrarily many generations);
-    *  - breeding fans the KEYED [[breedPlan]] over `spark.range(nElite,
-    *    popSize)` (pure per-index draws — zero driver state), equi-joins
-    *    the parent and optional partner TEXT from the checkpointed elite
-    *    frame by elite index, and breeds in a typed map running the SAME
-    *    [[breedOne]] the driver loop calls.
-    *
-    * Same keyed schedule + same kernels ⇒ trajectories and candidates are
-    * IDENTICAL to [[evolutionarySearch]] generation for generation at
-    * fixed seeds (spec-pinned, InversionSpec). */
-  def evolutionarySearchDF(spark: SparkSession, target: Array[Float], p: Params,
-                           embedder: Option[Embedder] = None): (Seq[Candidate], Seq[Double]) = {
-    import spark.implicits._
-    val emb = embedder.getOrElse(HashEmbedder(p.dim))
-    val nElite = math.ceil(p.popSize * p.eliteFrac).toInt
-    val pp = p
-    var population: DataFrame =
-      spark.range(p.popSize.toLong).as[Long].map(i => seedOne(pp, i.toInt)).toDF("text")
-    val bests = scala.collection.mutable.ArrayBuffer.empty[Candidate]
-    var gen = 0
-    var stop = false
-    while (gen < p.generations && !stop) {
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(desc("score"), asc("text"))
-      val elites = scoreFrame(population, target, emb)
-        .orderBy(desc("score"), asc("text")).limit(nElite)
-        .withColumn("eidx", row_number().over(w).cast("long") - 1L)
-        .localCheckpoint()
-      val bestRow = elites.filter(col("eidx") === 0L)
-        .select("text", "score").head()
-      bests += Candidate(bestRow.getString(0), bestRow.getDouble(1))
-      if (bestRow.getDouble(1) > p.earlyStop) stop = true
-      else {
-        val g = gen
-        val plans = spark.range(nElite.toLong, p.popSize.toLong).as[Long]
-          .map { iL =>
-            val (ai, bi, cs, ms) =
-              breedPlan(pp.seed, g, iL.toInt, nElite, pp.crossoverP)
-            (iL, ai.toLong, bi.toLong, cs, ms)
-          }.toDF("i", "aidx", "bidx", "cseed", "mseed")
-        val offspring = plans
-          .join(elites.select(col("eidx").as("aidx"), col("text").as("ta")),
-            Seq("aidx"))
-          .join(elites.select(col("eidx").as("bidx"), col("text").as("tb")),
-            Seq("bidx"), "left_outer")
-          .select(col("ta"), col("tb"), col("cseed"), col("mseed"))
-          .as[(String, Option[String], Long, Long)]
-          .map { case (a, b, cs, ms) => breedOne(a, b, cs, ms) }
-          .toDF("text")
-        population = elites.select("text").unionByName(offspring)
       }
       gen += 1
     }

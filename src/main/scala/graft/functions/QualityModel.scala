@@ -3,7 +3,8 @@ package graft.functions
 /**
  * Frozen hashed-bucket quality-classifier artifact — the output of
  * [[graft.operators.QualityTrainer]] over the sf0.01 `documents` fixture
- * (regenerate with `Prof qualitytrain`; `QualityClassifierSpec` retrains
+ * (regenerate with `graft.operators.QualityTrainer.printArtifact` over the
+ * sf0.01 documents from `sbt console`; `QualityClassifierSpec` retrains
  * and asserts bit-equality, so silent drift between trainer and artifact
  * cannot happen — the BpeMerges1k discipline).
  *

@@ -66,7 +66,8 @@ object Percolate {
         ph => coalesce(ph, array())).as("phrases"))
   }
 
-  /** Reject profiles with no positive clause, phrases with no terms, and
+  /** Reject profiles with no positive clause, phrases with no terms, a
+    * NULL profile_id (no alert pair could ever name that profile), and
     * registries with a duplicated profile_id — two rows sharing an id
     * would MERGE their clause terms in the (doc, profile) aggregation and
     * duplicate the broadcast meta join, yielding wrong or duplicated
@@ -77,7 +78,9 @@ object Percolate {
     // ONE aggregate job computes every violation flag (was three limit(1)
     // probes + a groupBy count — four driver-blocking registry jobs per
     // match call, ~0.3 s of pure scheduling at any registry size); the
-    // refusals fire in the original order with the original messages
+    // refusals fire in the original order with the original messages;
+    // NULL ids are counted apart (count(col) and countDistinct both skip
+    // NULLs) and refused before duplicates
     val p = nullsafe(profiles)
     val r = p.agg(
       coalesce(sum(when(
@@ -85,13 +88,17 @@ object Percolate {
         1L).otherwise(0L)), lit(0L)).as("dead"),
       coalesce(sum(when(exists(col("phrases"), ph => size(ph) === 0),
         1L).otherwise(0L)), lit(0L)).as("empty_ph"),
-      (count(lit(1)) - countDistinct(col("profile_id"))).as("dups")).head()
+      count(when(col("profile_id").isNull, 1)).as("null_ids"),
+      (count(col("profile_id")) - countDistinct(col("profile_id"))).as("dups")).head()
     require(r.getLong(0) == 0,
       "every profile needs at least one positive (must/any/phrase) clause — " +
         "a pure-negation profile could never fire (a dead subscription)")
     require(r.getLong(1) == 0,
       "a phrase clause needs at least one term")
     require(r.getLong(2) == 0,
+      s"profile_id must not be NULL — ${r.getLong(2)} registry row(s) have " +
+        "a NULL profile_id, which no alert could ever name")
+    require(r.getLong(3) == 0,
       "profile_id must be unique across the registry — duplicate rows " +
         "would merge their clauses into one unintended profile")
   }

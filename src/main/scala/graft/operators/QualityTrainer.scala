@@ -77,8 +77,9 @@ object QualityTrainer {
     (bias, weights)
   }
 
-  /** Print the frozen artifact as Scala source (the `Prof qualitytrain`
-    * regeneration path — paste into QualityModel.scala). */
+  /** Print the frozen artifact as Scala source — the regeneration path:
+    * call it from `sbt console` over the sf0.01 `documents` and paste the
+    * output into QualityModel.scala. */
   def printArtifact(docs: DataFrame): Unit = {
     val (bias, w) = train(docs)
     println(s"  val Bias: Long = ${bias}L")

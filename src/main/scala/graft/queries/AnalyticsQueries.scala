@@ -220,8 +220,8 @@ object AnalyticsQueries {
     // INDEPENDENT of training quality, so the oracle is plain brute force
     // (no k-means replay): exact answers at pruned-scan cost is the whole
     // point. On this near-equidistant synthetic fixture little prunes —
-    // the clustered-fixture spec and the Prof stress family measure the
-    // pruning; this row pins exactness.
+    // the clustered-fixture spec and the SURVEY §8.3 exact-pruned rows
+    // measure the pruning; this row pins exactness.
     Q(
       "q_ann_exact_pruned",
       "exact top-5 kNN via triangle-inequality cell pruning on the IVF index",

@@ -769,10 +769,7 @@ object AnnQueries {
         // here would diverge past N > 2^25*10)
         var bits = 6
         while (bits < 25 && (1L << bits) * 10 < n) bits += 1
-        val bucketCol = (0 until bits).map { p =>
-          when(VF.dot(col("embedding"), typedlit(plane(p))) >= 0, lit(1L << p))
-            .otherwise(lit(0L))
-        }.reduce(_ + _)
+        val bucketCol = VF.lshBucket(col("embedding"), Array.tabulate(bits)(plane))
         val e = raw.withColumn("bucket", bucketCol).persist()
         val a = e.select(col("vec_id").as("src"), col("embedding").as("semb"), col("bucket"))
         val b = e.select(col("vec_id").as("dst"), col("embedding").as("demb"),
@@ -840,10 +837,7 @@ object AnnQueries {
         val n = raw.count()
         var bits = 6
         while (bits < 25 && (1L << bits) * 10 < n) bits += 1
-        val bucketCol = (0 until bits).map { p =>
-          when(VF.dot(col("embedding"), typedlit(plane(p))) >= 0, lit(1L << p))
-            .otherwise(lit(0L))
-        }.reduce(_ + _)
+        val bucketCol = VF.lshBucket(col("embedding"), Array.tabulate(bits)(plane))
         val e = raw.withColumn("bucket", bucketCol).persist()
         val a = e.select(col("vec_id").as("src"), col("embedding").as("semb"), col("bucket"))
         val b = e.select(col("vec_id").as("dst"), col("embedding").as("demb"),

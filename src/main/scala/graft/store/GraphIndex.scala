@@ -68,9 +68,9 @@ object GraphIndex {
 
   /** [[GraphIndex.deleteBatch]] batches up to this size resolve their
     * in-neighbors via reverse-tree point reads; larger batches run the
-    * fully distributed resolved-graph scan. MEASURED crossover (Prof
-    * delstress): the point path is ~linear in the batch at ~0.02-0.03 s
-    * per id REGARDLESS of corpus size (200 ids ≈ 5-8 s, 2k ids ≈ 63 s —
+    * fully distributed resolved-graph scan. MEASURED crossover (SURVEY
+    * §8.3, delete-at-scale ladder): the point path is ~linear in the
+    * batch at ~0.02-0.03 s per id REGARDLESS of corpus size (200 ids ≈ 5-8 s, 2k ids ≈ 63 s —
     * the isin point reads and the driver-resident candidate set grow
     * with the batch) while the scan path is corpus-bounded and ~flat in
     * the batch (4k-70k ids all ≈ 5-10 s at 40k-200k vectors), putting

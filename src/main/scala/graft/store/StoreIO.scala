@@ -312,7 +312,10 @@ private[store] object StoreIO {
     * The crash-consistency protocol is unchanged — the marker appears only
     * after EVERY writer returned, and a failure in any writer surfaces
     * only after all in-flight writers have been awaited (an abandoned
-    * running writer would race session shutdown). */
+    * running writer would race session shutdown). That holds for ANY
+    * failure the waiting thread sees, an interrupt included: the interrupt
+    * is rethrown (flag restored) once the last writer has finished, and
+    * the commit is abandoned before its marker. */
   def commitStagedParallel(outs: Seq[Staged], marker: String,
                            cleanup: Seq[String] = Seq.empty,
                            maxParallel: Int = 4): Unit = {
@@ -323,13 +326,26 @@ private[store] object StoreIO {
       val futs = outs.map(o => pool.submit(new java.util.concurrent.Callable[Unit] {
         def call(): Unit = runStageWriter(o)
       }))
-      val errs = futs.flatMap(f =>
-        try { f.get(); None }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Some(Option(e.getCause).getOrElse(e))
-        })
-      errs.headOption.foreach(e => throw e)
+      var first: Option[Throwable] = None
+      var interrupted = false
+      futs.foreach { f =>
+        var pending = true
+        while (pending) {
+          try { f.get(); pending = false }
+          catch {
+            case e: Throwable =>
+              if (e.isInstanceOf[InterruptedException]) interrupted = true
+              if (first.isEmpty) first = Some(e match {
+                case ee: java.util.concurrent.ExecutionException =>
+                  Option(ee.getCause).getOrElse(ee)
+                case other => other
+              })
+              pending = !f.isDone
+          }
+        }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      first.foreach(e => throw e)
     } finally pool.shutdown()
     finishCommit(outs, marker, cleanup)
   }

@@ -68,8 +68,8 @@ object TrainingDay {
   /** Deterministic LSH hyperplane for the graph arm's bucketing —
     * [[graft.queries.AnnQueries.plane]]'s recipe generalized to the day's
     * `dim` (scramble32(p·dim+d) reduced to [-1, 1]). */
-  private def planeOf(p: Int, dim: Int): Seq[Float] =
-    Seq.tabulate(dim) { d =>
+  private def planeOf(p: Int, dim: Int): Array[Float] =
+    Array.tabulate(dim) { d =>
       val h = ((p.toLong * dim + d) * 2654435761L) % 4294967296L
       (((h % 2001) - 1000).toDouble / 1000.0).toFloat
     }
@@ -83,10 +83,7 @@ object TrainingDay {
     * frozen into the index's bucketFns; later waves only ever grow the
     * corpus a small factor within the day. */
   private def bucketFn(off: Int, dim: Int, bits: Int): org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-    e => (0 until bits).map { p =>
-      when(VF.dot(e, typedlit(planeOf(off + p, dim))) >= 0, lit(1L << p))
-        .otherwise(lit(0L))
-    }.reduce(_ + _)
+    e => VF.lshBucket(e, Array.tabulate(bits)(p => planeOf(off + p, dim)))
 
   /** Run the day. `waves` are (doc_id, text[, lang, source, n_chars])
     * frames with globally-unique doc_ids; wave 0 is the pre-day corpus

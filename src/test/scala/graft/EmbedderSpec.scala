@@ -124,7 +124,10 @@ class EmbedderSpec extends AnyFunSuite with SparkTest {
 
   test("GRAFT_EMBED_WEIGHTS wires an external artifact (skipped when unset)") {
     import graft.functions.WeightFileEmbedder
-    assume(sys.env.contains(WeightFileEmbedder.EnvVar),
+    // a local Boolean keeps ScalaTest's assume macro from rendering the
+    // whole sys.env map into the cancel message
+    val weightsSet = sys.env.contains(WeightFileEmbedder.EnvVar)
+    assume(weightsSet,
       s"${WeightFileEmbedder.EnvVar} not set - hermetic run keeps HashEmbedder")
     val emb = WeightFileEmbedder.fromEnv().get
     val docs = spark.read.parquet(s"$sf001/documents.parquet")

@@ -52,19 +52,6 @@ class InversionSpec extends AnyFunSuite with SparkTest {
     assert(cands.head.score > quick.earlyStop)
   }
 
-  test("frame-native evolutionary loop == driver loop generation for generation") {
-    val target = Inversion.embedText("spark query vector table join filter", 64)
-    val (cd, td) = Inversion.evolutionarySearch(spark, target, small)
-    val (cf, tf) = Inversion.evolutionarySearchDF(spark, target, small)
-    assert(tf == td,
-      "the frame loop's best-score trajectory must match the driver loop per generation")
-    assert(cf == cd, "the deduped per-generation bests must be identical")
-    // early stop fires at the same generation on both loops
-    val quick = small.copy(generations = 8, earlyStop = td.head - 1e-9)
-    assert(Inversion.evolutionarySearchDF(spark, target, quick)._2.length ==
-      Inversion.evolutionarySearch(spark, target, quick)._2.length)
-  }
-
   test("full invert is reproducible and ranked") {
     val target = Inversion.embedText("spark query vector table", 64)
     val r1 = Inversion.invert(spark, target, small).collect().map(_.toSeq)

@@ -17,9 +17,9 @@ class QualityClassifierSpec extends AnyFunSuite with SparkTest {
   test("shipped QualityModel artifact is bit-equal to a retrain (no silent drift)") {
     val (bias, w) = QualityTrainer.train(docs)
     assert(bias == QualityModel.Bias,
-      s"bias drifted: trained $bias vs shipped ${QualityModel.Bias} — rerun Prof qualitytrain")
+      s"bias drifted: trained $bias vs shipped ${QualityModel.Bias} — regenerate with QualityTrainer.printArtifact")
     assert(w.toSeq == QualityModel.Weights.toSeq,
-      "weights drifted from the shipped artifact — rerun Prof qualitytrain")
+      "weights drifted from the shipped artifact — regenerate with QualityTrainer.printArtifact")
   }
 
   test("classifier beats the majority-class baseline on its training labels") {

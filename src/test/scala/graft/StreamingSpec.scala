@@ -825,6 +825,17 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     val e = intercept[IllegalArgumentException](
       graft.operators.Percolate.matches(docs.select("doc_id", "text"), dupId))
     assert(e.getMessage.contains("unique"), e.getMessage)
+    assert(!e.getMessage.contains("NULL"), e.getMessage)
+    // a NULL profile_id gets its own refusal naming it — countDistinct
+    // skips NULLs, so it must not read as a duplicate
+    val nullId = Seq(
+      (Option(22L), Seq("table"), Seq.empty[String], Seq.empty[String]),
+      (Option.empty[Long], Seq("scan"), Seq.empty[String], Seq.empty[String]))
+      .toDF("profile_id", "must", "any", "must_not")
+    val en = intercept[IllegalArgumentException](
+      graft.operators.Percolate.matches(docs.select("doc_id", "text"), nullId))
+    assert(en.getMessage.contains("NULL") && !en.getMessage.contains("unique"),
+      en.getMessage)
   }
 
   test("percolate with phrase clauses: stream equals batch; phrase semantics pinned") {

@@ -104,6 +104,46 @@ class StoreIOSpec extends AnyFunSuite with SparkTest {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(marker)))
   }
 
+  test("an interrupted parallel commit awaits every writer and stays all-old or all-new") {
+    val (base, a, b, marker) = fixture()
+    val started = new java.util.concurrent.CountDownLatch(2)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val running = new java.util.concurrent.atomic.AtomicInteger(0)
+    def writer(n: Int): String => Unit = st => {
+      running.incrementAndGet()
+      try { started.countDown(); gate.await(); write(n, st) }
+      finally { running.decrementAndGet(); () }
+    }
+    @volatile var runningAtReturn = -1
+    @volatile var thrown: Option[Throwable] = None
+    @volatile var flagRestored = false
+    val committer = new Thread(() => {
+      try StoreIO.commitStagedParallel(Seq(
+        StoreIO.Staged(s"$base/stage_a", a, writer(3)),
+        StoreIO.Staged(s"$base/stage_b", b, writer(4))), marker)
+      catch { case t: Throwable => thrown = Some(t) }
+      runningAtReturn = running.get()
+      flagRestored = Thread.currentThread().isInterrupted
+    })
+    committer.start()
+    assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "both stage writers must start")
+    committer.interrupt()
+    // a commit that stops waiting on the interrupt returns while both
+    // writers are still parked on the gate
+    committer.join(500)
+    gate.countDown()
+    committer.join(120000)
+    assert(!committer.isAlive, "the commit must return once its writers finish")
+    assert(runningAtReturn == 0, s"$runningAtReturn stage writer(s) still running at return")
+    assert(thrown.exists(_.isInstanceOf[InterruptedException]),
+      s"the interrupt must surface, got $thrown")
+    assert(flagRestored, "the interrupt flag must be restored")
+    StoreIO.recover(marker)
+    val state = (rows(a), rows(b))
+    assert(state == ((1L, 2L)) || state == ((3L, 4L)), s"mixed state after recover: $state")
+  }
+
   test("dedupById keeps one deterministic row per id under shuffled input") {
     import spark.implicits._
     def run(df: DataFrame) =
