@@ -27,8 +27,8 @@ import org.apache.spark.sql.types._
  *
  * Ordering is the total order (score asc, id asc) under the id type's OWN
  * ordering — LONG ids break ties numerically, STRING ids (the encrypted
- * store's spine) lexically, matching the window-sort oracle on either
- * spine. Ids are unique within a group in every caller, so insertion and
+ * store's spine) lexically, matching the single-probe `orderBy(score, id)`
+ * sort on either spine (the per-probe parity specs pin it). Ids are unique within a group in every caller, so insertion and
  * merge order cannot change the result (safe under AQE re-planning and
  * speculative tasks). Null scores or ids never enter the buffer (a null
  * candidate is no candidate).
@@ -67,8 +67,9 @@ case class TopKRows(
   override def dataType: DataType = ArrayType(entryType, containsNull = false)
 
   // the id type's interpreted total order (Long ⇒ numeric, String/UTF8String
-  // ⇒ lexical binary) — the SAME order a window's `order by id` sort uses,
-  // so the aggregate and its windowed oracle can never disagree on ties
+  // ⇒ lexical binary) — the SAME order a single-probe `orderBy(dist, id)`
+  // sort uses, so the batch tails and the per-probe entry points they are
+  // spec-pinned against can never disagree on ties
   @transient private lazy val idOrd: Ordering[Any] =
     TypeUtils.getInterpretedOrdering(id.dataType)
 
@@ -170,7 +171,7 @@ object TopKRows {
     // final sort use (Double.compare: -0.0 < 0.0, NaN last) — raw IEEE
     // `<`/`==` here would let an early NaN block every later real
     // candidate and would tie -0.0 with 0.0, making the result depend on
-    // arrival order and diverge from Spark's window-sort oracle
+    // arrival order and diverge from Spark's (score, id) sort
     private def beats(s: Double, i: Any, w: Entry): Boolean = {
       val c = java.lang.Double.compare(s, w.score)
       c < 0 || (c == 0 && idOrd.compare(i, w.id) < 0)

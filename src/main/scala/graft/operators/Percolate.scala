@@ -106,7 +106,15 @@ object Percolate {
   /** Match `docs` (idCol, textCol) against `profiles`
     * (profile_id LONG, must ARRAY<STRING>, any ARRAY<STRING>,
     * must_not ARRAY<STRING>[, phrases ARRAY<ARRAY<STRING>>]).
-    * Returns (idCol, profile_id) pairs. */
+    * Returns (idCol, profile_id) pairs.
+    *
+    * Execution is EAGER for a registry with any phrase clause: the corpus
+    * term stage runs at call time (`localCheckpoint`, so the positional
+    * stage's three references read it once), and only the positional
+    * stage stays a lazy plan. The checkpointed blocks live in executor
+    * storage and are NOT recomputed if an executor holding them is lost —
+    * the query then fails and must be re-issued. A registry with no
+    * phrase clause returns a fully lazy plan. */
   def matches(docs: DataFrame, profiles: DataFrame,
               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     validate(profiles)
@@ -114,7 +122,10 @@ object Percolate {
   }
 
   /** [[matches]] without the registry re-validation — the streaming twin
-    * validates once at stream start and calls this per micro-batch. */
+    * validates once at stream start and calls this per micro-batch. Same
+    * execution semantics as [[matches]]: a phrase registry runs the corpus
+    * term stage eagerly at call time (`localCheckpoint`), and that stage
+    * is not recomputed if an executor holding it is lost. */
   private[graft] def matchesValidated(docs: DataFrame, rawProfiles: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     val profiles = nullsafe(rawProfiles)

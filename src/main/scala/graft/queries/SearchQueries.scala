@@ -430,8 +430,8 @@ object SearchQueries {
     * standing hybrid queries (probe_id, terms, embedding), the serving
     * shape a fleet of standing alerts/routes runs: the keyword arm is ONE
     * bucket+term-pruned postings pass over the union of every probe's
-    * terms ([[graft.store.TextIndex.queryRankedBatch]] — per-probe ranks
-    * cut map-side, integer-exact), the sem arm ONE cell-pruned
+    * terms ([[graft.store.TextIndex.queryRankedBatchBounded]] — per-probe
+    * ranks cut map-side, integer-exact), the sem arm ONE cell-pruned
     * multi-probe batch at per-probe persisted depths
     * ([[graft.store.IvfIndex.queryBatch]] — the answers-not-candidates
     * tail) with the bounded cosine re-rank, and RRF fuses per probe.
@@ -445,7 +445,7 @@ object SearchQueries {
       panel: Seq[(Long, Seq[String], Array[Float])],
       depths: Map[Long, Int]): org.apache.spark.sql.DataFrame = {
     // the kw arm serves through the MaxScore df-bound (r13): ranks are
-    // spec-pinned identical to queryRankedBatch, and a high-df standing
+    // spec-pinned identical to per-probe queryRanked, and a high-df standing
     // term no longer fans its full posting list out across the panel
     val kw = tidx.queryRankedBatchBounded(panel.map(p => (p._1, p._2)), ShortlistK)
       .select(col("probe_id"), col("doc_id"), col("rank").as("rank_kw"))
@@ -489,9 +489,9 @@ object SearchQueries {
     * (the r12 verdict's top missing surface): `panel` carries
     * (probe_id LONG, terms ARRAY<STRING>, qe ARRAY<FLOAT>[, depth INT])
     * and NOTHING probe-sized ever touches the driver. The kw arm is
-    * [[graft.store.TextIndex.queryRankedBatchDF]] (one bucket-pruned
-    * union-term postings pass, per-probe integer-exact ranks cut
-    * map-side); the sem arm is [[graft.store.IvfIndex.queryBatchDF]]
+    * [[graft.store.TextIndex.queryRankedBatchBoundedDF]] (bucket-pruned
+    * union-term postings, per-probe integer-exact ranks cut map-side);
+    * the sem arm is [[graft.store.IvfIndex.queryBatchDF]]
     * (map-side cell routing, broadcast-or-salted cell join, the
     * answers-not-candidates tail) with the persisted per-probe depth
     * policy routed through the frame's `depth` column (`useDepth` — the
@@ -1599,7 +1599,7 @@ object SearchQueries {
     // probe. The oracle replays the q_hybrid_indexed recipe PER PROBE
     // (shared tokenized corpus CTEs, per-probe idf/tf/rank/fusion blocks)
     // from plaintext alone, so the hash gates the panel machinery —
-    // queryRankedBatch's one-pass ranks, queryBatch's answer-shuffled sem
+    // queryRankedBatchBounded's one-pass ranks, queryBatch's answer-shuffled sem
     // arm at the sidecar's depths, and the per-probe fusion — end to end.
     Q(
       "q_hybrid_batch",
@@ -1620,7 +1620,7 @@ object SearchQueries {
 
     // The DF-PROBE twin of q_hybrid_batch — the same standing panel served
     // with the probes as a FRAME end to end (terms through
-    // queryRankedBatchDF's union postings pass, embeddings + the persisted
+    // queryRankedBatchBoundedDF's union postings pass, embeddings + the persisted
     // depth policy through queryBatchDF's `depth` column): the oracle is
     // q_hybrid_batch's VERBATIM, so the hash equality IS the proof the
     // frame route serves the Seq route's exact answers (the

@@ -121,7 +121,7 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
 
   // opening the index finishes any publish interrupted between its swaps —
   // readers and the replaying writer both see vectors+graph+entries move
-  // together (see StoreIO.commitSwap). Single concurrent WRITER is the
+  // together (see StoreIO.commitStaged). Single concurrent WRITER is the
   // contract (like IvfIndex.compact); an open racing a live writer's swap
   // phase is tolerated because swapStaged accepts the already-published
   // end state, but two concurrent insert()s are not.
@@ -714,21 +714,6 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
     visited.toSeq.sortBy { case (id, d) => (d, id) }
   }
 
-  /** Batched hot probes against ONE state load — [[queryBatch]]'s output
-    * shape (probe_id, id, dist, rn) with [[hotQuery]]'s per-probe answers
-    * (≡ [[query]]'s ≡ [[queryBatch]]'s, all spec-pinned). `beamOf` is the
-    * per-probe width override, identical semantics to [[queryBatch]]'s —
-    * hot and cold serve the same per-probe policy surface. */
-  def hotQueryBatch(probes: Seq[(Long, Array[Float])], topK: Int, beamWidth: Int,
-                    hops: Int,
-                    beamOf: Map[Long, Int] = Map.empty): Seq[(Long, Long, Double, Int)] =
-    probes.flatMap { case (pid, qe) =>
-      hotQuery(qe, topK, beamOf.getOrElse(pid, beamWidth), hops)
-        .zipWithIndex.map { case ((id, d), i) =>
-          (pid, id, d, i + 1)
-        }
-    }
-
   /** Admission check for ROUTED hot serving: the on-disk index tree must
     * fit the [[StoreIO.hotBudgetBytes]] budget. Jobless (driver-side file
     * metadata), so the check itself is free per probe. Over budget, the
@@ -884,25 +869,45 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
   }
 
   /** JVM-resident CODES + adjacency — the hot tier for a graph whose raw
-    * floats exceed `graft.hot.maxBytes`: 1 byte/dim instead of 4, so ~4x
-    * more corpus serves hot under the same admission budget (the
-    * [[IvfIndex.hotQueryQuantized]] story on the graph walk). Codes are
-    * DERIVED at load time from the frozen sidecar stats — identical bytes
-    * to the cold path's codegen encode, so hot ≡ cold bit-for-bit. */
+    * floats exceed `graft.hot.maxBytes`: a few code bytes per vector
+    * instead of 4 bytes/dim, so more corpus serves hot under the same
+    * admission budget (the [[IvfIndex.hotQueryQuantized]] story on the
+    * graph walk). Codes are DERIVED at load time by the tier's encoder
+    * from the frozen sidecar — identical bytes to the cold path's codegen
+    * encode, so hot ≡ cold bit-for-bit. `scorerOf` builds the per-query
+    * in-memory code scorer — the driver twin of the cold walk's distance
+    * kernel. */
   private final class HotCodesState(
       val key: String,
       val adj: java.util.HashMap[java.lang.Long, Array[Long]],
       val codes: java.util.HashMap[java.lang.Long, Array[Byte]],
       val entries: Seq[Long],
-      val mn: Array[Double], val mx: Array[Double],
+      val scorerOf: Array[Float] => (Array[Byte] => Double),
       val estBytes: Long)
 
-  @volatile private var hotCodes: HotCodesState = null
-  // code-bytes estimate cached per publish fingerprint (two narrow count
-  // jobs — don't re-pay them per refused probe); the BUDGET is re-read
-  // per probe so a raised/lowered graft.hot.maxBytes takes effect
-  // immediately, like the raw tier's per-probe hotFits()
-  @volatile private var hotCodesEst: (String, Long) = null
+  /** One quantizer's resident tier, derived from its frozen sidecar:
+    * `encode` turns a raw vector into its code at load time, `scorerOf`
+    * scores resident codes against a query, `codeLen` is the code's bytes
+    * per vector and `pinnedBytes` any side tensor the scorer keeps
+    * resident (PQ's codebooks). */
+  private final class CodesTier(
+      val encode: Array[Float] => Array[Byte],
+      val scorerOf: Array[Float] => (Array[Byte] => Double),
+      val codeLen: Int,
+      val pinnedBytes: Long)
+
+  /** One cache slot per quantizer — a pq-built graph keeps both sidecars
+    * and serves both tiers. The code-bytes estimate is cached per publish
+    * fingerprint (two narrow count jobs — don't re-pay them per refused
+    * probe); the BUDGET is re-read per probe so a raised/lowered
+    * graft.hot.maxBytes takes effect immediately, like the raw tier's
+    * per-probe hotFits(). */
+  private final class CodesSlot {
+    @volatile var state: HotCodesState = null
+    @volatile var est: (String, Long) = null
+  }
+  private val sq8Slot = new CodesSlot
+  private val pqSlot = new CodesSlot
 
   /** Signed-byte integer L2 — the driver-side twin of the codegen
     * [[graft.functions.Sq8L2Distance]] loop (identical arithmetic). */
@@ -912,28 +917,61 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
     acc
   }
 
-  private def hotCodesState(): Option[HotCodesState] = {
+  /** The SQ8 tier: 1 byte/dim, no pinned tensor beyond the ~1 KB mn/mx
+    * stats. None on a pre-codes index. */
+  private def sq8Tier(): Option[CodesTier] = sq8Stats().map { case (mn, mx) =>
+    val encode = (v: Array[Float]) => graft.functions.Sq8Encode.encode(v, mn, mx)
+    new CodesTier(encode, qe => {
+      val qb = encode(qe)
+      codes => sq8l2(codes, qb).toDouble
+    }, mn.length, 0L)
+  }
+
+  /** The PQ tier: `pqM` bytes/vector (8x fewer code bytes than SQ8 at dim
+    * 64; the whole-budget admission win is ~2x at 64 dims and approaches
+    * 8x at a real 384-dim deployment, where the code bytes dominate the
+    * per-entry overhead). Codes derive through the SAME argmin arithmetic
+    * as the scan encode ([[graft.functions.PqEncode.encode]]) and score
+    * through [[graft.functions.PqAdc.eval]] (identical accumulation order
+    * to the codegen lookup). The flattened codebook tensor (m·PqK·subDim
+    * floats, ~400 KB at dim 384) stays pinned for ADC, so admission counts
+    * it. None without a `_pq` sidecar. */
+  private def pqTier(): Option[CodesTier] = pqBooks().map { books =>
+    val flat = graft.operators.ProductQuantizer.flatten(books)
+    new CodesTier(
+      v => graft.functions.PqEncode.encode(v, flat, books.length, GraphIndex.PqK),
+      qe => {
+        val lut = graft.operators.ProductQuantizer.adcLut(qe, books)
+        codes => graft.functions.PqAdc.eval(codes, lut, GraphIndex.PqK)
+      },
+      books.length, 4L * books.map(_.map(_._2.length.toLong).sum).sum)
+  }
+
+  /** The resident state for `slot`, loaded through `tier` (read only when
+    * the cached state is stale — the sidecar read is a Spark job). */
+  private def hotCodesState(slot: CodesSlot,
+                            tier: => Option[CodesTier]): Option[HotCodesState] = {
     val key = hotKey()
-    val h0 = hotCodes
+    val h0 = slot.state
     if (h0 != null && h0.key == key)
       return if (h0.estBytes <= StoreIO.hotBudgetBytes()) Some(h0) else None
-    val e0 = hotCodesEst
+    val e0 = slot.est
     if (e0 != null && e0._1 == key && e0._2 > StoreIO.hotBudgetBytes()) return None
-    val (mn, mx) = sq8Stats() match {
-      case Some(s) => s
-      case None => hotCodesEst = (key, Long.MaxValue); return None // pre-codes index
+    val t = tier match {
+      case Some(t) => t
+      case None => slot.est = (key, Long.MaxValue); return None // no sidecar
     }
-    // ADMISSION MATH COUNTS CODE BYTES + EDGES: resident cost per row is
-    // the code (1 byte/dim) + the 8-byte id + ~40 B of JVM entry
-    // overhead, plus 8 B per adjacency edge — the raw floats never stay
-    // resident (they stream through the encode), which is the point:
-    // ~4x more corpus under the same budget. Two narrow count jobs per
+    // ADMISSION MATH COUNTS CODE BYTES + EDGES + PINNED TENSORS: resident
+    // cost per row is the code + the 8-byte id + ~40 B of JVM entry
+    // overhead, plus 8 B per adjacency edge, plus the tier's pinned side
+    // tensor — the raw floats never stay resident (they stream through
+    // the load-time encode), which is the point. Two narrow count jobs per
     // publish fingerprint.
     val est =
       if (e0 != null && e0._1 == key) e0._2
       else {
-        val v = vectors.count() * (mn.length + 48L) + graph.count() * 8L
-        hotCodesEst = (key, v); v
+        val v = vectors.count() * (t.codeLen + 48L) + graph.count() * 8L + t.pinnedBytes
+        slot.est = (key, v); v
       }
     if (est > StoreIO.hotBudgetBytes()) return None
     val adj = new java.util.HashMap[java.lang.Long, Array[Long]]()
@@ -942,130 +980,54 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
       .foreach { case (s0, rows) => adj.put(s0, rows.map(_.getLong(1)).sorted) }
     val codes = new java.util.HashMap[java.lang.Long, Array[Byte]]()
     vectors.select("id", "emb").collect().foreach { r =>
-      codes.put(r.getLong(0),
-        graft.functions.Sq8Encode.encode(r.getSeq[Float](1).toArray, mn, mx))
+      codes.put(r.getLong(0), t.encode(r.getSeq[Float](1).toArray))
     }
     val h = new HotCodesState(key, adj, codes,
       entryPoints.select("id").orderBy("id").collect().map(_.getLong(0)).toSeq,
-      mn, mx, est)
-    hotCodes = h
+      t.scorerOf, est)
+    slot.state = h
     Some(h)
   }
 
-  /** [[queryQuantized]] with the walk served from JVM-resident CODES: the
-    * SAME walk ([[walkVisited]]) over the same integer-L2 distances, zero
-    * Spark jobs until the bounded exact rerank. Bit-equal to
-    * [[queryQuantized]] at every depth (spec-pinned). None when the index
-    * has no quantizer sidecar or the resident code+edge bytes exceed
-    * `graft.hot.maxBytes`. */
+  /** The SAME walk ([[walkVisited]]) over resident codes, zero Spark jobs
+    * until the bounded exact rerank. */
+  private def hotCodesQuery(h: HotCodesState, qe: Array[Float], topK: Int,
+                            beamWidth: Int, hops: Int, rerank: Int,
+                            entries: Seq[Long]): Seq[(Long, Double)] = {
+    val score = h.scorerOf(qe)
+    val starts = (if (entries.nonEmpty) entries else h.entries).distinct.sorted
+    val visited = walkVisited(
+      id => Option(h.adj.get(id)).getOrElse(Array.empty[Long]),
+      h.codes.containsKey(_),
+      id => score(h.codes.get(id)),
+      starts, beamWidth, hops)
+    val shortIds = visited.take(rerank).map(_._1)
+    exactRerank(qe, shortIds, topK)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  }
+
+  /** [[queryQuantized]] with the walk served from JVM-resident SQ8 codes
+    * over the same integer-L2 distances. Bit-equal to [[queryQuantized]]
+    * at every depth (spec-pinned). None when the index has no quantizer
+    * sidecar or the resident code+edge bytes exceed `graft.hot.maxBytes`. */
   def hotQueryQuantized(qe: Array[Float], topK: Int, beamWidth: Int, hops: Int,
                         rerank: Int = 64,
                         entries: Seq[Long] = Seq.empty): Option[Seq[(Long, Double)]] = {
     require(rerank >= topK, "rerank must be at least topK")
-    hotCodesState().map { h =>
-      val qb = graft.functions.Sq8Encode.encode(qe, h.mn, h.mx)
-      val starts = (if (entries.nonEmpty) entries else h.entries).distinct.sorted
-      val visited = walkVisited(
-        id => Option(h.adj.get(id)).getOrElse(Array.empty[Long]),
-        h.codes.containsKey(_),
-        id => sq8l2(h.codes.get(id), qb).toDouble,
-        starts, beamWidth, hops)
-      val shortIds = visited.take(rerank).map(_._1)
-      exactRerank(qe, shortIds, topK)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    }
+    hotCodesState(sq8Slot, sq8Tier()).map(
+      hotCodesQuery(_, qe, topK, beamWidth, hops, rerank, entries))
   }
 
-  // --------------------------------------- quantized serving (PQ codes)
-
-  /** JVM-resident PQ CODES + adjacency — [[HotCodesState]]'s smaller
-    * sibling: `pqM` bytes/vector instead of 1 byte/dim (8x fewer code
-    * bytes at dim 64; the whole-budget admission win is ~2x at 64 dims
-    * and approaches 8x at a real 384-dim deployment, where the code
-    * bytes dominate the per-entry overhead). Codes derive at load time from
-    * the frozen `_pq` codebooks through the SAME argmin arithmetic as
-    * the scan encode ([[graft.functions.PqEncode.encode]]), so hot ≡
-    * cold bit-for-bit. */
-  private final class HotPqState(
-      val key: String,
-      val adj: java.util.HashMap[java.lang.Long, Array[Long]],
-      val codes: java.util.HashMap[java.lang.Long, Array[Byte]],
-      val entries: Seq[Long],
-      val books: graft.operators.ProductQuantizer.Codebooks,
-      val estBytes: Long)
-
-  @volatile private var hotPq: HotPqState = null
-  @volatile private var hotPqEst: (String, Long) = null
-
-  private def hotPqState(): Option[HotPqState] = {
-    val key = hotKey()
-    val h0 = hotPq
-    if (h0 != null && h0.key == key)
-      return if (h0.estBytes <= StoreIO.hotBudgetBytes()) Some(h0) else None
-    val e0 = hotPqEst
-    if (e0 != null && e0._1 == key && e0._2 > StoreIO.hotBudgetBytes()) return None
-    val books = pqBooks() match {
-      case Some(b) => b
-      case None => hotPqEst = (key, Long.MaxValue); return None // no _pq sidecar
-    }
-    // ADMISSION MATH COUNTS PQ CODE BYTES + EDGES + CODEBOOKS: resident
-    // cost per row is the pqM-byte code + the 8-byte id + ~40 B of JVM
-    // entry overhead, plus 8 B per adjacency edge, plus the flattened
-    // codebook tensor (m·PqK·subDim floats) that stays pinned in
-    // HotPqState for ADC — ~400 KB at dim 384, which the SQ8 tier's ~1 KB
-    // (mn/mx) sidecar convention would otherwise undercount
-    // disproportionately near tight budgets. The raw floats stream
-    // through the load-time encode and never stay resident. Two narrow
-    // count jobs per publish fingerprint (the HotCodesState discipline).
-    val bookBytes = 4L * books.map(_.map(_._2.length.toLong).sum).sum
-    val est =
-      if (e0 != null && e0._1 == key) e0._2
-      else {
-        val v = vectors.count() * (books.length + 48L) + graph.count() * 8L + bookBytes
-        hotPqEst = (key, v); v
-      }
-    if (est > StoreIO.hotBudgetBytes()) return None
-    val flat = graft.operators.ProductQuantizer.flatten(books)
-    val adj = new java.util.HashMap[java.lang.Long, Array[Long]]()
-    graph.select("src", "dst").collect()
-      .groupBy(_.getLong(0))
-      .foreach { case (s0, rows) => adj.put(s0, rows.map(_.getLong(1)).sorted) }
-    val codes = new java.util.HashMap[java.lang.Long, Array[Byte]]()
-    vectors.select("id", "emb").collect().foreach { r =>
-      codes.put(r.getLong(0),
-        graft.functions.PqEncode.encode(r.getSeq[Float](1).toArray, flat,
-          books.length, GraphIndex.PqK))
-    }
-    val h = new HotPqState(key, adj, codes,
-      entryPoints.select("id").orderBy("id").collect().map(_.getLong(0)).toSeq,
-      books, est)
-    hotPq = h
-    Some(h)
-  }
-
-  /** [[queryPq]] with the walk served from JVM-resident PQ codes: the
-    * SAME walk ([[walkVisited]]) over the same ADC doubles
-    * ([[graft.functions.PqAdc.eval]] — identical accumulation order to
-    * the codegen lookup), zero Spark jobs until the bounded exact rerank.
-    * Bit-equal to [[queryPq]] at every depth (spec-pinned). None when the
-    * index has no `_pq` sidecar or the resident code+edge bytes exceed
-    * `graft.hot.maxBytes`. */
+  /** [[queryPq]] with the walk served from JVM-resident PQ codes over the
+    * same ADC doubles. Bit-equal to [[queryPq]] at every depth
+    * (spec-pinned). None when the index has no `_pq` sidecar or the
+    * resident code+edge+codebook bytes exceed `graft.hot.maxBytes`. */
   def hotQueryPq(qe: Array[Float], topK: Int, beamWidth: Int, hops: Int,
                  rerank: Int = 64,
                  entries: Seq[Long] = Seq.empty): Option[Seq[(Long, Double)]] = {
     require(rerank >= topK, "rerank must be at least topK")
-    hotPqState().map { h =>
-      val lut = graft.operators.ProductQuantizer.adcLut(qe, h.books)
-      val starts = (if (entries.nonEmpty) entries else h.entries).distinct.sorted
-      val visited = walkVisited(
-        id => Option(h.adj.get(id)).getOrElse(Array.empty[Long]),
-        h.codes.containsKey(_),
-        id => graft.functions.PqAdc.eval(h.codes.get(id), lut, GraphIndex.PqK),
-        starts, beamWidth, hops)
-      val shortIds = visited.take(rerank).map(_._1)
-      exactRerank(qe, shortIds, topK)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    }
+    hotCodesState(pqSlot, pqTier()).map(
+      hotCodesQuery(_, qe, topK, beamWidth, hops, rerank, entries))
   }
 
   // ------------------------------------------------ recall calibration
@@ -1172,7 +1134,8 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
     * A GLOBAL beam ([[calibrateBeam]]) targets panel-average recall — it
     * can leave one straddling probe short while over-walking every easy
     * one. Per-probe widths give each probe exactly its measured need,
-    * served through `beamOf` on [[queryBatch]]/[[hotQueryBatch]].
+    * served through `beamOf` on [[queryBatch]] (or per probe as
+    * [[hotQuery]]'s `beamWidth`).
     *
     * Cost: ONE exact arm (scored panel × corpus pass, GroupedTopK) plus
     * per-rung walks for still-unassigned probes — hot-tier map lookups

@@ -967,20 +967,6 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
       .map { case (d, id, c) => (id, c, d) }
   }
 
-  /** Batched hot probes: Q probes against ONE state load — the bulk
-    * scoring shape a training pipeline runs. Per-probe results are
-    * [[hotQuery]]'s (≡ [[query]]'s ≡ [[queryBatch]]'s, both spec-pinned),
-    * returned as (probe_id, id, cell, distance, rn) like [[queryBatch]]. */
-  def hotQueryBatch(probes: Seq[(Long, Array[Float])], k: Int,
-                    nprobe: Int): Seq[(Long, Long, Long, Double, Int)] =
-    probes.flatMap { case (pid, qe) =>
-      hotQuery(qe, k, nprobe).zipWithIndex.map { case ((id, cell, d), i) =>
-        (pid, id, cell, d, i + 1)
-      }
-    }
-
-  /** [[hotServe]] over a probe batch (the `Collection.queryBatch` hot
-    * path): one state check, rows tagged by query index. */
   /** Admission check for routed hot serving — see
     * [[GraphIndex]]: jobless driver-side size probe against
     * [[StoreIO.hotBudgetBytes]]; over budget the router falls back to
@@ -989,6 +975,8 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
   private def hotFits(): Boolean =
     StoreIO.treeBytes(dataPath) <= StoreIO.hotBudgetBytes()
 
+  /** [[hotServe]] over a probe batch (the `Collection.queryBatch` hot
+    * path): one state check, rows tagged by query index. */
   private[store] def hotServeBatch(probes: Seq[(Long, Array[Float])], k: Int,
                                    nprobe: Int): Option[Seq[(Long, String, String, Double)]] = {
     if (!hotFits()) return None
@@ -1045,14 +1033,6 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
 
   // ------------------------------------- codes-resident hot tier (SQ8)
 
-  /** JVM-resident CODES — the hot tier for an index whose raw floats
-    * exceed `graft.hot.maxBytes`: 1 byte/dim instead of 4, so ~4x more
-    * corpus serves hot under the same admission budget. A probe runs
-    * phase 1 (integer L2 over the resident codes, the
-    * [[codesShortlist]] semantics) entirely in memory — zero Spark jobs —
-    * and phase 2 as the same bounded In-pushed exact rerank
-    * [[queryQuantized]] runs ([[exactRerank]], ≤ shortlist rows off
-    * disk). */
   /** `scorerOf` builds the per-query in-memory code scorer — the driver
     * twin of the scan kernel for whichever quantizer is frozen: SQ8
     * integer L2 against the encoded query (exact, returned as a double —
@@ -1081,6 +1061,14 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     acc
   }
 
+  /** JVM-resident CODES — the hot tier for an index whose raw floats
+    * exceed `graft.hot.maxBytes`: 1 byte/dim instead of 4, so ~4x more
+    * corpus serves hot under the same admission budget. A probe runs
+    * phase 1 (integer L2 over the resident codes, the
+    * [[codesShortlist]] semantics) entirely in memory — zero Spark jobs —
+    * and phase 2 as the same bounded In-pushed exact rerank
+    * [[queryQuantized]] runs ([[exactRerank]], ≤ shortlist rows off
+    * disk). */
   private def hotCodesState(): Option[HotCodesState] = {
     val key = hotKey()
     val h0 = hotCodes
@@ -1761,9 +1749,8 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * answers-not-candidates [[graft.operators.GroupedTopK.topKRows]] tail
     * [[queryBatch]] serves through — neither exchange ever carries the
     * candidate volume (the r11 §8.3 measurement: a probe-keyed window is
-    * a constant ~855× exchange multiplier over the answer). The window
-    * formulation survives as [[queryBatchQuantizedWindowed]], the spec's
-    * bit-equality oracle, cut from the SAME candidate frames. The id
+    * a constant ~855× exchange multiplier over the answer). Per-probe
+    * answers equal [[queryQuantized]]'s (spec-pinned). The id
     * collect is bounded by Q × `shortlist`. With `shortlist` >= the
     * probed cells' population the result is EXACTLY [[queryBatch]]'s
     * (spec-pinned). `include` carries stored metadata columns of the
@@ -1773,24 +1760,7 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * instead of a second corpus join. */
   def queryBatchQuantized(probes: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
                           shortlist: Int = 256,
-                          include: Seq[String] = Nil): DataFrame =
-    quantBatchImpl(probes, k, nprobe, shortlist, include, windowed = false)
-
-  /** The REJECTED window formulation of [[queryBatchQuantized]], retained
-    * as its bit-equality spec oracle (the queryBatchWindowed discipline):
-    * same candidate frames, same shortlist/rerank membership, but both
-    * per-probe cuts ship the full candidate volume through probe-keyed
-    * windows — do not serve through it. */
-  private[graft] def queryBatchQuantizedWindowed(
-      probes: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      shortlist: Int = 256,
-      include: Seq[String] = Nil): DataFrame =
-    quantBatchImpl(probes, k, nprobe, shortlist, include, windowed = true)
-
-  private def quantBatchImpl(probes: Seq[(Long, Array[Float])], k: Int,
-                             nprobe: Int, shortlist: Int,
-                             include: Seq[String],
-                             windowed: Boolean): DataFrame = {
+                          include: Seq[String] = Nil): DataFrame = {
     require(probes.nonEmpty, "queryBatchQuantized needs at least one probe")
     require(shortlist >= k, "shortlist must be at least k")
     val cents = centroids()
@@ -1827,34 +1797,25 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     }
     // SQ8's integer L2 casts exactly into double (bounded by dim·255² —
     // far under 2^53), so ordering over the cast equals ordering over the
-    // raw long, and both cut routes see one scored frame
-    val shortCand = livePruned()
+    // raw long
+    val short = livePruned()
       .select(col("id"), col("cell"), col("codes"))
       .join(broadcast(probeDf),
         array_contains(col("probe_cells"), col("cell").cast("long")))
       .withColumn("qdist", qdistCol.cast("double"))
-    val short =
-      if (windowed) {
-        val wS = org.apache.spark.sql.expressions.Window
-          .partitionBy("probe_id").orderBy(asc("qdist"), asc("id"))
-        shortCand
-          .withColumn("rn", row_number().over(wS))
-          .filter(col("rn") <= shortlist)
-          .select(col("probe_id"), col("id"))
-          .collect()
-      } else
-        shortCand
-          .groupBy("probe_id")
-          .agg(graft.operators.GroupedTopK.topK(shortlist)(
-            col("qdist"), col("id")).as("topk"))
-          .select(col("probe_id"), explode(col("topk")).as("sc"))
-          .select(col("probe_id"), col("sc.id").as("id"))
-          .collect()
+      .groupBy("probe_id")
+      .agg(graft.operators.GroupedTopK.topK(shortlist)(
+        col("qdist"), col("id")).as("topk"))
+      .select(col("probe_id"), explode(col("topk")).as("sc"))
+      .select(col("probe_id"), col("sc.id").as("id"))
+      .collect()
     val shortIds = short.map(_.getLong(1)).distinct.toSeq
     val pairKeep = short.map(r => (r.getLong(0), r.getLong(1))).toSet
     val keepUdfFree = spark.createDataFrame(pairKeep.toSeq.sortBy(identity))
       .toDF("probe_id", "id")
-    val rerankCand = livePruned()
+    val payload = struct(
+      include.map(col) :+ col("cell").cast("long").as("cell"): _*)
+    livePruned()
       .filter(col("id").isin(shortIds: _*))
       .join(broadcast(probeDf),
         array_contains(col("probe_cells"), col("cell").cast("long")))
@@ -1862,28 +1823,31 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
       // in another probe's cells without having made its shortlist)
       .join(broadcast(keepUdfFree), Seq("probe_id", "id"), "left_semi")
       .withColumn("distance", VF.l2Sq(col("emb"), col("qe").cast("array<float>")))
-    if (windowed) {
-      val wK = org.apache.spark.sql.expressions.Window
-        .partitionBy("probe_id").orderBy(asc("distance"), asc("id"))
-      rerankCand
-        .withColumn("rn", row_number().over(wK))
-        .filter(col("rn") <= k)
-        .select(col("probe_id") +: col("id") +: include.map(col) :+
-          col("cell").cast("long").as("cell") :+ col("distance") :+ col("rn"): _*)
-    } else {
-      val payload = struct(
-        include.map(col) :+ col("cell").cast("long").as("cell"): _*)
-      rerankCand
-        .groupBy("probe_id")
-        .agg(graft.operators.GroupedTopK.topKRows(k)(
-          col("distance"), col("id"), payload).as("tk"))
-        .select(col("probe_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-        .select(col("probe_id") +: col("e.id").as("id") +:
-          include.map(c => col(s"e.payload.$c").as(c)) :+
-          col("e.payload.cell").as("cell") :+ col("e.score").as("distance") :+
-          (col("pos") + 1).cast("int").as("rn"): _*)
-    }
+      .groupBy("probe_id")
+      .agg(graft.operators.GroupedTopK.topKRows(k)(
+        col("distance"), col("id"), payload).as("tk"))
+      .select(col("probe_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+      .select(col("probe_id") +: col("e.id").as("id") +:
+        include.map(c => col(s"e.payload.$c").as(c)) :+
+        col("e.payload.cell").as("cell") :+ col("e.score").as("distance") :+
+        (col("pos") + 1).cast("int").as("rn"): _*)
   }
+
+  /** Cell ROUTING for a probe FRAME — see [[CellRoute.routeCells]] (ONE
+    * copy shared with the encrypted DF route): (probe_id, qe, cell), the
+    * per-probe cut map-side-bounded, the depth policy an explicit
+    * `useDepth` opt-in (a stray `depth` column on a reused frame can
+    * never silently change a depth-blind route's uniform-nprobe
+    * contract), duplicate probe_id and non-integral depth columns
+    * refused loudly. */
+  private[graft] def routeCellsDF(probes: DataFrame, nprobe: Int,
+                                  useDepth: Boolean = false): DataFrame =
+    CellRoute.routeCells(spark, probes, centroids(), numCells, nprobe, useDepth)
+
+  /** Broadcast-or-salted cell equi-join — see [[CellRoute.routedJoin]]. */
+  private def cellRoutedJoin(corpus: DataFrame, probeSide: DataFrame,
+                             probeRows: Long): DataFrame =
+    CellRoute.routedJoin(corpus, probeSide, probeRows, numCells)
 
   /** [[queryBatchQuantized]] with the probes as a DATAFRAME — the
     * corpus-FRACTION labeling shape: P can be any size because NOTHING
@@ -1916,22 +1880,6 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     *
     * Per-probe results equal [[queryBatchQuantized]]'s (spec-pinned);
     * `include` carries neighbor metadata like the Seq route. */
-  /** Cell ROUTING for a probe FRAME — see [[CellRoute.routeCells]] (ONE
-    * copy shared with the encrypted DF route): (probe_id, qe, cell), the
-    * per-probe cut map-side-bounded, the depth policy an explicit
-    * `useDepth` opt-in (a stray `depth` column on a reused frame can
-    * never silently change a depth-blind route's uniform-nprobe
-    * contract), duplicate probe_id and non-integral depth columns
-    * refused loudly. */
-  private[graft] def routeCellsDF(probes: DataFrame, nprobe: Int,
-                                  useDepth: Boolean = false): DataFrame =
-    CellRoute.routeCells(spark, probes, centroids(), numCells, nprobe, useDepth)
-
-  /** Broadcast-or-salted cell equi-join — see [[CellRoute.routedJoin]]. */
-  private def cellRoutedJoin(corpus: DataFrame, probeSide: DataFrame,
-                             probeRows: Long): DataFrame =
-    CellRoute.routedJoin(corpus, probeSide, probeRows, numCells)
-
   def queryBatchQuantizedDF(probes: DataFrame, k: Int, nprobe: Int,
                             shortlist: Int = 256,
                             include: Seq[String] = Nil): DataFrame = {
@@ -2003,11 +1951,10 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     }
   }
 
-  /** The scored per-probe candidate frame BOTH batched-probe tails cut
+  /** The scored per-probe candidate frame [[queryBatch]] cuts its top-k
     * from — cell routing, union-cell partition pruning, tombstone
-    * anti-join, `where`, probe pairing, distance — so the serving
-    * formulation and its retained window oracle can never diverge on
-    * WHICH rows are candidates, only on how the top-k is cut. */
+    * anti-join, `where`, probe pairing, distance: exactly the candidate
+    * set [[query]] scores for each probe at that probe's depth. */
   private def batchCandidates(probes: Seq[(Long, Array[Float])], nprobe: Int,
                               where: Option[Column],
                               depthOf: Map[Long, Int]): DataFrame = {
@@ -2049,10 +1996,11 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * the exchange moves at most k × probes × tasks rows. The window
     * formulation this replaced — `row_number over (partition by probe_id)`
     * — shipped the FULL cell-pruned candidate volume (Σ per-probe
-    * probed-cell rows) to the reducers; it survives verbatim as
-    * [[queryBatchWindowed]], the spec's bit-equality oracle and the §8.3
-    * before/after baseline. At a 1024-probe training panel over 100 TB the
-    * difference is "shuffle the probed corpus" vs "shuffle the answer".
+    * probed-cell rows) to the reducers (the SURVEY §8.3 before/after).
+    * Per-probe answers equal [[query]]'s at each probe's depth
+    * (spec-pinned, IvfIndexSpec). At a 1024-probe training panel over
+    * 100 TB the difference is "shuffle the probed corpus" vs "shuffle the
+    * answer".
     *
     * `depthOf` overrides the UNIFORM `nprobe` per probe (the
     * [[exactDepths]] policy: an easy probe prunes hard while a
@@ -2162,25 +2110,6 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
       // plan over the checkpointed bounded answer, not the freed frame)
       out.localCheckpoint()
     } finally { routed.unpersist(): Unit }
-  }
-
-  /** The REJECTED window formulation of [[queryBatch]], retained verbatim
-    * as the bit-equality oracle its spec pins the serving tail against and
-    * as the §8.3 before/after measurement baseline (the *Hof-twin
-    * discipline). Correct and cell-pruned, but the window exchange
-    * carries the full candidate volume — do not serve through it. */
-  private[graft] def queryBatchWindowed(probes: Seq[(Long, Array[Float])], k: Int,
-                                        nprobe: Int,
-                                        where: Option[Column] = None,
-                                        include: Seq[String] = Nil,
-                                        depthOf: Map[Long, Int] = Map.empty): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("probe_id").orderBy(asc("distance"), asc("id"))
-    batchCandidates(probes, nprobe, where, depthOf)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id") +: col("id") +: include.map(col) :+
-        col("cell").cast("long").as("cell") :+ col("distance") :+ col("rn"): _*)
   }
 }
 

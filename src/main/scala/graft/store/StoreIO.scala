@@ -268,40 +268,16 @@ private[store] object StoreIO {
     }
   }
 
-  /** Publish SEVERAL outputs as one crash-consistent unit (the
-    * [[GraphIndex]] insert must swap vectors and edges together — a
-    * vectors-only commit leaves permanently unwired nodes on replay).
-    * Protocol: every `__stage` dir is written FIRST — so all reads of the
-    * live data happen before anything is deleted, and a recomputed cached
-    * partition can never hit removed files — then a marker file records the
-    * dests, then each dest swaps, then the marker clears. A crash before
-    * the marker leaves the live state untouched (stale stages are
-    * overwritten by the next writer); a crash after it is finished by
-    * [[recover]] at the next open, so readers see either all old or all
-    * new. */
-  def commitSwap(outs: Seq[(DataFrame, String)], marker: String): Unit =
-    commitStaged(outs.map { case (df, dest) =>
-      Staged(s"${dest}__stage", dest,
-        st => df.write.mode("overwrite").parquet(st))
-    }, marker)
-
   /** One output of [[commitStaged]]: `write` materializes the data at
     * `stage`, which is renamed to `dest` once EVERY stage in the commit has
-    * completed. The plain-replace form stages at the SIBLING `<dest>__stage`
-    * ([[commitSwap]]); appends of a new partition dir INTO a live
+    * completed. The plain-replace form stages at the SIBLING
+    * `<dest>__stage`; appends of a new partition dir INTO a live
     * partitioned tree (the [[GraphIndex]] delta epochs) must stage OUTSIDE
     * that tree — a `epoch=N__stage` dir nested under the root would be
     * picked up by a concurrent reader's partition discovery as a bogus
     * partition value mid-write. */
   final case class Staged(stage: String, dest: String, write: String => Unit)
 
-  /** [[commitSwap]] generalized to explicit stage locations and writers.
-    * `cleanup` dirs are removed AFTER every swap, still under the marker's
-    * protection — a compaction that must drop its merged inputs
-    * ([[TextIndex.compact]]) records them here, so a crash between the
-    * publish and the input deletion can no longer leave merged AND
-    * original data co-resident (doubling every aggregate) until the next
-    * compaction: [[recover]] finishes the deletion at the next open. */
   /** [[commitStaged]] with the STAGE WRITERS overlapped from a bounded
     * driver thread pool (guide §2.6: actions are only sequential because
     * the driver calls them sequentially) — one writer's driver-side gaps
@@ -350,6 +326,22 @@ private[store] object StoreIO {
     finishCommit(outs, marker, cleanup)
   }
 
+  /** Publish SEVERAL outputs as one crash-consistent unit (the
+    * [[GraphIndex]] insert must swap vectors and edges together — a
+    * vectors-only commit leaves permanently unwired nodes on replay).
+    * Protocol: every stage is written FIRST — so all reads of the live
+    * data happen before anything is deleted, and a recomputed cached
+    * partition can never hit removed files — then a marker file records
+    * the dests, then each dest swaps, then the marker clears. A crash
+    * before the marker leaves the live state untouched (stale stages are
+    * overwritten by the next writer); a crash after it is finished by
+    * [[recover]] at the next open, so readers see either all old or all
+    * new. `cleanup` dirs are removed AFTER every swap, still under the
+    * marker's protection — a compaction that must drop its merged inputs
+    * ([[TextIndex.compact]]) records them here, so a crash between the
+    * publish and the input deletion can no longer leave merged AND
+    * original data co-resident (doubling every aggregate) until the next
+    * compaction: [[recover]] finishes the deletion at the next open. */
   def commitStaged(outs: Seq[Staged], marker: String,
                    cleanup: Seq[String] = Seq.empty): Unit = {
     outs.foreach(o => runStageWriter(o))

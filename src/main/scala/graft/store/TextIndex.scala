@@ -1090,7 +1090,8 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     terms.map { t =>
       val df = (dfMap.getOrElse(t, 0L) - deadDf.getOrElse(t, 0L)).toDouble
       // StrictMath.log == Spark's `log` expression (bit-identical idf on
-      // the driver and frame routes — the queryRankedBatchDF parity pin)
+      // the driver and frame routes — the TextIndexSpec frame-panel
+      // parity pin against per-probe queryRanked)
       t -> StrictMath.log((n.toDouble - df + 0.5) / (df + 0.5) + 1.0)
     }.toMap
   }
@@ -1100,8 +1101,8 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * tier), so every ranked surface scores identically. `idfCol` is the
     * per-term idf however the route carries it: a broadcast-literal map
     * lookup on the driver-panel routes ([[cqColumn]]) or a joined frame
-    * column on [[queryRankedBatchDF]] — the arithmetic AFTER the lookup is
-    * this one tree either way. */
+    * column on the frame-panel routes ([[PanelScan]]) — the arithmetic
+    * AFTER the lookup is this one tree either way. */
   private def cqExpr(idfCol: org.apache.spark.sql.Column, avgdl: Double): org.apache.spark.sql.Column = {
     val tf = col("tf").cast("double")
     val contrib = idfCol *
@@ -1169,10 +1170,11 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
         col("rank"))
   }
 
-  /** [[queryRanked]] for a PANEL of standing term-sets — the keyword arm
-    * of batched hybrid serving (`hybridServeIndexedBatch`): Q probes
-    * share ONE bucket+term-pruned postings scan over the UNION of their
-    * terms (each posting row scores only for probes whose term set
+  /** [[queryRanked]] for a PANEL of standing term-sets, unbounded — the
+    * body [[queryRankedBatchBounded]] serves a driver panel through when
+    * the MaxScore bound cannot shrink its fanout: Q probes share ONE
+    * bucket+term-pruned postings scan over the UNION of their terms
+    * (each posting row scores only for probes whose term set
     * contains its term — a broadcast (probe, term) pair join, bounded by
     * Σ terms), one corpus-stats/idf pass, and the per-probe top-k cut is
     * the map-side-bounded [[graft.operators.GroupedTopK.topKRows]]
@@ -1182,22 +1184,14 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * each probe's (sq desc, doc_id asc) total order, identical to
     * [[queryRanked]] probe for probe (spec-pinned — idf, avgdl and the
     * per-posting cq are per-term quantities, so the union scan changes
-    * nothing). Probe ids must be unique. Returns
+    * nothing). `dfMap` is the committed-df map the floor gate already
+    * collected — handed through so the pass costs no extra job. Returns
     * (probe_id, doc_id, dl, bm25q, rank) in per-probe rank order. */
-  def queryRankedBatch(panel: Seq[(Long, Seq[String])], k: Int): DataFrame =
-    rankedBatchSeq(panel, k, None)
-
-  /** [[queryRankedBatch]]'s body with an optional pre-collected
-    * committed-df map — the zero-extra-jobs hand-through from
-    * [[queryRankedBatchBounded]]'s floor gate. */
   private def rankedBatchSeq(panel: Seq[(Long, Seq[String])], k: Int,
-                             dfMap0: Option[Map[String, Long]]): DataFrame = {
-    require(panel.nonEmpty, "queryRankedBatch needs at least one probe")
-    require(panel.map(_._1).distinct.length == panel.length,
-      "probe ids must be unique")
+                             dfMap: Map[String, Long]): DataFrame = {
     val unionTerms = panel.flatMap(_._2).distinct
     val (n, avgdl, ts) = liveCorpusStats()
-    val idf = idfMapOf(unionTerms, n, ts, dfMap0)
+    val idf = idfMapOf(unionTerms, n, ts, Some(dfMap))
     val scored = ts match {
       case None => prunedPostingsOf(unionTerms)
       case Some(t) => prunedPostingsOf(unionTerms)
@@ -1220,9 +1214,9 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * ranked route — the map-side-bounded
     * [[graft.operators.GroupedTopK.topKRows]] aggregate over a
     * (probe_id, doc_id, dl, sq) frame (≤ k × probes × tasks ANSWER rows
-    * through the exchange), one copy so [[queryRankedBatch]],
-    * [[queryRankedBatchDF]] and [[queryRankedBatchBounded]] can never
-    * drift on the arithmetic their parity contracts pin. */
+    * through the exchange), one copy so the driver-panel, frame-panel and
+    * bounded bodies can never drift on the arithmetic their parity
+    * contracts pin. */
   private def rankedBatchTail(perDocSq: DataFrame, k: Int): DataFrame =
     perDocSq
       .groupBy("probe_id")
@@ -1234,9 +1228,11 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
         round(-col("e.score") / lit(Scale.toDouble), 4).as("bm25q"),
         (col("pos") + 1).cast("int").as("rank"))
 
-  /** [[queryRankedBatch]] with the MaxScore df-bound — the batched twin
-    * of the q_bm25_maxscore discipline, so a HIGH-DF standing term cannot
-    * drag the panel's postings fanout toward a corpus scan (the r12 §8.3
+  /** [[queryRanked]] for a PANEL of standing term-sets — the keyword arm
+    * of batched hybrid serving (`hybridServeIndexedBatch`), with the
+    * MaxScore df-bound — the batched twin of the q_bm25_maxscore
+    * discipline, so a HIGH-DF standing term cannot drag the panel's
+    * postings fanout toward a corpus scan (the r12 §8.3
     * worst case: one union-term pass grew 3.6× for 5× docs on a 31-token
     * vocabulary where every term is common).
     *
@@ -1273,7 +1269,7 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       }
     }
     if (totalDf < boundFloor || unavoidable > EngageFrac * totalDf)
-      rankedBatchSeq(panel, k, Some(dfMap))
+      rankedBatchSeq(panel, k, dfMap)
     else boundedBatchDF(
       // the bounded BODY, not the public frame route — the public route's
       // small-panel dispatch would bounce an engaged driver panel back
@@ -1282,8 +1278,8 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
   }
 
   /** The MaxScore-bounded BATCHED ranked route with the panel as a FRAME
-    * — answer-identical to [[queryRankedBatch]]/[[queryRankedBatchDF]]
-    * probe for probe (spec-pinned), ADAPTIVE: the bound engages only when
+    * — answer-identical to [[queryRanked]] probe for probe
+    * (spec-pinned), ADAPTIVE: the bound engages only when
     * it can actually shrink the fanout, so the route never loses to the
     * single unbounded pass by more than the cost of asking. Nothing
     * probe-sized touches the driver.
@@ -1332,7 +1328,7 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     PanelDispatch.smallPanel(spark,
         panel.select(col("probe_id"), col("terms").cast("array<string>").as("terms"))) match {
       // driver-sized panels take the driver-gated route — identical
-      // answers (the bounded ≡ plain ≡ frame parity pins) with the gate
+      // answers (both lanes pinned to per-probe queryRanked) with the gate
       // as pure driver arithmetic; an ENGAGED driver panel re-enters the
       // bounded BODY below, never this dispatch ([[PanelDispatch]])
       case Some(rows) if rows.nonEmpty =>
@@ -1481,9 +1477,19 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     finally essStat.unpersist(): Unit
   }
 
-  /** The unbounded single-pass fanout + tail — [[queryRankedBatchDF]]'s
-    * body over a prepared [[PanelScan]]; also the bounded route's
-    * fallback when the MaxScore bound cannot shrink the fanout. */
+  /** The unbounded single-pass fanout + tail over a prepared
+    * [[PanelScan]] — the bounded frame route's fallback when the MaxScore
+    * bound cannot shrink the fanout. Ranks are identical to
+    * [[queryRanked]] probe for probe (spec-pinned, TextIndexSpec — idf on
+    * this route computes in-frame via Spark's `log`, which is the same
+    * StrictMath.log [[idfMapOf]] calls, so the quantized cq longs are
+    * bit-equal across routes). The postings×pairs fanout routes through
+    * [[CellRoute.keyedProbeJoin]] (broadcast under the ProbeJoin limit,
+    * salted shuffle_hash above it — a plain shuffle join on `term`
+    * collapses to ≤ |vocabulary| tasks exactly like the cell join did),
+    * and the per-probe cut is the map-side
+    * [[graft.operators.GroupedTopK.topKRows]] tail, ≤ k × probes × tasks
+    * ANSWER rows through the exchange. */
   private def unboundedFanout(scan: PanelScan, k: Int): DataFrame = {
     val fanned = CellRoute.keyedProbeJoin(scan.scored, scan.pairs,
       probeRows = scan.pairRows, numKeys = math.max(1, scan.nTerms.toInt),
@@ -1493,49 +1499,6 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       k)
   }
 
-  /** [[queryRankedBatch]] with the panel as a DATAFRAME — the keyword arm
-    * for a standing fleet BIGGER than a driver panel
-    * (`hybridServeIndexedBatchDF`): NOTHING probe-sized ever touches the
-    * driver. `panel` carries (probe_id LONG, terms ARRAY<STRING>); output
-    * and ranks are identical to [[queryRankedBatch]] probe for probe
-    * (spec-pinned, TextIndexSpec — idf on this route computes in-frame
-    * via Spark's `log`, which is the same StrictMath.log [[idfMapOf]]
-    * calls, so the quantized cq longs are bit-equal across routes).
-    *
-    * Scale shape: the (probe, term) pairs stay a FRAME (exploded once);
-    * the postings scan is still bucket-PARTITION-pruned (the distinct
-    * buckets of the panel's union terms are ≤ numBuckets — the one
-    * bounded collect) with the term filter as a vocabulary-bounded join;
-    * per-term live idf is a frame join, never a driver map; the
-    * postings×pairs fanout routes through
-    * [[CellRoute.keyedProbeJoin]] (broadcast under the ProbeJoin limit,
-    * salted shuffle_hash above it — a plain shuffle join on `term`
-    * collapses to ≤ |vocabulary| tasks exactly like the cell join did);
-    * and the per-probe cut is the same map-side [[graft.operators.GroupedTopK.topKRows]]
-    * tail, ≤ k × probes × tasks ANSWER rows through the exchange.
-    * Duplicate probe_id rows refuse loudly (one bounded aggregation over
-    * the panel — duplicated pairs would silently double shared terms' cq
-    * into the merged sum). */
-  def queryRankedBatchDF(panel: DataFrame, k: Int): DataFrame = {
-    // driver-sized panels serve through the Seq twin — identical answers
-    // (the queryRankedBatch ≡ queryRankedBatchDF parity pin), one
-    // postings pass either way but none of the frame lane's per-serve
-    // stats/idf-join plumbing ([[PanelDispatch]])
-    PanelDispatch.smallPanel(spark,
-        panel.select(col("probe_id"), col("terms").cast("array<string>").as("terms"))) match {
-      case Some(rows) if rows.nonEmpty =>
-        PanelDispatch.requireUniqueProbes(rows)
-        return rankedBatchSeq(
-          rows.map(r => (r.getLong(0), r.getSeq[String](1))).toSeq, k, None)
-      case _ => ()
-    }
-    val scan = panelScan(panel) match {
-      case None => return emptyRankedFrame()
-      case Some(s) => s
-    }
-    unboundedFanout(scan, k)
-  }
-
   /** The empty answer frame of every batched ranked route. */
   private def emptyRankedFrame(): DataFrame =
     spark.createDataFrame(
@@ -1543,8 +1506,8 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       org.apache.spark.sql.types.StructType.fromDDL(
         "probe_id LONG, doc_id LONG, dl INT, bm25q DOUBLE, rank INT"))
 
-  /** The shared HEAD of the frame-panel ranked routes
-    * ([[queryRankedBatchDF]] / [[queryRankedBatchBoundedDF]]): the
+  /** The shared HEAD of the frame-panel ranked bodies (the bounded pass
+    * and its [[unboundedFanout]] fallback): the
     * duplicate-probe guard, the exploded (probe, term) pairs, the ONE
     * bounded stats pass (distinct buckets ≤ numBuckets for PARTITION
     * pruning, the vocabulary size for the salt ceiling, the pair count

@@ -2236,15 +2236,13 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
     * only against probes whose cell set contains it and cut to top-k by
     * the answers-not-candidates
     * [[graft.operators.GroupedTopK.topKRows]] tail (string-id spine —
-    * ids order lexically, matching the windowed oracle): the exchange
-    * carries at most k × probes × tasks ANSWER rows whose payload is the
-    * still-ENCRYPTED doc_ct, so decrypted embeddings never transit
+    * ties break on the lexical id, matching [[queryIndexed]]): the
+    * exchange carries at most k × probes × tasks ANSWER rows whose payload
+    * is the still-ENCRYPTED doc_ct, so decrypted embeddings never transit
     * shuffle files at all and doc decryption is answer-bounded. The
-    * rejected window formulation — which shipped the full decrypted
-    * candidate volume to the reducers — survives as
-    * [[queryIndexedBatchWindowed]], the spec's bit-equality oracle, cut
-    * from the SAME candidate frame. Per-probe results are
-    * [[queryIndexed]]'s (spec-pinned). A bulk encrypted workload pays
+    * rejected window formulation shipped the full decrypted candidate
+    * volume to the reducers. Per-probe results are [[queryIndexed]]'s at
+    * each probe's depth (spec-pinned, EncryptedIndexSpec). A bulk encrypted workload pays
     * ~one probe's decrypt cost for the whole batch instead of Q× it.
     * `depthOf` overrides the UNIFORM `nprobe` per probe — the
     * [[exactDepths]] policy: each probe DECRYPTS exactly its own
@@ -2253,22 +2251,7 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
     * (probe_id, id, doc, distance, rn). */
   def queryIndexedBatch(name: String, probes: Seq[(Long, Array[Float])], k: Int,
                         nprobe: Int,
-                        depthOf: Map[Long, Int] = Map.empty): DataFrame =
-    encBatchImpl(name, probes, k, nprobe, depthOf, windowed = false)
-
-  /** The REJECTED window formulation of [[queryIndexedBatch]], retained
-    * as its bit-equality spec oracle (the queryBatchWindowed discipline):
-    * same probed cells, same decrypted candidate checkpoint, but the
-    * per-probe cut ships every decrypted candidate row through a
-    * probe-keyed window — do not serve through it. */
-  private[graft] def queryIndexedBatchWindowed(
-      name: String, probes: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      depthOf: Map[Long, Int] = Map.empty): DataFrame =
-    encBatchImpl(name, probes, k, nprobe, depthOf, windowed = true)
-
-  private def encBatchImpl(name: String, probes: Seq[(Long, Array[Float])],
-                           k: Int, nprobe: Int, depthOf: Map[Long, Int],
-                           windowed: Boolean): DataFrame = {
+                        depthOf: Map[Long, Int] = Map.empty): DataFrame = {
     require(probes.nonEmpty, "queryIndexedBatch needs at least one probe")
     val cents = centroidsOf(name)
     require(cents.nonEmpty, s"$name has no encrypted centroid sidecar — storeIndexed() first")
@@ -2283,60 +2266,17 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
         col("doc_ct"),
         from_json(decryptStr(col("emb_ct")), ArrayType(FloatType)).as("emb"))
       .localCheckpoint()
-    val cand = dec
+    dec
       .join(broadcast(probeDf), array_contains(col("probe_cells"), col("cell")))
       .withColumn("distance", VF.l2Sq(col("emb"), col("qe").cast("array<float>")))
-    if (windowed) {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("probe_id").orderBy(asc("distance"), asc("id"))
-      cand
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("probe_id"), col("id"), decryptStr(col("doc_ct")).as("doc"),
-          col("distance"), col("rn"))
-    } else
-      cand
-        .groupBy("probe_id")
-        .agg(graft.operators.GroupedTopK.topKRows(k)(
-          col("distance"), col("id"), col("doc_ct")).as("tk"))
-        .select(col("probe_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-        .select(col("probe_id"), col("e.id").as("id"),
-          decryptStr(col("e.payload")).as("doc"),
-          col("e.score").as("distance"), (col("pos") + 1).cast("int").as("rn"))
+      .groupBy("probe_id")
+      .agg(graft.operators.GroupedTopK.topKRows(k)(
+        col("distance"), col("id"), col("doc_ct")).as("tk"))
+      .select(col("probe_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+      .select(col("probe_id"), col("e.id").as("id"),
+        decryptStr(col("e.payload")).as("doc"),
+        col("e.score").as("distance"), (col("pos") + 1).cast("int").as("rn"))
   }
-
-  /** Batched [[queryIndexedQuantized]] — the `q_ann_ivf_batch` shape on
-    * ciphertext: phase 1 decrypts only the compact codes_ct of the UNION
-    * of probed cells ONCE (materialized, same per-pair-recompute guard as
-    * [[queryIndexedBatch]]), ranks per probe by exact integer L2 and cuts
-    * per-probe shortlists map-side through the
-    * [[graft.operators.GroupedTopK.topKRows]] tail; phase 2 decrypts the
-    * full embedding for the union of shortlist survivors only — one
-    * In-pushed bounded pass — and finishes every probe exactly through
-    * the same answer-volume tail (doc_ct payload — decrypted embeddings
-    * never transit shuffle files, doc decryption is answer-bounded; the
-    * [[queryIndexedBatch]] exposure argument). The rejected window cuts
-    * survive as [[queryIndexedBatchQuantizedWindowed]], the spec's
-    * bit-equality oracle over the SAME candidate frames. With
-    * `shortlist` >= the probed cells' population the result is EXACTLY
-    * [[queryIndexedBatch]]'s (spec-pinned). The id collect is bounded by
-    * Q × `shortlist`. `depthOf` is the [[exactDepths]] per-probe override,
-    * bounding each probe's codes_ct decrypt to its own cells. */
-  def queryIndexedBatchQuantized(name: String, probes: Seq[(Long, Array[Float])],
-                                 k: Int, nprobe: Int,
-                                 shortlist: Int = 256,
-                                 depthOf: Map[Long, Int] = Map.empty): DataFrame =
-    encBatchQuantImpl(name, probes, k, nprobe, shortlist, depthOf, windowed = false)
-
-  /** The REJECTED window formulation of [[queryIndexedBatchQuantized]],
-    * retained as its bit-equality spec oracle — both per-probe cuts ship
-    * candidate volume through probe-keyed windows; do not serve through
-    * it. */
-  private[graft] def queryIndexedBatchQuantizedWindowed(
-      name: String, probes: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      shortlist: Int = 256,
-      depthOf: Map[Long, Int] = Map.empty): DataFrame =
-    encBatchQuantImpl(name, probes, k, nprobe, shortlist, depthOf, windowed = true)
 
   /** The per-probe quantized scorer frame, dispatched on the frozen
     * sidecar (the IvfIndex.queryBatchQuantized discipline on ciphertext):
@@ -2362,10 +2302,26 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
           VF.pqAdcPair(col("codes"), col("qlut"), IvfIndex.PqK))
     }
 
-  private def encBatchQuantImpl(name: String, probes: Seq[(Long, Array[Float])],
-                                k: Int, nprobe: Int, shortlist: Int,
-                                depthOf: Map[Long, Int],
-                                windowed: Boolean): DataFrame = {
+  /** Batched [[queryIndexedQuantized]] — the `q_ann_ivf_batch` shape on
+    * ciphertext: phase 1 decrypts only the compact codes_ct of the UNION
+    * of probed cells ONCE (materialized, same per-pair-recompute guard as
+    * [[queryIndexedBatch]]), ranks per probe by exact integer L2 and cuts
+    * per-probe shortlists map-side through the
+    * [[graft.operators.GroupedTopK.topKRows]] tail; phase 2 decrypts the
+    * full embedding for the union of shortlist survivors only — one
+    * In-pushed bounded pass — and finishes every probe exactly through
+    * the same answer-volume tail (doc_ct payload — decrypted embeddings
+    * never transit shuffle files, doc decryption is answer-bounded; the
+    * [[queryIndexedBatch]] exposure argument). Per-probe answers equal
+    * [[queryIndexedQuantized]]'s (spec-pinned). With
+    * `shortlist` >= the probed cells' population the result is EXACTLY
+    * [[queryIndexedBatch]]'s (spec-pinned). The id collect is bounded by
+    * Q × `shortlist`. `depthOf` is the [[exactDepths]] per-probe override,
+    * bounding each probe's codes_ct decrypt to its own cells. */
+  def queryIndexedBatchQuantized(name: String, probes: Seq[(Long, Array[Float])],
+                                 k: Int, nprobe: Int,
+                                 shortlist: Int = 256,
+                                 depthOf: Map[Long, Int] = Map.empty): DataFrame = {
     require(probes.nonEmpty, "queryIndexedBatchQuantized needs at least one probe")
     require(shortlist >= k, "shortlist must be at least k")
     val cents = centroidsOf(name)
@@ -2380,26 +2336,15 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
       .localCheckpoint()
     // SQ8's integer L2 casts exactly into double (bounded by dim·255²),
     // so ordering over the cast equals ordering over the raw long
-    val shortCand = codes
+    val short = codes
       .join(broadcast(probeDf), array_contains(col("probe_cells"), col("cell")))
       .withColumn("qdist", qdistCol.cast("double"))
-    val short =
-      if (windowed) {
-        val wS = org.apache.spark.sql.expressions.Window
-          .partitionBy("probe_id").orderBy(asc("qdist"), asc("id"))
-        shortCand
-          .withColumn("rn", row_number().over(wS))
-          .filter(col("rn") <= shortlist)
-          .select(col("probe_id"), col("id"))
-          .collect()
-      } else
-        shortCand
-          .groupBy("probe_id")
-          .agg(graft.operators.GroupedTopK.topKRows(shortlist)(
-            col("qdist"), col("id"), lit(0)).as("tk"))
-          .select(col("probe_id"), explode(col("tk")).as("e"))
-          .select(col("probe_id"), col("e.id").as("id"))
-          .collect()
+      .groupBy("probe_id")
+      .agg(graft.operators.GroupedTopK.topKRows(shortlist)(
+        col("qdist"), col("id"), lit(0)).as("tk"))
+      .select(col("probe_id"), explode(col("tk")).as("e"))
+      .select(col("probe_id"), col("e.id").as("id"))
+      .collect()
     val shortIds = short.map(_.getString(1)).distinct.toSeq
     val keep = spark.createDataFrame(
       short.map(r => (r.getLong(0), r.getString(1))).toSeq.distinct.sortBy(identity))
@@ -2411,29 +2356,19 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
         col("doc_ct"),
         from_json(decryptStr(col("emb_ct")), ArrayType(FloatType)).as("emb"))
       .localCheckpoint()
-    val rerankCand = dec
+    dec
       .join(broadcast(probeDf), array_contains(col("probe_cells"), col("cell")))
       // restrict the rerank to each probe's OWN shortlist (a row may sit
       // in another probe's cells without having made its shortlist)
       .join(broadcast(keep), Seq("probe_id", "id"), "left_semi")
       .withColumn("distance", VF.l2Sq(col("emb"), col("qe").cast("array<float>")))
-    if (windowed) {
-      val wK = org.apache.spark.sql.expressions.Window
-        .partitionBy("probe_id").orderBy(asc("distance"), asc("id"))
-      rerankCand
-        .withColumn("rn", row_number().over(wK))
-        .filter(col("rn") <= k)
-        .select(col("probe_id"), col("id"), decryptStr(col("doc_ct")).as("doc"),
-          col("distance"), col("rn"))
-    } else
-      rerankCand
-        .groupBy("probe_id")
-        .agg(graft.operators.GroupedTopK.topKRows(k)(
-          col("distance"), col("id"), col("doc_ct")).as("tk"))
-        .select(col("probe_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-        .select(col("probe_id"), col("e.id").as("id"),
-          decryptStr(col("e.payload")).as("doc"),
-          col("e.score").as("distance"), (col("pos") + 1).cast("int").as("rn"))
+      .groupBy("probe_id")
+      .agg(graft.operators.GroupedTopK.topKRows(k)(
+        col("distance"), col("id"), col("doc_ct")).as("tk"))
+      .select(col("probe_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+      .select(col("probe_id"), col("e.id").as("id"),
+        decryptStr(col("e.payload")).as("doc"),
+        col("e.score").as("distance"), (col("pos") + 1).cast("int").as("rn"))
   }
 
   /** [[queryIndexedBatchQuantized]] with the probes as a DATAFRAME — the
@@ -2474,6 +2409,9 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
                           shortlist: Int = 256,
                           useDepth: Boolean = false): DataFrame = {
     require(shortlist >= k, "shortlist must be at least k")
+    // finish an interrupted publish FIRST: the twin pick below reads the
+    // tree's parquet footers, which must be the recovered tree's
+    StoreIO.recover(encMarker(name))
     val cents = centroidsOf(name)
     require(cents.nonEmpty, s"$name has no encrypted centroid sidecar — storeIndexed() first")
     val numCells = cents.length

@@ -233,27 +233,43 @@ class EncryptedIndexSpec extends AnyFunSuite with SparkTest {
       df.orderBy("probe_id", "rn").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getDouble(3), r.getInt(4))).toSeq
 
-    // raw batch == per-probe queryIndexed, probe for probe (partial and full nprobe)
-    Seq(2, 6).foreach { np =>
-      val batch = batchRows(es.queryIndexedBatch("c", probes, k = 5, nprobe = np))
-      val loop = probes.flatMap { case (pid, qe) =>
-        got(es.queryIndexed("c", qe, k = 5, nprobe = np)).zipWithIndex
-          .map { case ((id, doc, d), i) => (pid, id, doc, d, i + 1) }
+    // the per-probe loop at each probe's own depth (string-id tie order:
+    // TopKRows under the STRING spine ≡ the single probe's `order by id`);
+    // answers memoized per (probe, depth, shortlist) — depthOf pins two
+    // probes to the same depth under every uniform nprobe
+    val depthOf = Map(7L -> 1, 113L -> 6)
+    val rawSingle = scala.collection.mutable.Map.empty[(Long, Int), Seq[(String, String, Double)]]
+    val quantSingle = scala.collection.mutable.Map.empty[(Long, Int, Int), Seq[(String, String, Double)]]
+    def loop(np: Int, d: Map[Long, Int])(
+        single: (Long, Array[Float], Int) => Seq[(String, String, Double)]) =
+      probes.flatMap { case (pid, qe) =>
+        single(pid, qe, d.getOrElse(pid, np)).zipWithIndex
+          .map { case ((id, doc, dist), i) => (pid, id, doc, dist, i + 1) }
       }
-      assert(batch == loop, s"nprobe=$np: batch must equal the per-probe loop")
+
+    // raw and quantized batches == the per-probe queryIndexed /
+    // queryIndexedQuantized loops, probe for probe: partial and full
+    // nprobe, uniform and per-probe depths, bounded and full shortlists
+    for (np <- Seq(2, 6); d <- Seq(Map.empty[Long, Int], depthOf)) {
+      assert(batchRows(es.queryIndexedBatch("c", probes, k = 5, nprobe = np, depthOf = d)) ==
+        loop(np, d)((pid, qe, depth) => rawSingle.getOrElseUpdate((pid, depth),
+          got(es.queryIndexed("c", qe, k = 5, nprobe = depth)))),
+        s"nprobe=$np depthOf=$d: batch must equal the per-probe loop")
+      for (shortlist <- Seq(5, 32, 300)) {
+        assert(batchRows(es.queryIndexedBatchQuantized("c", probes, k = 5,
+            nprobe = np, shortlist = shortlist, depthOf = d)) ==
+          loop(np, d)((pid, qe, depth) => quantSingle.getOrElseUpdate((pid, depth, shortlist),
+            got(es.queryIndexedQuantized("c", qe, k = 5, nprobe = depth,
+              shortlist = shortlist)))),
+          s"nprobe=$np shortlist=$shortlist depthOf=$d: quantized batch " +
+            "must equal the per-probe quantized loop")
+      }
     }
 
-    // quantized batch at full depth == raw batch; bounded depth == the
-    // per-probe quantized loop
+    // quantized batch at full depth == raw batch
     val full = batchRows(es.queryIndexedBatchQuantized("c", probes, k = 5, nprobe = 6, shortlist = 300))
     assert(full == batchRows(es.queryIndexedBatch("c", probes, k = 5, nprobe = 6)),
       "full-depth quantized batch must equal the raw batch")
-    val qb = batchRows(es.queryIndexedBatchQuantized("c", probes, k = 5, nprobe = 2, shortlist = 32))
-    val qLoop = probes.flatMap { case (pid, qe) =>
-      got(es.queryIndexedQuantized("c", qe, k = 5, nprobe = 2, shortlist = 32)).zipWithIndex
-        .map { case ((id, doc, d), i) => (pid, id, doc, d, i + 1) }
-    }
-    assert(qb == qLoop, "bounded-depth quantized batch must equal the per-probe quantized loop")
   }
 
   test("queryIndexedBatchDF: an encrypted probe FRAME serves the Seq routes' exact answers — depth opt-in, salted join, bounded decrypt") {
@@ -364,38 +380,18 @@ class EncryptedIndexSpec extends AnyFunSuite with SparkTest {
     assert(es3.depthPolicy("c", panel, k) == rotated)
   }
 
-  test("encrypted batch serving shuffles answers, not decrypted candidates: bit-equal to the windowed twins, no Window in the serving plans") {
+  test("encrypted batch serving shuffles answers, not decrypted candidates: no Window in the serving plans") {
     val base = tmp("enc_batch_tail")
     val es = new EncryptedStore(spark, base, Key)
     es.storeIndexed(rowsOf(1 to 300), "c", numCells = 6)
     val probes: Seq[(Long, Array[Float])] = Seq(7L, 31L, 113L, 250L).map(i => (i, probe(i.toInt)))
-    val depthOf = Map(7L -> 1, 113L -> 6)
-    def batchRows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("probe_id", "rn").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getDouble(3), r.getInt(4))).toSeq
-    // the r11 §8.3 measurement applied to the encrypted twins: the SAME
-    // candidate frames (shared impls), only the cut differs — serving must
-    // be bit-equal to the retained window formulations at every depth
-    // combination, including the per-probe depthOf policy (string-id tie
-    // order: TopKRows under the STRING spine ≡ the window's `order by id`)
-    for (np <- Seq(2, 6); d <- Seq(Map.empty[Long, Int], depthOf)) {
-      assert(batchRows(es.queryIndexedBatch("c", probes, k = 5, nprobe = np, depthOf = d)) ==
-        batchRows(es.queryIndexedBatchWindowed("c", probes, k = 5, nprobe = np, depthOf = d)),
-        s"nprobe=$np depthOf=$d: the raw encrypted tail must be bit-equal to its window oracle")
-      for (shortlist <- Seq(5, 32, 300)) {
-        assert(batchRows(es.queryIndexedBatchQuantized("c", probes, k = 5,
-            nprobe = np, shortlist = shortlist, depthOf = d)) ==
-          batchRows(es.queryIndexedBatchQuantizedWindowed("c", probes, k = 5,
-            nprobe = np, shortlist = shortlist, depthOf = d)),
-          s"nprobe=$np shortlist=$shortlist depthOf=$d: the quantized " +
-            "encrypted tail must be bit-equal to its window oracle")
-      }
-    }
     // THE SHAPE CLAIM: both serving frames cut top-k through the bounded
     // native aggregate whose exchange carries k × probes × tasks ANSWER
     // rows with the doc CIPHERTEXT as payload — never a probe-keyed window
     // over the full decrypted candidate volume (which on this twin ships
-    // DECRYPTED embeddings through shuffle files)
+    // DECRYPTED embeddings through shuffle files). The answers themselves
+    // are pinned per probe in "batch probes: one union-of-cells decrypt
+    // pass equals the per-probe loop on both routes".
     val rawPlan = es.queryIndexedBatch("c", probes, k = 5, nprobe = 2)
       .queryExecution.executedPlan.toString
     assert(!rawPlan.contains("Window") && rawPlan.contains("top_k_rows"),
@@ -404,10 +400,6 @@ class EncryptedIndexSpec extends AnyFunSuite with SparkTest {
       nprobe = 2, shortlist = 32).queryExecution.executedPlan.toString
     assert(!quantPlan.contains("Window") && quantPlan.contains("top_k_rows"),
       s"encrypted quantized batch serving must not window the rerank:\n$quantPlan")
-    val oraclePlan = es.queryIndexedBatchWindowed("c", probes, k = 5, nprobe = 2)
-      .queryExecution.executedPlan.toString
-    assert(oraclePlan.contains("Window"),
-      "the retained oracle IS the window formulation")
   }
 
   test("streaming encrypted ingest: stream == batch (decrypted), replay-idempotent, fenced, tombstoned") {

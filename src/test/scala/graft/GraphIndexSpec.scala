@@ -247,10 +247,13 @@ class GraphIndexSpec extends AnyFunSuite with SparkTest {
         beamOf = beams)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSeq.sortBy(t => (t._1, t._4))
-    val hot = idx.hotQueryBatch(panel, k, beamWidth = 2, hops = 8,
-        beamOf = beams)
-      .sortBy(t => (t._1, t._4))
-    assert(hot == cold, "hotQueryBatch(beamOf) must equal queryBatch(beamOf)")
+    val hot = panel.flatMap { case (pid, pe) =>
+      idx.hotQuery(pe, k, beams.getOrElse(pid, 2), 8).zipWithIndex.map {
+        case ((id, d), i) => (pid, id, d, i + 1)
+      }
+    }
+    assert(hot == cold,
+      "hotQuery at each probe's beamOf width must equal queryBatch(beamOf)")
     // per-probe widths really are per-probe: each probe's batched answer
     // equals its SOLO walk at ITS width (not at the fallback)
     panel.foreach { case (pid, pe) =>

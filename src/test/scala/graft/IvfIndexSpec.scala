@@ -143,7 +143,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkTest {
       s"sweep full-recall rung $fullAt vs max per-probe depth ${depths.values.max}")
   }
 
-  test("queryBatch shuffles answers, not candidates: bit-equal to the window oracle at every depth, payload carried, no Window in the plan") {
+  test("queryBatch shuffles answers, not candidates: no Window in the plan") {
     val base = graft.store.Scratch.dir("graft_ivf_qb")
     val vectors = spark.read.parquet(s"$sf001/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("emb"))
@@ -153,45 +153,17 @@ class IvfIndexSpec extends AnyFunSuite with SparkTest {
       (pid + 5000L,
         vectors.filter(col("id") === pid).head().getSeq[Float](1).toArray)
     }
-    // mixed per-probe depths: some pinned shallow, some deep, some absent
-    // (falling back to nprobe) — every depthOf code path
-    val depthOf = Map(probes(0)._1 -> 1, probes(2)._1 -> 16, probes(4)._1 -> 3)
-    def rows(df: org.apache.spark.sql.DataFrame, withEmb: Boolean) =
-      df.collect().map { r =>
-        (r.getLong(0), r.getLong(1),
-          if (withEmb) r.getSeq[Float](2).toSeq else Nil,
-          r.getLong(if (withEmb) 3 else 2),
-          r.getDouble(if (withEmb) 4 else 3),
-          r.getInt(if (withEmb) 5 else 4))
-      }.toSeq.sortBy(t => (t._1, t._6))
-    for (np <- Seq(1, 4, 16); include <- Seq(Nil, Seq("emb"))) {
-      val got = rows(idx.queryBatch(probes, k = 5, nprobe = np,
-        include = include, depthOf = depthOf), include.nonEmpty)
-      val oracle = rows(idx.queryBatchWindowed(probes, k = 5, nprobe = np,
-        include = include, depthOf = depthOf), include.nonEmpty)
-      assert(got == oracle,
-        s"nprobe=$np include=$include: aggregated tail must be bit-equal " +
-          "to the window formulation (same candidates, same (distance, id) " +
-          "total order, payload intact)")
-    }
-    // where-filter parity on both tails
-    val pred = col("id") % 2 === 0
-    assert(rows(idx.queryBatch(probes, 5, 4, where = Some(pred)), withEmb = false) ==
-      rows(idx.queryBatchWindowed(probes, 5, 4, where = Some(pred)), withEmb = false))
     // THE SHAPE CLAIM: the serving tail aggregates map-side (the exchange
     // carries <= k x probes x tasks buffered entries), never a window over
-    // the full cell-pruned candidate volume
+    // the full cell-pruned candidate volume (the answers themselves are
+    // pinned per probe against query() in "queryBatch: one pruned scan
+    // answers every probe exactly like query()")
     val servePlan = idx.queryBatch(probes, k = 5, nprobe = 4)
       .queryExecution.executedPlan.toString
     assert(!servePlan.contains("Window"),
       s"queryBatch must not rank candidates through a window exchange:\n$servePlan")
     assert(servePlan.contains("top_k_rows"),
       s"queryBatch must cut top-k through the bounded native aggregate:\n$servePlan")
-    val oraclePlan = idx.queryBatchWindowed(probes, k = 5, nprobe = 4)
-      .queryExecution.executedPlan.toString
-    assert(oraclePlan.contains("Window"),
-      "the retained oracle IS the window formulation — if this stops " +
-        "holding the spec is comparing the serving tail to itself")
   }
 
   test("queryBatchDF: a probe FRAME serves exactly like the Seq route — depth column, where, include; routing never windows") {
@@ -310,9 +282,13 @@ class IvfIndexSpec extends AnyFunSuite with SparkTest {
       .select("probe_id", "id", "cell", "distance", "rn").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4)))
       .toSeq.sortBy(t => (t._1, t._5))
-    assert(idx.hotQueryBatch(probes, k = 5, nprobe = 4)
-      .sortBy(t => (t._1, t._5)) == batchCold,
-      "hotQueryBatch must equal queryBatch probe for probe")
+    val hotBatch = probes.flatMap { case (pid, pe) =>
+      idx.hotQuery(pe, k = 5, nprobe = 4).zipWithIndex.map {
+        case ((id, cell, d), i) => (pid, id, cell, d, i + 1)
+      }
+    }
+    assert(hotBatch == batchCold,
+      "hotQuery over the panel must equal queryBatch probe for probe")
   }
 
   test("metadata survives build->append->compact; filtered queries push the predicate") {
@@ -389,6 +365,47 @@ class IvfIndexSpec extends AnyFunSuite with SparkTest {
         .map(r => (r.getLong(0), r.getDouble(2))).toSeq
       assert(batched(pid) == single, s"probe $pid: batched != single-probe result")
       assert(batched(pid).head._1 == pid, "self is the nearest neighbor")
+    }
+    // every batch input, probe for probe against query() at that probe's
+    // depth: mixed per-probe depths (pinned shallow, deep, absent — falling
+    // back to nprobe), the include payload, and a where-filter
+    val panel = Seq(2L, 9L, 33L, 71L, 140L, 256L).map { pid =>
+      (pid + 5000L,
+        vectors.filter(col("id") === pid).head().getSeq[Float](1).toArray)
+    }
+    val depthOf = Map(panel(0)._1 -> 1, panel(2)._1 -> 16, panel(4)._1 -> 3)
+    // (probe_id -> rows in rn order, minus probe_id and rn) — the query()
+    // row shape (id, include..., cell, distance)
+    def perProbe(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Seq[Any]]] =
+      df.collect().groupBy(_.getLong(0)).map { case (pid, rs) =>
+        pid -> rs.sortBy(r => r.getInt(r.length - 1))
+          .map(r => r.toSeq.slice(1, r.length - 1)).toSeq
+      }
+    def single(qe: Array[Float], np: Int, where: Option[org.apache.spark.sql.Column],
+               include: Seq[String]): Seq[Seq[Any]] =
+      idx.query(qe, k = 5, nprobe = np, where = where, include = include)
+        .collect().map(_.toSeq).toSeq
+    // single-probe answers memoized per (probe, depth) — depthOf pins three
+    // probes to the same depth under every uniform nprobe — and fetched
+    // with the emb payload once: the include-free row is that row minus emb
+    val memo = scala.collection.mutable.Map.empty[(Long, Int), Seq[Seq[Any]]]
+    for (np <- Seq(1, 4, 16); include <- Seq(Nil, Seq("emb"))) {
+      val got = perProbe(idx.queryBatch(panel, k = 5, nprobe = np,
+        include = include, depthOf = depthOf))
+      panel.foreach { case (pid, qe) =>
+        val depth = depthOf.getOrElse(pid, np)
+        val withEmb = memo.getOrElseUpdate((pid, depth),
+          single(qe, depth, None, Seq("emb")))
+        assert(got.getOrElse(pid, Nil) ==
+          (if (include.isEmpty) withEmb.map(_.patch(1, Nil, 1)) else withEmb),
+          s"probe $pid nprobe=$np include=$include: batch != query() at the probe's depth")
+      }
+    }
+    val pred = col("id") % 2 === 0
+    val filtered = perProbe(idx.queryBatch(panel, 5, 4, where = Some(pred)))
+    panel.foreach { case (pid, qe) =>
+      assert(filtered.getOrElse(pid, Nil) == single(qe, 4, Some(pred), Nil),
+        s"probe $pid: filtered batch != filtered query()")
     }
   }
 
@@ -616,43 +633,50 @@ class IvfIndexSpec extends AnyFunSuite with SparkTest {
       .map(r0 => (r0.head, r0(1))).toSet
     assert(q.intersect(r).size >= (r.size * 3) / 4,
       s"depth-32 batch recall collapsed: ${q.intersect(r).size}/${r.size}")
+    // every shortlist depth, payload included, probe for probe against the
+    // single-probe queryQuantized (same shortlist, same exact rerank),
+    // fetched with the emb payload once per (probe, shortlist): the
+    // include-free row is that row minus emb
+    for (shortlist <- Seq(4, 32, n)) {
+      val singles = probes.map { case (pid, qe) =>
+        pid -> idx.queryQuantized(qe, k = 4, nprobe = 3, shortlist = shortlist,
+          include = Seq("emb")).collect().map(_.toSeq).toSeq
+      }.toMap
+      for (include <- Seq[Seq[String]](Nil, Seq("emb"))) {
+        val got = idx.queryBatchQuantized(probes, k = 4, nprobe = 3,
+            shortlist = shortlist, include = include).collect()
+          .groupBy(_.getLong(0)).map { case (pid, rs) =>
+            pid -> rs.sortBy(r => r.getInt(r.length - 1))
+              .map(r => r.toSeq.slice(1, r.length - 1)).toSeq
+          }
+        probes.foreach { case (pid, _) =>
+          val single =
+            if (include.isEmpty) singles(pid).map(_.patch(1, Nil, 1)) else singles(pid)
+          assert(got.getOrElse(pid, Nil) == single,
+            s"probe $pid shortlist=$shortlist include=$include: " +
+              "batch != queryQuantized")
+        }
+      }
+    }
   }
 
-  test("queryBatchQuantized shuffles answers, not candidates: bit-equal to its windowed twin at every depth, no Window in the serving plans") {
+  test("queryBatchQuantized shuffles answers, not candidates: no Window in the serving plans") {
     val base = graft.store.Scratch.dir("graft_ivf_sq8bw")
     val vectors = spark.read.parquet(s"$sf001/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("emb"))
     val idx = new IvfIndex(spark, base, numCells = 8)
     idx.build(vectors)
-    val n = vectors.count().toInt
     val probes = vectors.orderBy("id").limit(6).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("probe_id", "rn").collect().map(_.toSeq).toSeq
-    // the r11 measurement applied to this path's own siblings: the SAME
-    // candidate frames (shared impl), only the cut differs — so serving
-    // must be bit-equal to the retained window formulation at bounded AND
-    // full shortlist depth, include payload intact
-    for (shortlist <- Seq(4, 32, n); include <- Seq[Seq[String]](Nil, Seq("emb"))) {
-      assert(rows(idx.queryBatchQuantized(probes, k = 4, nprobe = 3,
-          shortlist = shortlist, include = include)) ==
-        rows(idx.queryBatchQuantizedWindowed(probes, k = 4, nprobe = 3,
-          shortlist = shortlist, include = include)),
-        s"shortlist=$shortlist include=$include: aggregated cuts must be " +
-          "bit-equal to the window formulation")
-    }
     // THE SHAPE CLAIM on the final (rerank) frame: answers cut through the
-    // native bounded aggregate, never a probe-keyed window; the retained
-    // twin IS the window formulation
+    // native bounded aggregate, never a probe-keyed window (the answers
+    // themselves are pinned per probe against queryQuantized in
+    // "queryBatchQuantized at full depth equals queryBatch probe for probe")
     val servePlan = idx.queryBatchQuantized(probes, k = 4, nprobe = 3,
       shortlist = 32).queryExecution.executedPlan.toString
     assert(!servePlan.contains("Window"),
       s"quantized batch serving must not window the rerank:\n$servePlan")
     assert(servePlan.contains("top_k_rows"))
-    val oraclePlan = idx.queryBatchQuantizedWindowed(probes, k = 4, nprobe = 3,
-      shortlist = 32).queryExecution.executedPlan.toString
-    assert(oraclePlan.contains("Window"),
-      "the retained oracle IS the window formulation")
   }
 
   test("routed bulk labeling: routedKnnVotes at full depth equals the exact kNN vote") {

@@ -52,10 +52,8 @@ class PanelDispatchSpec extends AnyFunSuite with SparkTest {
       .select(col("doc_id"), col("text")))
     val panel = Seq(1L -> Seq("vector", "index"), 2L -> Seq("query", "search", "merge"))
     val panelDf = spark.createDataFrame(panel).toDF("probe_id", "terms")
-    val framedPlain = rows(idx.queryRankedBatchDF(panelDf, 5))
     val framedBounded = rows(idx.queryRankedBatchBoundedDF(panelDf, 5))
     withDispatch {
-      assert(rows(idx.queryRankedBatchDF(panelDf, 5)) == framedPlain)
       assert(rows(idx.queryRankedBatchBoundedDF(panelDf, 5)) == framedBounded)
     }
   }
@@ -120,6 +118,47 @@ class PanelDispatchSpec extends AnyFunSuite with SparkTest {
       assert(es.queryIndexedBatchDF("c", probesDf.filter(lit(false)),
         k = 5, nprobe = 4).count() == 0)
     }
+  }
+
+  test("EncryptedStore.queryIndexedBatchDF picks its shortlist regime on the RECOVERED tree after a crashed commit") {
+    val key = "0123456789abcdef"
+    def encRows(df: org.apache.spark.sql.DataFrame) =
+      df.select(concat(lit("id"), col("id")).as("id"),
+        concat(lit("d"), col("id")).as("doc"), col("emb"))
+    // the live generation: 8 physical rows
+    val base = graft.store.Scratch.dir("graft_pd_encrec")
+    val es = new graft.store.EncryptedStore(spark, base, key)
+    es.storeIndexed(encRows(emb.filter(col("id") <= 8)), "c", numCells = 2)
+    // a rebuild over 300 rows crashed after its marker landed, before any
+    // swap: every output fully staged beside its dest, nothing published
+    val next = graft.store.Scratch.dir("graft_pd_encrec_next")
+    new graft.store.EncryptedStore(spark, next, key)
+      .storeIndexed(encRows(emb.filter(col("id") <= 300)), "c", numCells = 6)
+    val dests = Seq("__enc_centroids/c", "__enc_sq8/c", "__enc_radii/c", "c")
+    dests.foreach { d =>
+      assert(new java.io.File(s"$next/$d").renameTo(new java.io.File(s"$base/${d}__stage")))
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/__enc_commit_c"),
+      dests.map(d => s"$base/${d}__stage\t$base/$d").mkString("\n").getBytes("UTF-8"))
+    // k = shortlist = 8: the pre-recovery tree's 8 footer rows fit the
+    // shortlist (the exact twin's regime), the recovered 300 do not (the
+    // quantized twin's)
+    val (k, shortlist, nprobe) = (8, 8, 6)
+    val panel = Seq(3L, 17L, 101L, 150L, 222L, 280L).map { pid =>
+      pid -> emb.filter(col("id") === pid).head().getSeq[Float](1).toArray
+    }
+    val probesDf = spark.createDataFrame(panel.map { case (pid, qe) => (pid, qe.toSeq) })
+      .toDF("probe_id", "qe")
+    val served = withDispatch(rows(es.queryIndexedBatchDF("c", probesDf,
+      k = k, nprobe = nprobe, shortlist = shortlist)))
+    val quantized = rows(es.queryIndexedBatchQuantized("c", panel, k = k,
+      nprobe = nprobe, shortlist = shortlist))
+    val exact = rows(es.queryIndexedBatch("c", panel, k = k, nprobe = nprobe))
+    assert(quantized != exact,
+      "fixture sanity: the two regimes must answer differently at this shortlist")
+    assert(served == quantized,
+      "the regime must be picked on the recovered 300-row tree, not the " +
+        "pre-recovery 8-row one")
   }
 
   test("EncryptedGraph.queryBatchDF dispatches small panels to the driver walk — identical answers, docs included") {

@@ -264,9 +264,13 @@ class RoutedQuerySpec extends AnyFunSuite with SparkTest {
       .select("probe_id", "id", "dist", "rn").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSeq.sortBy(t => (t._1, t._4))
-    assert(idx.hotQueryBatch(bprobes, topK = 5, beamWidth = 8, hops = 3)
-      .sortBy(t => (t._1, t._4)) == batchCold,
-      "hotQueryBatch must equal queryBatch probe for probe")
+    val hotBatch = bprobes.flatMap { case (pid, pe) =>
+      idx.hotQuery(pe, 5, 8, 3).zipWithIndex.map {
+        case ((id, d), i) => (pid, id, d, i + 1)
+      }
+    }
+    assert(hotBatch == batchCold,
+      "hotQuery over the panel must equal queryBatch probe for probe")
     // routed Collection.query serves from the hot tier and matches the
     // explicit index walk payload for payload (the "routed graph query"
     // test pins the same equality on an unmutated index)

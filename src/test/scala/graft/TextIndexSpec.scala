@@ -557,7 +557,7 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
       idx.highlight(Seq("table"), k = 5, window = 8))
   }
 
-  test("queryRankedBatchDF == queryRankedBatch probe for probe: fresh, after deletes, and on the salted join route") {
+  test("queryRankedBatchBoundedDF == queryRanked probe for probe: fresh, after deletes, and on the salted join route") {
     val idx = freshIndex()
     val panel: Seq[(Long, Seq[String])] = Seq(
       11L -> SearchQueries.QueryTerms,
@@ -569,29 +569,28 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getAs[Number](2).longValue, r.getDouble(3), r.getInt(4)))
         .toSeq.sortBy(t => (t._1, t._5))
-    def seqRoute() = rows(idx.queryRankedBatch(panel, 10))
-    def dfRoute() = rows(idx.queryRankedBatchDF(panelDf, 10))
+    // the oracle: queryRanked probe by probe, in the batch row shape
+    def perProbe() = panel.flatMap { case (pid, terms) =>
+      idx.queryRanked(terms, 10).collect()
+        .map(r => (pid, r.getLong(0), r.getAs[Number](1).longValue,
+          r.getDouble(2), r.getInt(3))).toSeq
+    }.sortBy(t => (t._1, t._5))
+    // at the default fanout floor this fixture panel takes the bounded
+    // route's unbounded frame fallback (one postings fanout, in-frame idf)
+    def dfRoute() = rows(idx.queryRankedBatchBoundedDF(panelDf, 10))
     // fresh index: the frame route's in-frame idf (Spark's StrictMath log)
-    // must reproduce the driver-map route's quantized ranking exactly
-    val fresh = seqRoute()
+    // must reproduce the driver-map idf's quantized ranking exactly
+    val fresh = perProbe()
     assert(fresh.nonEmpty, "fixture sanity")
     assert(dfRoute() == fresh,
-      "frame route must serve the Seq route's exact ranked answers")
-    // ... and per probe it is queryRanked's own answer
-    panel.foreach { case (pid, terms) =>
-      val solo = idx.queryRanked(terms, 10).collect()
-        .map(r => (r.getLong(0), r.getAs[Number](1).longValue,
-          r.getDouble(2), r.getInt(3))).toSeq
-      assert(fresh.filter(_._1 == pid).map(t => (t._2, t._3, t._4, t._5)) == solo,
-        s"probe $pid: batch ranks must equal queryRanked")
-    }
+      "frame route must serve queryRanked's exact ranked answers per probe")
     // tombstones correct idf/df/stats identically on both routes
     val dead = fresh.head._2
     idx.delete(Seq(dead))
-    val afterDelete = seqRoute()
+    val afterDelete = perProbe()
     assert(!afterDelete.exists(_._2 == dead))
     assert(dfRoute() == afterDelete,
-      "frame route must apply the tombstone corrections the Seq route does")
+      "frame route must apply the tombstone corrections queryRanked does")
     // the salted keyedProbeJoin route (pairs past the broadcast limit)
     // must be answer-identical to the broadcast route
     spark.conf.set(graft.operators.ProbeJoin.LimitKey, "1")
@@ -601,7 +600,7 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     // duplicate probe_id rows refuse loudly — duplicated (probe, term)
     // pairs would silently double shared terms' contributions
     val eDup = intercept[IllegalArgumentException](
-      idx.queryRankedBatchDF(panelDf.unionByName(panelDf.limit(1)), 10).count())
+      idx.queryRankedBatchBoundedDF(panelDf.unionByName(panelDf.limit(1)), 10).count())
     assert(eDup.getMessage.contains("duplicate probe_id"))
   }
 
@@ -610,7 +609,9 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     val panelDf = spark.createDataFrame(Seq(
         (51L, Seq("vector", "merge")), (52L, Seq("stream", "scan"))))
       .toDF("probe_id", "terms")
-    val plan = idx.queryRankedBatchDF(panelDf, 5)
+    // at the default fanout floor the fixture panel serves through the
+    // bounded route's unbounded frame fallback, whose plan stays lazy
+    val plan = idx.queryRankedBatchBoundedDF(panelDf, 5)
       .queryExecution.executedPlan.toString
     // the per-probe cut is the map-side-bounded aggregate — a probe-keyed
     // window here would shuffle the full per-probe posting fanout
@@ -621,13 +622,13 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     // partition filter, not a post-scan predicate)
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
       s"frame-panel postings scan must partition-prune on bucket:\n$plan")
-    // (the bounded route's tail is the SAME rankedBatchTail by
+    // (the engaged bounded pass cuts through the SAME rankedBatchTail by
     // construction; its probe-side windows are panel-frame volume and its
     // returned frame is checkpointed, so the shape is pinned here via the
-    // shared-code route rather than a second opaque plan string)
+    // fallback rather than a second opaque plan string)
   }
 
-  test("queryRankedBatchBounded == queryRankedBatch: fresh, tiny-k, k past the corpus, and after deletes") {
+  test("queryRankedBatchBounded == queryRanked probe for probe: fresh, tiny-k, k past the corpus, and after deletes") {
     // keep the BOUNDED machinery under test on the fixture corpus (the
     // production fanout floor would route everything here unbounded);
     // session-scoped conf, not a JVM global — suites sharing the JVM
@@ -644,12 +645,22 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getAs[Number](2).longValue, r.getDouble(3), r.getInt(4)))
         .toSeq.sortBy(t => (t._1, t._5))
+    // the oracle: queryRanked probe by probe, in the batch row shape
+    def perProbe(ix: graft.store.TextIndex, pnl: Seq[(Long, Seq[String])],
+                 k: Int) = pnl.flatMap { case (pid, terms) =>
+      ix.queryRanked(terms, k).collect()
+        .map(r => (pid, r.getLong(0), r.getAs[Number](1).longValue,
+          r.getDouble(2), r.getInt(3))).toSeq
+    }.sortBy(t => (t._1, t._5))
+    // ranks are positions in one total order, so each smaller k's oracle
+    // is a rank prefix of the k-past-the-corpus answer
+    val full = perProbe(idx, panel, 100000)
     // k = 1 maximizes θ (tightest pruning) — the case most likely to
     // over-prune if a bound is wrong; k = 10 is the serving shape; a k
     // past every matching doc count disables θ (no k-th candidate) and
     // must degenerate to the exact shape
     for (k <- Seq(1, 10, 100000)) {
-      val plain = rows(idx.queryRankedBatch(panel, k))
+      val plain = full.filter(_._5 <= k)
       assert(rows(idx.queryRankedBatchBounded(panel, k)) == plain,
         s"bounded route must serve the exact ranking at k=$k")
       if (k == 10) assert(plain.nonEmpty, "fixture sanity")
@@ -673,14 +684,14 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
       // (the enclosing test already forces the fanout floor to 0, so the
       // engaged branch really runs on this fixture-sized corpus)
       assert(rows(idx2.queryRankedBatchBounded(skewPanel, 3)) ==
-        rows(idx2.queryRankedBatch(skewPanel, 3)),
+        perProbe(idx2, skewPanel, 3),
         "the engaged bounded path must serve the exact ranking")
     }
     // tombstones shift idf/df/avgdl; stale impact bounds must stay UPPER
     // bounds (the live set only shrank) and the answers stay exact
-    val dead = rows(idx.queryRankedBatch(panel, 10)).head._2
+    val dead = full.head._2
     idx.delete(Seq(dead))
-    val after = rows(idx.queryRankedBatch(panel, 10))
+    val after = perProbe(idx, panel, 10)
     assert(!after.exists(_._2 == dead))
     assert(rows(idx.queryRankedBatchBounded(panel, 10)) == after,
       "bounded route must apply tombstone corrections exactly")
