@@ -1,7 +1,6 @@
 package graft.attack
 
-import graft.functions.{Embedder, HashEmbedder, TextHashOps, VectorFunctions => VF}
-import org.apache.spark.sql.functions._
+import graft.functions.{Embedder, HashEmbedder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -17,14 +16,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * nondeterministic UDFs are a correctness bug under Spark's execution
  * model, SURVEY.md §4.3.2).
  *
- * Scale shape: each generation is ONE narrow Spark job — candidates are
- * exploded from elites, mutated (seeded, keyed), hash-embedded and
- * cosine-scored in whole-stage codegen, then TakeOrdered'd down to the
- * elite set. The loop keeps O(pop_size) per-generation state on the
- * driver (the reference's pop=60 operating point) and breeds each
- * offspring from a keyed plan ([[breedPlan]]). Greedy restarts are
- * embarrassingly parallel: one executor-local hill-climb per restart
- * inside mapPartitions, zero Spark jobs per step.
+ * Scale shape: one Spark job per [[invert]]. A generation is O(pop_size)
+ * small work (the reference's pop=60 operating point), so the evolutionary
+ * loop runs in the driver JVM and launches no job: each candidate is
+ * embedded with [[graft.functions.Embedder.embedOne]] and scored with
+ * [[cosine]] (for the hash embedder, the kernels the codegen `HashEmbed`
+ * and `cosine_sim` expressions run), the elites are cut by [[dedupMax]]'s
+ * key, and each offspring is bred from a keyed plan ([[breedPlan]]).
+ * Greedy restarts are embarrassingly parallel: one executor-local
+ * hill-climb per restart in a single shuffle-free job.
  */
 object Inversion {
 
@@ -125,25 +125,16 @@ object Inversion {
 
   // ---- plain-Scala embed/score (identical math to the Spark columns) ---
 
-  /** Tokenize by delegating to THE kernel ([[TextHashOps.tokenize]]) rather
-    * than reimplementing the lowering: a driver-side Locale.ROOT
-    * `toLowerCase` is still not the same function as
-    * `UTF8String.toLowerCase` for every non-ASCII input (Spark's fallback
-    * path uses the default locale), and the only way driver-side hashes
-    * can never desync from the codegen Tokenize kernel is to run the same
-    * code on both sides. */
-  def tokenize(s: String): Array[String] =
-    tokenizeU(s).map(_.toString)
+  /** The hash embedding of one text: [[HashEmbedder.embedOne]], which runs
+    * the same tokenize/hash kernels as the codegen `Tokenize`/`HashEmbed`. */
+  def embedText(s: String, dim: Int): Array[Float] = HashEmbedder(dim).embedOne(s)
 
-  private def tokenizeU(s: String): Array[org.apache.spark.unsafe.types.UTF8String] =
-    TextHashOps.tokenize(org.apache.spark.unsafe.types.UTF8String.fromString(s))
-      .toArray[org.apache.spark.unsafe.types.UTF8String](
-        org.apache.spark.sql.types.StringType)
-
-  def embedText(s: String, dim: Int): Array[Float] =
-    TextHashOps.hashEmbed(tokenizeU(s), dim)
-
+  /** `cosine_sim`'s width refusal and loop, in the same order, so a JVM
+    * score equals the codegen kernel's bit for bit. */
   def cosine(a: Array[Float], b: Array[Float]): Double = {
+    if (a.length != b.length)
+      throw new IllegalArgumentException(
+        s"cosine_sim: vector dims differ (${a.length} vs ${b.length})")
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < a.length) {
       val x = a(i).toDouble; val y = b(i).toDouble
@@ -165,11 +156,6 @@ object Inversion {
     (0 until nMut).foreach(m => t = mutate(t, mix(p.seed * 7919 + i * 31 + m)))
     t
   }
-
-  /** Initial population: lexicon-seeded phrases, 1-4 mutations each, grown
-    * to popSize (app.py:106-128). */
-  private def seedPopulation(p: Params): Seq[String] =
-    (0 until p.popSize).map(seedOne(p, _))
 
   /** Offspring `i`'s breeding plan in generation `gen` — parent elite
     * index, crossover partner index (−1 for none), and the crossover /
@@ -198,44 +184,47 @@ object Inversion {
                                crossSeed: Long, mutSeed: Long): String =
     mutate(b.fold(a)(bb => crossover(a, bb, crossSeed)), mutSeed)
 
-  /** One generation scored: candidates -> (text, score), descending. The
-    * embed stage goes through the pluggable [[graft.functions.Embedder]]
-    * seam (hash kernel by default; a real model via BatchedModelEmbedder —
-    * either way the scoring plan is the same narrow map + cosine). */
-  private def scoreGeneration(spark: SparkSession, cands: Seq[String],
-                              target: Array[Float], embedder: Embedder): DataFrame = {
-    import spark.implicits._
-    embedder.embed(cands.toDF("text"), "text", "emb")
-      .withColumn("score", VF.cosine(col("emb"), typedlit(target)))
-      .select("text", "score")
+  /** One generation's elites: each candidate embedded through the
+    * [[graft.functions.Embedder]] seam and scored against the target, then
+    * ranked by [[dedupMax]]'s key (score descending, text ascending) and
+    * cut to `nElite`. Duplicate texts stay, as in the population. */
+  private[graft] def elitesOf(population: Seq[String], target: Array[Float],
+                              emb: Embedder, nElite: Int): Seq[Candidate] =
+    population.map(t => Candidate(t, cosine(emb.embedOne(t), target)))
+      .sortBy(c => (-c.score, c.text))
+      .take(nElite)
+
+  /** Refuses Params no loop can run, naming the parameter and its value. */
+  private def checkParams(p: Params): Unit = {
+    require(p.popSize >= 1, s"popSize must be >= 1, got ${p.popSize}")
+    require(p.eliteFrac > 0 && p.eliteFrac <= 1, s"eliteFrac must be in (0, 1], got ${p.eliteFrac}")
+    require(p.generations >= 0, s"generations must be >= 0, got ${p.generations}")
+    require(p.restarts >= 1, s"restarts must be >= 1, got ${p.restarts}")
+    require(p.iters >= 0, s"iters must be >= 0, got ${p.iters}")
+    require(p.topK >= 1, s"topK must be >= 1, got ${p.topK}")
   }
 
   /** Evolutionary attack loop. Returns (deduped per-generation bests,
     * best-score trajectory). Elitism makes the trajectory monotone
     * non-decreasing — the property the reference only eyeballs in its
     * progress prints (app.py:140-141). */
-  def evolutionarySearch(spark: SparkSession, target: Array[Float], p: Params,
+  def evolutionarySearch(target: Array[Float], p: Params,
                          embedder: Option[Embedder] = None): (Seq[Candidate], Seq[Double]) = {
+    checkParams(p)
     val emb = embedder.getOrElse(HashEmbedder(p.dim))
     val nElite = math.ceil(p.popSize * p.eliteFrac).toInt
-    var population = seedPopulation(p)
+    var population: Seq[String] = (0 until p.popSize).map(seedOne(p, _))
     val bests = scala.collection.mutable.ArrayBuffer.empty[Candidate]
     var gen = 0
     var stop = false
     while (gen < p.generations && !stop) {
-      val elites = scoreGeneration(spark, population, target, emb)
-        .orderBy(desc("score"), asc("text"))
-        .limit(nElite)
-        .collect()
-        .map(r => Candidate(r.getString(0), r.getDouble(1)))
-        .toSeq
+      val elites = elitesOf(population, target, emb, nElite)
       bests += elites.head
       if (elites.head.score > p.earlyStop) stop = true
       else {
         // offspring: crossover pairs of elites (p=.12) then mutate, until
         // pop is refilled (app.py:150-168), each offspring from its KEYED
-        // [[breedPlan]]. Driver-side string ops are O(popSize);
-        // embed/score stay distributed.
+        // [[breedPlan]].
         population = elites.map(_.text) ++ (nElite until p.popSize).map { i =>
           val (ai, bi, cs, ms) = breedPlan(p.seed, gen, i, nElite, p.crossoverP)
           breedOne(elites(ai).text,
@@ -249,18 +238,20 @@ object Inversion {
 
   // ---- greedy hill-climb (app.py:174-202) ------------------------------
 
-  /** Greedy restarts, each an executor-local loop (no Spark job per step —
-    * the reference's one-embed-per-iteration shape, app.py:192, is pure
-    * compute and belongs inside the executor). */
+  /** Greedy restarts in ONE shuffle-free Spark job: the restarts are
+    * sliced over min(restarts, defaultParallelism) partitions and each runs
+    * its hill-climb executor-locally (no job per step — the reference's
+    * one-embed-per-iteration shape, app.py:192, is pure compute). The
+    * answer does not depend on the slicing: [[dedupMax]] sorts. */
   def greedySearch(spark: SparkSession, target: Array[Float], p: Params,
                    embedder: Option[Embedder] = None): Seq[Candidate] = {
-    import spark.implicits._
+    checkParams(p)
     val emb = embedder.getOrElse(HashEmbedder(p.dim))
     val bcTarget = spark.sparkContext.broadcast(target)
     val iters = p.iters; val jumpP = p.jumpP; val seed = p.seed
     val lex = Lexicon
-    val out = (0 until p.restarts).toDS()
-      .repartition(math.min(p.restarts, spark.sparkContext.defaultParallelism))
+    val out = spark.sparkContext
+      .parallelize(0 until p.restarts, math.min(p.restarts, spark.sparkContext.defaultParallelism))
       .mapPartitions { it =>
         val tgt = bcTarget.value
         it.map { restart =>
@@ -296,8 +287,9 @@ object Inversion {
   def invert(spark: SparkSession, target: Array[Float], p: Params = Params(),
              embedder: Option[Embedder] = None): DataFrame = {
     import spark.implicits._
+    checkParams(p)
     val merged = dedupMax(
-      evolutionarySearch(spark, target, p, embedder)._1 ++
+      evolutionarySearch(target, p, embedder)._1 ++
         greedySearch(spark, target, p, embedder))
       .take(p.topK)
     merged.zipWithIndex

@@ -22,8 +22,10 @@ trait Embedder extends Serializable {
   /** Append `outCol` (ARRAY<FLOAT>, width [[dim]]) embedding `textCol`. */
   def embed(df: DataFrame, textCol: String, outCol: String): DataFrame
 
-  /** One text — for driver/executor-local loops (the greedy hill-climb
-    * embeds one candidate per step, /root/reference/src/app.py:192). */
+  /** One text — for driver/executor-local loops. Both inversion loops use
+    * it: the evolutionary search scores each generation's candidates in the
+    * driver JVM, and each greedy hill-climb restart embeds one candidate
+    * per step inside its executor task. */
   def embedOne(text: String): Array[Float]
 }
 

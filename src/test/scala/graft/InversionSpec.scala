@@ -34,7 +34,7 @@ class InversionSpec extends AnyFunSuite with SparkTest {
 
   test("evolutionary best-score trajectory is monotone non-decreasing") {
     val target = Inversion.embedText("spark query vector table join filter", 64)
-    val (_, traj) = Inversion.evolutionarySearch(spark, target, small)
+    val (_, traj) = Inversion.evolutionarySearch(target, small)
     assert(traj.nonEmpty)
     assert(traj.zip(traj.tail).forall { case (a, b) => b >= a }, s"trajectory $traj")
   }
@@ -43,13 +43,116 @@ class InversionSpec extends AnyFunSuite with SparkTest {
     val target = Inversion.embedText("spark join batch query", 64)
     // Unreachable threshold -> all generations run.
     val full = small.copy(generations = 8, earlyStop = 2.0)
-    val (_, trajFull) = Inversion.evolutionarySearch(spark, target, full)
+    val (_, trajFull) = Inversion.evolutionarySearch(target, full)
     assert(trajFull.length == 8)
     // Threshold below what generation 0 already achieves -> stop immediately.
     val quick = small.copy(generations = 8, earlyStop = trajFull.head - 1e-9)
-    val (cands, trajQuick) = Inversion.evolutionarySearch(spark, target, quick)
+    val (cands, trajQuick) = Inversion.evolutionarySearch(target, quick)
     assert(trajQuick.length == 1, s"expected immediate stop, got $trajQuick")
     assert(cands.head.score > quick.earlyStop)
+  }
+
+  test("elitesOf ranks a generation exactly as the Spark scoring plan did") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.functions.{HashEmbedder, VectorFunctions => VF}
+    val emb = HashEmbedder(64)
+    val target = Inversion.embedText("spark query vector", 64)
+    // "spark query" / "query spark" embed identically (a tie broken by
+    // text), texts repeat, and "   " has no token (score -1.0)
+    val generation = Seq("spark query", "vector table", "query spark", "   ",
+      "spark query", "join filter", "vector", "query spark", "scan agg 42",
+      "query", "   ", "spark")
+    assert(Inversion.cosine(emb.embedOne("   "), target) == -1.0)
+    val ranked = Inversion.elitesOf(generation, target, emb, generation.length)
+    assert(ranked.map(_.text).sorted == generation.sorted)
+    // the cut at 2 falls inside the four-way "query spark" / "spark query"
+    // tie, the cut at 5 inside the "query" / "spark" / "vector" tie
+    assert(ranked(1).score == ranked(2).score && ranked(4).score == ranked(5).score,
+      ranked.mkString(", "))
+    Seq(1, 2, 3, 5, 7, generation.length).foreach { nElite =>
+      val viaSpark = emb.embed(generation.toDF("text"), "text", "emb")
+        .withColumn("score", VF.cosine(col("emb"), typedlit(target)))
+        .select("text", "score")
+        .orderBy(desc("score"), asc("text"))
+        .limit(nElite)
+        .collect().map(r => Inversion.Candidate(r.getString(0), r.getDouble(1))).toSeq
+      assert(Inversion.elitesOf(generation, target, emb, nElite) == viaSpark, s"nElite = $nElite")
+    }
+  }
+
+  test("Params no loop can run are refused at every entry, naming the parameter and its value") {
+    val target = Inversion.embedText("spark query", 64)
+    val bad = Seq(
+      ("popSize", "0", small.copy(popSize = 0)),
+      ("eliteFrac", "0.0", small.copy(eliteFrac = 0.0)),
+      ("eliteFrac", "1.5", small.copy(eliteFrac = 1.5)),
+      ("generations", "-1", small.copy(generations = -1)),
+      ("restarts", "0", small.copy(restarts = 0)),
+      ("iters", "-1", small.copy(iters = -1)),
+      ("topK", "0", small.copy(topK = 0)))
+    bad.foreach { case (name, value, p) =>
+      val entries = Seq[(String, () => Any)](
+        "invert" -> (() => Inversion.invert(spark, target, p)),
+        "evolutionarySearch" -> (() => Inversion.evolutionarySearch(target, p)),
+        "greedySearch" -> (() => Inversion.greedySearch(spark, target, p)))
+      entries.foreach { case (entry, call) =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(name) && e.getMessage.contains(s"got $value"),
+          s"$entry with $name = $value: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("invert launches exactly one Spark job; evolutionarySearch launches none") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "InversionSpec-job-count"
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          ended.put(e.jobId, false)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ended.computeIfPresent(e.jobId, (_, _) => true)
+    }
+    // listener events arrive asynchronously: wait until every job seen has
+    // ended and no new one has started for 300 ms, bounded at 10 s
+    def drain(): Unit = {
+      val deadline = System.nanoTime() + 10000000000L
+      var quietSince = System.nanoTime()
+      var lastSeen = -1
+      while (System.nanoTime() < deadline &&
+        (ended.containsValue(false) || System.nanoTime() - quietSince < 300000000L)) {
+        if (ended.size != lastSeen) { lastSeen = ended.size; quietSince = System.nanoTime() }
+        Thread.sleep(50)
+      }
+    }
+    def jobsOf(body: => Any): Int = {
+      ended.clear()
+      sc.setJobGroup(group, "InversionSpec job count", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      drain()
+      ended.size
+    }
+    val target = Inversion.embedText("spark query vector table", 64)
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsOf(Inversion.invert(spark, target, small).collect()) == 1)
+      assert(jobsOf(Inversion.evolutionarySearch(target, small)) == 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a target wider or narrower than the embedder's dim is refused, naming both widths") {
+    Seq(32, 128).foreach { w =>
+      val target = Array.tabulate(w)(i => (i % 5).toFloat)
+      Seq[() => Any](
+        () => Inversion.evolutionarySearch(target, small),
+        () => Inversion.invert(spark, target, small)).foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage == s"cosine_sim: vector dims differ (64 vs $w)", e.getMessage)
+      }
+    }
   }
 
   test("full invert is reproducible and ranked") {

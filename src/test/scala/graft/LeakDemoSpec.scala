@@ -51,7 +51,7 @@ class LeakDemoSpec extends AnyFunSuite with SparkTest {
     // similarity toward the leaked embedding
     val p = Inversion.Params(popSize = 12, generations = 3, restarts = 1, iters = 10,
       topK = 3, dim = 64, seed = 11L)
-    val (_, traj) = Inversion.evolutionarySearch(spark, stolen, p)
+    val (_, traj) = Inversion.evolutionarySearch(stolen, p)
     assert(traj.last >= traj.head)
   }
 
