@@ -42,7 +42,6 @@ final class EncryptedGraph(spark: SparkSession, val path: String, key: String) {
   private def vecPath = s"$path/vectors"
   private def graphPath = s"$path/graph"
   private def entriesPath = s"$path/entries"
-  private def beamsPath = s"$path/_beams"
   private def marker = s"$path/_commit"
 
   // finish any interrupted staged publish (build/rotateKey) before reads
@@ -215,64 +214,28 @@ final class EncryptedGraph(spark: SparkSession, val path: String, key: String) {
     * vector; serving never does. */
   def exactBeams(panel: Seq[(Long, Array[Float])], k: Int,
                  ladder: Seq[Int] = Seq(2, 4, 8, 16, 32),
-                 hops: Int = 6): Map[Long, Int] = {
-    require(panel.nonEmpty && panel.length <= 4096,
-      "calibration panel is index-metadata scale")
-    val steps = ladder.distinct.sorted
-    require(steps.nonEmpty && steps.head >= 1, "ladder must be positive")
-    import graft.operators.GroupedTopK
-    import graft.functions.{VectorFunctions => VF}
-    val probesDf = broadcast(spark.createDataFrame(
-      panel.map { case (pid, pe) => (pid, pe.toSeq) }).toDF("pid", "pe"))
-    val exact: Map[Long, Seq[Long]] = vEmb.crossJoin(probesDf)
-      .select(col("pid"), col("id"),
-        VF.l2Sq(col("emb"), col("pe").cast("array<float>")).as("dist"))
-      .groupBy("pid")
-      .agg(GroupedTopK.topK(k)(col("dist"), col("id")).as("ex"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toSeq).toMap
-    val assigned = scala.collection.mutable.HashMap[Long, Int]()
-    var remaining = panel
-    steps.foreach { bw =>
-      if (remaining.nonEmpty) {
-        val got = queryBatch(remaining, k, bw, hops)
-          .collect().groupBy(_.getLong(0))
-          .map { case (pid, rows) => pid -> rows.map(_.getLong(1)).toSet }
-        val (done, left) = remaining.partition { case (pid, _) =>
-          exact.getOrElse(pid, Nil).forall(got.getOrElse(pid, Set.empty)) }
-        done.foreach { case (pid, _) => assigned(pid) = bw }
-        remaining = left
-      }
+                 hops: Int = 6): Map[Long, Int] =
+    GraphWalk.assignBeams(s"EncryptedGraph at $path", panel, ladder, hops)(
+      GraphWalk.exactTopK(spark, vEmb, panel, k, excludeSelf = false)) { (subset, bw) =>
+      queryBatch(subset, k, bw, hops)
+        .collect().groupBy(_.getLong(0))
+        .map { case (pid, rows) => pid -> rows.map(_.getLong(1)).toSet }
     }
-    if (remaining.nonEmpty) {
-      System.err.println(s"[graft] EncryptedGraph at $path: " +
-        s"${remaining.length}/${panel.length} probes not fully recalled at " +
-        s"rung ${steps.last} (hops=$hops) — assigning ladder.max; densify " +
-        "the graph or widen the ladder for a fully-exact policy")
-      remaining.foreach { case (pid, _) => assigned(pid) = steps.last }
-    }
-    panel.map { case (pid, _) => pid -> assigned(pid) }.toMap
-  }
+
+  private lazy val beamSidecar = new PolicySidecar(spark, s"$path/_beams",
+    marker, s"EncryptedGraph at $path", "beam",
+    "the tree changed (rebuild or key rotation)", () => contentFp())
 
   /** Calibrate and persist the panel's beam policy as the `_beams`
-    * sidecar — the [[GraphIndex.persistBeamPolicy]] twin, fenced by
-    * [[contentFp]] so any rebuild OR key rotation sweeps it stale. */
+    * sidecar ([[PolicySidecar]]) — the [[GraphIndex.persistBeamPolicy]]
+    * twin, fenced by [[contentFp]] so any rebuild OR key rotation sweeps
+    * it stale. */
   def persistBeamPolicy(panel: Seq[(Long, Array[Float])], k: Int,
                         ladder: Seq[Int] = Seq(2, 4, 8, 16, 32),
                         hops: Int = 6): Map[Long, Int] =
     WriterLease.withLease(path, "EncryptedGraph.persistBeamPolicy") {
-      val beams = exactBeams(panel, k, ladder, hops)
-      val rows = spark.createDataFrame(beams.toSeq).toDF("pid", "beam")
-      val meta = spark.createDataFrame(
-          Seq((GraphWalk.beamPanelFp(panel, k, ladder, hops), contentFp())))
-        .toDF("panel_fp", "data_fp")
-      StoreIO.commitStaged(Seq(
-        StoreIO.Staged(s"${beamsPath}__stage", beamsPath, st => {
-          rows.coalesce(1).write.mode("overwrite").parquet(s"$st/rows")
-          meta.coalesce(1).write.mode("overwrite").parquet(s"$st/meta")
-        })), marker)
-      beams
+      beamSidecar.write(panel, k, GraphWalk.beamSeed(k, ladder, hops),
+        exactBeams(panel, k, ladder, hops))
     }
 
   /** Policy freshness from file metadata alone ([[IvfIndex.PolicyStatus]]):
@@ -280,14 +243,8 @@ final class EncryptedGraph(spark: SparkSession, val path: String, key: String) {
     * any build or KEY ROTATION commit, Fresh otherwise. */
   def beamPolicyStatus(panel: Seq[(Long, Array[Float])], k: Int,
                        ladder: Seq[Int] = Seq(2, 4, 8, 16, 32),
-                       hops: Int = 6): IvfIndex.PolicyStatus = {
-    if (!new java.io.File(s"$beamsPath/meta/_SUCCESS").exists())
-      return IvfIndex.PolicyAbsent
-    val m = spark.read.parquet(s"$beamsPath/meta").head()
-    if (m.getLong(0) != GraphWalk.beamPanelFp(panel, k, ladder, hops)) IvfIndex.PolicyAbsent
-    else if (m.getString(1) == contentFp()) IvfIndex.PolicyFresh
-    else IvfIndex.PolicyStale
-  }
+                       hops: Int = 6): IvfIndex.PolicyStatus =
+    beamSidecar.status(panel, k, GraphWalk.beamSeed(k, ladder, hops))
 
   /** The committed beam widths — REFUSES unless Fresh (serving at widths
     * measured on a tree that has since changed — or been re-keyed — drops
@@ -295,17 +252,7 @@ final class EncryptedGraph(spark: SparkSession, val path: String, key: String) {
   def beamPolicy(panel: Seq[(Long, Array[Float])], k: Int,
                  ladder: Seq[Int] = Seq(2, 4, 8, 16, 32),
                  hops: Int = 6): Map[Long, Int] =
-    beamPolicyStatus(panel, k, ladder, hops) match {
-      case IvfIndex.PolicyFresh =>
-        spark.read.parquet(s"$beamsPath/rows")
-          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      case IvfIndex.PolicyStale => sys.error(
-        s"beam policy at $beamsPath is STALE — the tree changed since " +
-          "calibration (rebuild or key rotation); persistBeamPolicy() again")
-      case IvfIndex.PolicyAbsent => sys.error(
-        s"no committed beam policy for this panel/knobs under $beamsPath — " +
-          "persistBeamPolicy() first")
-    }
+    beamSidecar.read(panel, k, GraphWalk.beamSeed(k, ladder, hops))
 
   /** Re-encrypt every ciphertext row under `newKey` in ONE staged commit
     * (adjacency and entries are plaintext ids — unchanged). Decrypt+

@@ -1043,58 +1043,47 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
     * (beam_width, hits, probes, recall) ordered by beam_width. */
   def calibrationSweep(panel: Seq[(Long, Array[Float])], k: Int,
                        ladder: Seq[Int], hops: Int): DataFrame = {
-    require(panel.nonEmpty && panel.length <= 4096,
-      "calibration panel is index-metadata scale")
-    val steps = ladder.distinct.sorted
-    require(steps.nonEmpty && steps.head >= 1, "ladder must be positive")
-    import graft.operators.GroupedTopK
-    val probesDf = broadcast(spark.createDataFrame(
-      panel.map { case (pid, pe) => (pid, pe.toSeq) }).toDF("pid", "pe"))
-    val exact: Map[Long, Seq[Long]] = vectors.select(col("id"), col("emb"))
-      .crossJoin(probesDf)
-      .filter(col("id") =!= col("pid"))
-      .select(col("pid"), col("id"), VF.l2Sq(col("emb"), col("pe")).as("dist"))
-      .groupBy("pid")
-      .agg(GroupedTopK.topK(k)(col("dist"), col("id")).as("ex"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toSeq).toMap
-    // ADMISSION-GATED rung walks: hotQuery pins ALL raw floats +
-    // adjacency + payload on the driver, so an index over the
-    // `graft.hot.maxBytes` budget (exactly the case the SQ8 codes tier
-    // exists for) must NOT be calibrated through it — the sweep would OOM
-    // the driver at attach time and pin a raw-float tier the operator
-    // sized the budget to avoid. Over budget, each rung runs the batched
-    // Spark walk instead ([[queryBatch]] — ONE shared walk schedule for
-    // the whole panel per rung, hops In-pruned scans, never panel·hops):
-    // the walk schedule is the same spec-pinned definition, so the
-    // measured recall is identical; only the residency differs.
-    val rungAnswers: Int => Map[Long, Seq[Long]] =
-      if (hotFits()) bw =>
-        panel.map { case (pid, pe) =>
-          pid -> hotQuery(pe, k + 1, bw, hops)
-            .collect { case (id, _) if id != pid => id }.take(k).toSeq
-        }.toMap
-      else bw =>
-        queryBatch(panel, k + 1, bw, hops)
-          .collect()
-          .groupBy(_.getLong(0))
-          .map { case (pid, rows) =>
-            pid -> rows.sortBy(_.getInt(3))
-              .collect { case r if r.getLong(1) != pid => r.getLong(1) }
-              .take(k).toSeq
-          }
+    val steps = GraphWalk.calibrationSteps(panel, ladder)
+    val exact = GraphWalk.exactTopK(spark, vectors, panel, k, excludeSelf = true)
     val rows = steps.map { bw =>
-      val got = rungAnswers(bw)
+      val got = rungWalk(panel, k, bw, hops, excludeSelf = true)
       val hits = panel.map { case (pid, _) =>
-        val g = got.getOrElse(pid, Nil).toSet
-        exact.getOrElse(pid, Nil).count(g)
+        exact.getOrElse(pid, Nil).count(got.getOrElse(pid, Set.empty[Long]))
       }.sum
-      (bw, hits.toLong, panel.length.toLong,
-        new java.math.BigDecimal(hits.toDouble / (panel.length * k))
-          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue())
+      (bw, hits.toLong, panel.length.toLong, PolicySidecar.recall(hits, panel.length, k))
     }
     spark.createDataFrame(rows).toDF("beam_width", "hits", "probes", "recall")
+  }
+
+  /** One calibration rung: each probe's top-`k` answer ids at beam width
+    * `bw`. ADMISSION-GATED: hotQuery pins ALL raw floats + adjacency +
+    * payload on the driver, so an index over the `graft.hot.maxBytes`
+    * budget (exactly the case the SQ8 codes tier exists for) must NOT be
+    * calibrated through it — the sweep would OOM the driver at attach time
+    * and pin a raw-float tier the operator sized the budget to avoid. Over
+    * budget, each rung runs the batched Spark walk instead ([[queryBatch]]
+    * — ONE shared walk schedule for the subset, hops In-pruned scans,
+    * never panel·hops): the walk schedule is the same spec-pinned
+    * definition, so the measured recall is identical; only the residency
+    * differs. `excludeSelf` walks k+1 and drops the probe's own row. */
+  private def rungWalk(subset: Seq[(Long, Array[Float])], k: Int, bw: Int, hops: Int,
+                       excludeSelf: Boolean): Map[Long, Set[Long]] = {
+    val kWalk = if (excludeSelf) k + 1 else k
+    if (hotFits())
+      subset.map { case (pid, pe) =>
+        pid -> hotQuery(pe, kWalk, bw, hops)
+          .collect { case (id, _) if !excludeSelf || id != pid => id }
+          .take(k).toSet
+      }.toMap
+    else
+      queryBatch(subset, kWalk, bw, hops)
+        .collect()
+        .groupBy(_.getLong(0))
+        .map { case (pid, rows) =>
+          pid -> rows.sortBy(_.getInt(3))
+            .collect { case r if !excludeSelf || r.getLong(1) != pid => r.getLong(1) }
+            .take(k).toSet
+        }
   }
 
   /** The SMALLEST ladder beam width whose panel recall@`k` meets
@@ -1104,21 +1093,14 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
     * the deepest measured recall instead of silently serving below it. */
   def calibrateBeam(k: Int, target: Double, panelCap: Int = 64,
                     ladder: Seq[Int] = Seq(2, 4, 8, 16, 32),
-                    hops: Int = 6): Int = {
-    require(target > 0 && target <= 1.0, s"recall target must be in (0, 1]: $target")
-    val panel = vectors.select(col("id"), col("emb"))
-      .orderBy(xxhash64(col("id")), col("id")).limit(panelCap)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-    val sweep = calibrationSweep(panel, k, ladder, hops)
-      .collect().map(r => (r.getInt(0), r.getDouble(3)))
-    sweep.collectFirst { case (bw, rec) if rec >= target => bw }
-      .getOrElse(sys.error(
-        s"no beam width in ${ladder.sorted} reaches recall $target " +
-          s"(deepest rung measured ${sweep.last._2}) — widen the ladder, " +
-          "raise hops, densify the graph (higher k / refineRounds), or " +
-          "lower the target; silently serving below the requested recall " +
-          "is the failure this policy knob exists to prevent"))
-  }
+                    hops: Int = 6): Int =
+    PolicySidecar.pickRung(target, "beam width", "widen the ladder, raise " +
+        "hops, densify the graph (higher k / refineRounds), or lower the target") {
+      val panel = vectors.select(col("id"), col("emb"))
+        .orderBy(xxhash64(col("id")), col("id")).limit(panelCap)
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+      calibrationSweep(panel, k, ladder, hops)
+    }
 
   /** PER-PROBE serving beam widths — the graph twin of
     * [[IvfIndex.exactDepths]], with the honesty caveat the graph imposes:
@@ -1145,67 +1127,12 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
     * convention; serving panels leave it false). */
   def exactBeams(panel: Seq[(Long, Array[Float])], k: Int,
                  ladder: Seq[Int] = Seq(2, 4, 8, 16, 32), hops: Int = 6,
-                 excludeSelf: Boolean = false): Map[Long, Int] = {
-    require(panel.nonEmpty && panel.length <= 4096,
-      "calibration panel is index-metadata scale")
-    val steps = ladder.distinct.sorted
-    require(steps.nonEmpty && steps.head >= 1, "ladder must be positive")
-    import graft.operators.GroupedTopK
-    val probesDf = broadcast(spark.createDataFrame(
-      panel.map { case (pid, pe) => (pid, pe.toSeq) }).toDF("pid", "pe"))
-    val scoredBase = vectors.select(col("id"), col("emb"))
-      .crossJoin(probesDf)
-    val exact: Map[Long, Seq[Long]] =
-      (if (excludeSelf) scoredBase.filter(col("id") =!= col("pid")) else scoredBase)
-        .select(col("pid"), col("id"), VF.l2Sq(col("emb"), col("pe")).as("dist"))
-        .groupBy("pid")
-        .agg(GroupedTopK.topK(k)(col("dist"), col("id")).as("ex"))
-        .collect()
-        .map(r => r.getLong(0) ->
-          r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toSeq).toMap
-    val kWalk = if (excludeSelf) k + 1 else k
-    def walkAnswers(subset: Seq[(Long, Array[Float])], bw: Int): Map[Long, Set[Long]] =
-      if (hotFits())
-        subset.map { case (pid, pe) =>
-          pid -> hotQuery(pe, kWalk, bw, hops)
-            .collect { case (id, _) if !excludeSelf || id != pid => id }
-            .take(k).toSet
-        }.toMap
-      else
-        queryBatch(subset, kWalk, bw, hops)
-          .collect()
-          .groupBy(_.getLong(0))
-          .map { case (pid, rows) =>
-            pid -> rows.sortBy(_.getInt(3))
-              .collect { case r if !excludeSelf || r.getLong(1) != pid => r.getLong(1) }
-              .take(k).toSet
-          }
-    val assigned = scala.collection.mutable.HashMap[Long, Int]()
-    var remaining = panel
-    steps.foreach { bw =>
-      if (remaining.nonEmpty) {
-        val got = walkAnswers(remaining, bw)
-        val (done, left) = remaining.partition { case (pid, _) =>
-          exact.getOrElse(pid, Nil).forall(got.getOrElse(pid, Set.empty))
-        }
-        done.foreach { case (pid, _) => assigned(pid) = bw }
-        remaining = left
-      }
-    }
-    if (remaining.nonEmpty) {
-      System.err.println(s"[graft] GraphIndex at $path: " +
-        s"${remaining.length}/${panel.length} probes not fully recalled at " +
-        s"the widest rung ${steps.last} (hops=$hops) — assigning ladder.max; " +
-        "densify the graph (higher k / refineRounds), raise hops, or widen " +
-        "the ladder for a fully-exact per-probe policy")
-      remaining.foreach { case (pid, _) => assigned(pid) = steps.last }
-    }
-    panel.map { case (pid, _) => pid -> assigned(pid) }.toMap
-  }
+                 excludeSelf: Boolean = false): Map[Long, Int] =
+    GraphWalk.assignBeams(s"GraphIndex at $path", panel, ladder, hops)(
+      GraphWalk.exactTopK(spark, vectors, panel, k, excludeSelf))(
+      rungWalk(_, k, _, hops, excludeSelf))
 
   // ------------------------------------ persisted per-probe beam policy
-
-  private def beamsPath = s"$path/_beams"
 
   /** Publish identity for the POLICY fence — [[StoreIO.treeFp]] over every
     * data/sidecar tree plus the replay fence, NOT [[hotKey]]: hotKey
@@ -1220,15 +1147,9 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
     Seq(vecPath, graphPath, entriesPath, sq8Path, pqPath, tombstonePath)
       .map(StoreIO.treeFp).mkString("|") + s"|${tombstoneHwm()}"
 
-  /** Panel identity for the policy sidecar — the
-    * [[IvfIndex.persistDepthPolicy]] fingerprint discipline, widened to
-    * the knobs a beam policy is ALSO a statement about: (k, hops, the
-    * ladder) plus a per-probe hash of (pid, embedding float bits),
-    * order-independent. Beams measured at other hops, another ladder, or
-    * for other probes guarantee nothing. */
-  private def beamPanelFp(panel: Seq[(Long, Array[Float])], k: Int,
-                          ladder: Seq[Int], hops: Int): Long =
-    GraphWalk.beamPanelFp(panel, k, ladder, hops)
+  private lazy val beamSidecar = new PolicySidecar(spark, s"$path/_beams",
+    marker, s"GraphIndex at $path", "beam",
+    "the graph changed (insert/delete/compact/build)", () => policyKey())
 
   /** Calibrate [[exactBeams]] for a STANDING probe panel and persist the
     * map as a `_beams` sidecar beside the graph — the graph twin of
@@ -1249,19 +1170,8 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
                         ladder: Seq[Int] = Seq(2, 4, 8, 16, 32), hops: Int = 6,
                         precomputed: Option[Map[Long, Int]] = None): Map[Long, Int] =
     WriterLease.withLease(path, "GraphIndex.persistBeamPolicy") {
-      val beams = precomputed.getOrElse(exactBeams(panel, k, ladder, hops))
-      require(panel.map(_._1).toSet == beams.keySet,
-        "precomputed beams must cover exactly the panel's probe ids")
-      val rows = spark.createDataFrame(beams.toSeq).toDF("pid", "beam")
-      val meta = spark.createDataFrame(
-          Seq((beamPanelFp(panel, k, ladder, hops), policyKey())))
-        .toDF("panel_fp", "data_fp")
-      StoreIO.commitStaged(Seq(
-        StoreIO.Staged(s"${beamsPath}__stage", beamsPath, st => {
-          rows.coalesce(1).write.mode("overwrite").parquet(s"$st/rows")
-          meta.coalesce(1).write.mode("overwrite").parquet(s"$st/meta")
-        })), marker)
-      beams
+      beamSidecar.write(panel, k, GraphWalk.beamSeed(k, ladder, hops),
+        precomputed.getOrElse(exactBeams(panel, k, ladder, hops)))
     }
 
   /** Freshness of the committed beam policy for (panel, k, ladder, hops):
@@ -1272,14 +1182,8 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
     * parquet read — no corpus jobs. */
   def beamPolicyStatus(panel: Seq[(Long, Array[Float])], k: Int,
                        ladder: Seq[Int] = Seq(2, 4, 8, 16, 32),
-                       hops: Int = 6): IvfIndex.PolicyStatus = {
-    if (!new java.io.File(s"$beamsPath/meta/_SUCCESS").exists())
-      return IvfIndex.PolicyAbsent
-    val m = spark.read.parquet(s"$beamsPath/meta").head()
-    if (m.getLong(0) != beamPanelFp(panel, k, ladder, hops)) IvfIndex.PolicyAbsent
-    else if (m.getString(1) == policyKey()) IvfIndex.PolicyFresh
-    else IvfIndex.PolicyStale
-  }
+                       hops: Int = 6): IvfIndex.PolicyStatus =
+    beamSidecar.status(panel, k, GraphWalk.beamSeed(k, ladder, hops))
 
   /** The committed per-probe beam widths for (panel, k, ladder, hops) —
     * REFUSES (fail-loud) unless the policy is [[IvfIndex.PolicyFresh]]:
@@ -1290,19 +1194,7 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
   def beamPolicy(panel: Seq[(Long, Array[Float])], k: Int,
                  ladder: Seq[Int] = Seq(2, 4, 8, 16, 32),
                  hops: Int = 6): Map[Long, Int] =
-    beamPolicyStatus(panel, k, ladder, hops) match {
-      case IvfIndex.PolicyFresh =>
-        spark.read.parquet(s"$beamsPath/rows")
-          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      case IvfIndex.PolicyStale => sys.error(
-        s"beam policy at $beamsPath is STALE — the graph changed since " +
-          "calibration (insert/delete/compact/build), so the stored widths " +
-          "carry no recall evidence; persistBeamPolicy() again or route " +
-          "through beamPolicyOrRecalibrate()")
-      case IvfIndex.PolicyAbsent => sys.error(
-        s"no committed beam policy for this panel/knobs under $beamsPath " +
-          "— persistBeamPolicy() first")
-    }
+    beamSidecar.read(panel, k, GraphWalk.beamSeed(k, ladder, hops))
 
   /** [[beamPolicy]] with LOUD self-healing: a fresh policy reads straight
     * from the sidecar (zero calibration jobs — the reopen path); an
@@ -1311,14 +1203,8 @@ final class GraphIndex(spark: SparkSession, val path: String, k: Int,
   def beamPolicyOrRecalibrate(panel: Seq[(Long, Array[Float])], k: Int,
                               ladder: Seq[Int] = Seq(2, 4, 8, 16, 32),
                               hops: Int = 6): Map[Long, Int] =
-    beamPolicyStatus(panel, k, ladder, hops) match {
-      case IvfIndex.PolicyFresh => beamPolicy(panel, k, ladder, hops)
-      case status =>
-        System.err.println(s"[graft] GraphIndex at $path: beam policy " +
-          s"$status for k=$k panel — recalibrating ${panel.length} probes " +
-          "and re-persisting")
-        persistBeamPolicy(panel, k, ladder, hops)
-    }
+    beamSidecar.readOrRecalibrate(panel, k, GraphWalk.beamSeed(k, ladder, hops))(
+      persistBeamPolicy(panel, k, ladder, hops))
 
   /** [[hotServe]] over a probe batch (the `Collection.queryBatch` hot
     * path): one state check, rows tagged by query index. */

@@ -216,17 +216,73 @@ private[store] object GraphWalk {
     else lit(math.max(1, beamWidth))
   }
 
-  /** Panel identity for a beam-policy sidecar — (k, hops, ladder) plus a
-    * per-probe hash of (pid, embedding float bits), order-independent.
-    * Shared by the plaintext and encrypted `_beams` fences so a policy can
-    * never be mistaken across twins' formats. */
-  def beamPanelFp(panel: Seq[(Long, Array[Float])], k: Int,
-                  ladder: Seq[Int], hops: Int): Long = {
-    val knobs = ladder.distinct.sorted
+  /** The [[PolicySidecar.panelFp]] seed of a beam policy: (k, hops, the
+    * ladder) — the knobs a beam is ALSO a statement about. Shared by the
+    * plaintext and encrypted `_beams` fences. */
+  def beamSeed(k: Int, ladder: Seq[Int], hops: Int): Long =
+    ladder.distinct.sorted
       .foldLeft(k.toLong * 1000003L + hops)((a, b) => a * 31L + b)
-    panel.map { case (pid, pe) =>
-      pid * 1000003L + java.util.Arrays.hashCode(pe).toLong
-    }.sorted.foldLeft(knobs)((acc, h) => acc * 6364136223846793005L + h)
+
+  /** A beam calibration's rungs: `ladder` distinct and sorted, after the
+    * panel and ladder guards. */
+  def calibrationSteps(panel: Seq[(Long, Array[Float])], ladder: Seq[Int]): Seq[Int] = {
+    require(panel.nonEmpty && panel.length <= 4096,
+      "calibration panel is index-metadata scale")
+    val steps = ladder.distinct.sorted
+    require(steps.nonEmpty && steps.head >= 1, "ladder must be positive")
+    steps
+  }
+
+  /** Each probe's exact top-`k` ids over the (id, emb) frame `vEmb` — the
+    * exact arm of a beam calibration, ONE scored panel × corpus pass.
+    * `excludeSelf` drops the probe's own row (the self-panel convention). */
+  def exactTopK(spark: SparkSession, vEmb: DataFrame, panel: Seq[(Long, Array[Float])],
+                k: Int, excludeSelf: Boolean): Map[Long, Seq[Long]] = {
+    val probes = broadcast(spark.createDataFrame(
+      panel.map { case (pid, pe) => (pid, pe.toSeq) }).toDF("pid", "pe"))
+    val pairs = vEmb.select(col("id"), col("emb")).crossJoin(probes)
+    (if (excludeSelf) pairs.filter(col("id") =!= col("pid")) else pairs)
+      .select(col("pid"), col("id"), VF.l2Sq(col("emb"), col("pe")).as("dist"))
+      .groupBy("pid")
+      .agg(graft.operators.GroupedTopK.topK(k)(col("dist"), col("id")).as("ex"))
+      .collect()
+      .map(r => r.getLong(0) ->
+        r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toSeq).toMap
+  }
+
+  /** Measured-minimal per-probe beam widths: probe p gets the smallest
+    * `ladder` rung whose `walk` (the answer ids per probe of a subset at
+    * one width) recalls p's ENTIRE `exact` top-k; each rung walks only the
+    * still-unassigned probes. A probe no rung serves fully gets
+    * `ladder.max` WITH a stderr note naming `owner` — silently
+    * under-serving one probe is the failure the policy exists to
+    * prevent. */
+  def assignBeams(owner: String, panel: Seq[(Long, Array[Float])], ladder: Seq[Int],
+                  hops: Int)(exact: => Map[Long, Seq[Long]])(
+      walk: (Seq[(Long, Array[Float])], Int) => Map[Long, Set[Long]]): Map[Long, Int] = {
+    val steps = calibrationSteps(panel, ladder)
+    val ex = exact
+    val assigned = scala.collection.mutable.HashMap[Long, Int]()
+    var remaining = panel
+    steps.foreach { bw =>
+      if (remaining.nonEmpty) {
+        val got = walk(remaining, bw)
+        val (done, left) = remaining.partition { case (pid, _) =>
+          ex.getOrElse(pid, Nil).forall(got.getOrElse(pid, Set.empty))
+        }
+        done.foreach { case (pid, _) => assigned(pid) = bw }
+        remaining = left
+      }
+    }
+    if (remaining.nonEmpty) {
+      System.err.println(s"[graft] $owner: " +
+        s"${remaining.length}/${panel.length} probes not fully recalled at " +
+        s"the widest rung ${steps.last} (hops=$hops) — assigning ladder.max; " +
+        "densify the graph (higher k / refineRounds), raise hops, or widen " +
+        "the ladder for a fully-exact per-probe policy")
+      remaining.foreach { case (pid, _) => assigned(pid) = steps.last }
+    }
+    panel.map { case (pid, _) => pid -> assigned(pid) }.toMap
   }
 
   /** Medoids of `numEntries` deterministically-trained k-means cells —

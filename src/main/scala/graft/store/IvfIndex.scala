@@ -858,17 +858,7 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     // index is by definition under that maintenance policy (an unbounded
     // generation count would degrade the Spark probes' partition
     // discovery long before this stat walk).
-    def treeFp(f: java.io.File): String = {
-      val b = new StringBuilder
-      def walk(x: java.io.File): Unit = {
-        b.append(x.getName).append(':').append(x.lastModified).append(':')
-          .append(if (x.isFile) x.length else -1L).append(';')
-        if (x.isDirectory)
-          Option(x.listFiles()).getOrElse(Array.empty).sortBy(_.getName).foreach(walk)
-      }
-      walk(f); b.toString
-    }
-    s"${treeFp(new java.io.File(dataPath))}|${treeFp(new java.io.File(tombstonePath))}|" +
+    s"${StoreIO.treeFp(dataPath)}|${StoreIO.treeFp(tombstonePath)}|" +
       s"${tombstoneHwm()}|${dirFileFp(new java.io.File(centroidPath))}"
   }
 
@@ -1416,22 +1406,12 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * full-probe rung serves every cell, so recall 1.0 is always present
     * and any target ≤ 1 terminates. */
   def calibrateNprobe(k: Int, target: Double, panelCap: Int = 64,
-                      ladder: Seq[Int] = Nil): Int = {
-    require(target > 0 && target <= 1.0, s"recall target must be in (0, 1]: $target")
-    val steps =
-      if (ladder.nonEmpty) ladder
-      else (Iterator.iterate(1)(_ * 2).takeWhile(_ < numCells).toSeq :+ numCells)
-    val sweep = calibrationSweep(calibrationPanel(panelCap), k, steps,
-        excludeSelf = true)
-      .collect().map(r => (r.getInt(0), r.getDouble(3)))
-    sweep.collectFirst { case (p, rec) if rec >= target => p }
-      .getOrElse(sys.error(
-        s"no ladder depth reaches recall $target (deepest rung " +
-          s"${steps.max} measured ${sweep.last._2}) — include numCells " +
-          "(the exact rung, recall 1.0) in the ladder or lower the target; " +
-          "silently serving below the requested recall is the failure this " +
-          "policy knob exists to prevent"))
-  }
+                      ladder: Seq[Int] = Nil): Int =
+    PolicySidecar.pickRung(target, "depth", "include numCells (the exact " +
+        "rung, recall 1.0) in the ladder or lower the target") {
+      calibrationSweep(calibrationPanel(panelCap), k,
+        PolicySidecar.depthLadder(ladder, numCells), excludeSelf = true)
+    }
 
   /** [[calibrateNprobe]]'s probe panel: the `panelCap` live rows first in
     * deterministic xxhash64-of-id order — a fixed-COUNT pseudo-random
@@ -1447,42 +1427,26 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
 
   private def depthsPath = s"$path/_depths"
 
-  /** Panel identity for the policy sidecar: k plus a per-probe hash of
-    * (pid, embedding float bits), order-independent. A policy is only
-    * meaningful for EXACTLY the panel+k it was calibrated for — depths
-    * exact at another k, or for other probes, guarantee nothing. */
-  private def panelFp(panel: Seq[(Long, Array[Float])], k: Int): Long =
-    panel.map { case (pid, pe) =>
-      pid * 1000003L + java.util.Arrays.hashCode(pe).toLong
-    }.sorted.foldLeft(k.toLong)((acc, h) => acc * 6364136223846793005L + h)
+  private lazy val depthSidecar = new PolicySidecar(spark, depthsPath, marker,
+    s"IvfIndex at $path", "depth", "the index content changed (append/delete/retrain)",
+    () => hotKey())
 
   /** Calibrate [[exactDepths]] for a STANDING probe panel and persist the
-    * map as a `_depths` sidecar beside the cells — the step that turns a
-    * chunk index into a REOPENABLE serving artifact (the encrypted twin's
-    * `storeIndexed(recallTarget=)` discipline): a server process reopening
-    * the path serves at the committed depths without re-running the
-    * panel × corpus calibration pass. The sidecar records the panel+k
-    * fingerprint AND the index content fingerprint, so [[depthPolicy]] can
-    * FENCE staleness — depths calibrated before an append/retrain carry no
-    * exactness proof afterwards. `precomputed` lets a caller that just ran
-    * [[exactDepths]] (the streamed-maintenance hook) persist without a
-    * second calibration pass — it MUST be that exact panel's fresh result. */
+    * map as a `_depths` sidecar beside the cells ([[PolicySidecar]]) — the
+    * step that turns a chunk index into a REOPENABLE serving artifact (the
+    * encrypted twin's `storeIndexed(recallTarget=)` discipline): a server
+    * process reopening the path serves at the committed depths without
+    * re-running the panel × corpus calibration pass. The sidecar records
+    * the panel+k fingerprint AND the index content fingerprint, so
+    * [[depthPolicy]] can FENCE staleness — depths calibrated before an
+    * append/retrain carry no exactness proof afterwards. `precomputed`
+    * lets a caller that just ran [[exactDepths]] (the streamed-maintenance
+    * hook) persist without a second calibration pass — it MUST be that
+    * exact panel's fresh result. */
   def persistDepthPolicy(panel: Seq[(Long, Array[Float])], k: Int,
                          precomputed: Option[Map[Long, Int]] = None): Map[Long, Int] =
     WriterLease.withLease(path, "IvfIndex.persistDepthPolicy") {
-      val depths = precomputed.getOrElse(exactDepths(panel, k))
-      require(panel.map(_._1).toSet == depths.keySet,
-        "precomputed depths must cover exactly the panel's probe ids")
-      val rows = spark.createDataFrame(depths.toSeq).toDF("pid", "depth")
-      val meta = spark.createDataFrame(
-          Seq((k, panelFp(panel, k), hotKey())))
-        .toDF("k", "panel_fp", "data_fp")
-      StoreIO.commitStaged(Seq(
-        StoreIO.Staged(s"${depthsPath}__stage", depthsPath, st => {
-          rows.coalesce(1).write.mode("overwrite").parquet(s"$st/rows")
-          meta.coalesce(1).write.mode("overwrite").parquet(s"$st/meta")
-        })), marker)
-      depths
+      depthSidecar.write(panel, k, k, precomputed.getOrElse(exactDepths(panel, k)))
     }
 
   /** Freshness of the committed policy for (panel, k): [[IvfIndex.PolicyAbsent]]
@@ -1491,13 +1455,8 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * fingerprint still matches, [[IvfIndex.PolicyStale]] after any
     * content-changing commit. Driver-side file metadata + one tiny parquet
     * read — no corpus jobs. */
-  def depthPolicyStatus(panel: Seq[(Long, Array[Float])], k: Int): IvfIndex.PolicyStatus = {
-    if (!new java.io.File(s"$depthsPath/meta/_SUCCESS").exists()) return IvfIndex.PolicyAbsent
-    val m = spark.read.parquet(s"$depthsPath/meta").head()
-    if (m.getInt(0) != k || m.getLong(1) != panelFp(panel, k)) IvfIndex.PolicyAbsent
-    else if (m.getString(2) == hotKey()) IvfIndex.PolicyFresh
-    else IvfIndex.PolicyStale
-  }
+  def depthPolicyStatus(panel: Seq[(Long, Array[Float])], k: Int): IvfIndex.PolicyStatus =
+    depthSidecar.status(panel, k, k)
 
   /** The committed per-probe depths for (panel, k) — REFUSES (fail-loud)
     * unless the policy is [[IvfIndex.PolicyFresh]]: serving at stale depths
@@ -1505,19 +1464,7 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * exists to prevent. Callers that prefer self-healing use
     * [[depthPolicyOrRecalibrate]]. */
   def depthPolicy(panel: Seq[(Long, Array[Float])], k: Int): Map[Long, Int] =
-    depthPolicyStatus(panel, k) match {
-      case IvfIndex.PolicyFresh =>
-        spark.read.parquet(s"$depthsPath/rows")
-          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      case IvfIndex.PolicyStale => sys.error(
-        s"depth policy at $depthsPath is STALE — the index content changed " +
-          "since calibration (append/delete/retrain), so the stored depths " +
-          "no longer guarantee exact serving; persistDepthPolicy() again or " +
-          "route through depthPolicyOrRecalibrate()")
-      case IvfIndex.PolicyAbsent => sys.error(
-        s"no committed depth policy for this panel at k=$k under $depthsPath " +
-          "— persistDepthPolicy() first")
-    }
+    depthSidecar.read(panel, k, k)
 
   /** [[depthPolicy]] with LOUD self-healing: a fresh policy reads straight
     * from the sidecar (zero calibration jobs — the reopen path); an absent
@@ -1525,14 +1472,7 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * recalibration so drift is never silent. The returned map is always
     * provably exact for the CURRENT index content. */
   def depthPolicyOrRecalibrate(panel: Seq[(Long, Array[Float])], k: Int): Map[Long, Int] =
-    depthPolicyStatus(panel, k) match {
-      case IvfIndex.PolicyFresh => depthPolicy(panel, k)
-      case status =>
-        System.err.println(s"[graft] IvfIndex at $path: depth policy " +
-          s"$status for k=$k panel — recalibrating ${panel.length} probes " +
-          "and re-persisting")
-        persistDepthPolicy(panel, k)
-    }
+    depthSidecar.readOrRecalibrate(panel, k, k)(persistDepthPolicy(panel, k))
 
   /** EXACT range search: every live row within PLAIN L2 distance
     * `radius` of the probe — the third classic vector-search surface

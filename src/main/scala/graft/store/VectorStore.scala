@@ -1759,9 +1759,7 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
     }
     val rows = steps.map { p =>
       val hits = perProbe.map(_.count(_ <= p)).sum
-      (p, hits.toLong, panel.length.toLong,
-        new java.math.BigDecimal(hits.toDouble / (panel.length * k))
-          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue())
+      (p, hits.toLong, panel.length.toLong, PolicySidecar.recall(hits, panel.length, k))
     }
     spark.createDataFrame(rows).toDF("nprobe", "hits", "probes", "recall")
   }
@@ -1772,22 +1770,14 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
     * exact by construction, the fail-loud unreachable-target contract).
     * Only a key holder can run it; serving itself stays on ciphertext. */
   def calibrateNprobe(name: String, k: Int, target: Double,
-                      panelCap: Int = 64, ladder: Seq[Int] = Nil): Int = {
-    require(target > 0 && target <= 1.0, s"recall target must be in (0, 1]: $target")
-    val numCells = centroidsOf(name).length
-    require(numCells > 0, s"$name has no encrypted centroid sidecar — storeIndexed() first")
-    val steps =
-      if (ladder.nonEmpty) ladder
-      else (Iterator.iterate(1)(_ * 2).takeWhile(_ < numCells).toSeq :+ numCells)
-    val sweep = calibrationSweep(name, calibrationPanel(name, panelCap), k, steps,
-        excludeSelf = true)
-      .collect().map(r => (r.getInt(0), r.getDouble(3)))
-    sweep.collectFirst { case (p, rec) if rec >= target => p }
-      .getOrElse(sys.error(
-        s"no ladder depth reaches recall $target (deepest rung " +
-          s"${steps.max} measured ${sweep.last._2}) — include numCells " +
-          "(the exact rung, recall 1.0) in the ladder or lower the target"))
-  }
+                      panelCap: Int = 64, ladder: Seq[Int] = Nil): Int =
+    PolicySidecar.pickRung(target, "depth", "include numCells (the exact " +
+        "rung, recall 1.0) in the ladder or lower the target") {
+      val numCells = centroidsOf(name).length
+      require(numCells > 0, s"$name has no encrypted centroid sidecar — storeIndexed() first")
+      calibrationSweep(name, calibrationPanel(name, panelCap), k,
+        PolicySidecar.depthLadder(ladder, numCells), excludeSelf = true)
+    }
 
   /** PER-PROBE exact serving depths on CIPHERTEXT —
     * [[graft.store.IvfIndex.exactDepths]]'s encrypted twin, the policy the
@@ -1849,13 +1839,10 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
       encSq8Path(name), encPqPath(name), encRadiiPath(name))
       .map(StoreIO.treeFp).mkString("|") + s"|${encAppendHwm(name)}"
 
-  /** [[graft.store.IvfIndex.panelFp]]'s convention on the encrypted twin:
-    * k plus a per-probe hash of (pid, embedding float bits),
-    * order-independent. */
-  private def encPanelFp(panel: Seq[(Long, Array[Float])], k: Int): Long =
-    panel.map { case (pid, pe) =>
-      pid * 1000003L + java.util.Arrays.hashCode(pe).toLong
-    }.sorted.foldLeft(k.toLong)((acc, h) => acc * 6364136223846793005L + h)
+  private def depthSidecar(name: String) = new PolicySidecar(spark,
+    encDepthsPath(name), encMarker(name), s"EncryptedStore collection $name",
+    "depth", "the collection changed (append/delete/compact/retrain/rotate)",
+    () => encContentFp(name), seal = Some((encrypt _, decryptStr _)))
 
   /** Calibrate [[exactDepths]] for a STANDING probe panel and persist the
     * map as an ENCRYPTED `__enc_depths` sidecar —
@@ -1876,22 +1863,8 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
                          probe0: Int = 4,
                          precomputed: Option[Map[Long, Int]] = None): Map[Long, Int] =
     withEncLease(name, "EncryptedStore.persistDepthPolicy") {
-      val depths = precomputed.getOrElse(exactDepths(name, panel, k, probe0))
-      require(panel.map(_._1).toSet == depths.keySet,
-        "precomputed depths must cover exactly the panel's probe ids")
-      val rows = spark.createDataFrame(
-          depths.toSeq.map { case (pid, d) => (pid, d.toString) })
-        .toDF("pid", "depth_j")
-        .select(col("pid"), encrypt(col("depth_j")).as("depth_ct"))
-      val meta = spark.createDataFrame(
-          Seq((k, encPanelFp(panel, k), encContentFp(name))))
-        .toDF("k", "panel_fp", "data_fp")
-      StoreIO.commitStaged(Seq(
-        StoreIO.Staged(s"${encDepthsPath(name)}__stage", encDepthsPath(name), st => {
-          rows.coalesce(1).write.mode("overwrite").parquet(s"$st/rows")
-          meta.coalesce(1).write.mode("overwrite").parquet(s"$st/meta")
-        })), encMarker(name))
-      depths
+      depthSidecar(name).write(panel, k, k,
+        precomputed.getOrElse(exactDepths(name, panel, k, probe0)))
     }
 
   /** Freshness of the committed policy for (panel, k) — the
@@ -1899,14 +1872,8 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
     * Driver-side metadata plus one tiny parquet read; the ENCRYPTED rows
     * are never touched here, so the check works under any key. */
   def depthPolicyStatus(name: String, panel: Seq[(Long, Array[Float])],
-                        k: Int): IvfIndex.PolicyStatus = {
-    if (!new java.io.File(s"${encDepthsPath(name)}/meta/_SUCCESS").exists())
-      return IvfIndex.PolicyAbsent
-    val m = spark.read.parquet(s"${encDepthsPath(name)}/meta").head()
-    if (m.getInt(0) != k || m.getLong(1) != encPanelFp(panel, k)) IvfIndex.PolicyAbsent
-    else if (m.getString(2) == encContentFp(name)) IvfIndex.PolicyFresh
-    else IvfIndex.PolicyStale
-  }
+                        k: Int): IvfIndex.PolicyStatus =
+    depthSidecar(name).status(panel, k, k)
 
   /** The committed per-probe depths — REFUSES unless
     * [[IvfIndex.PolicyFresh]] (serving at stale depths silently drops the
@@ -1915,20 +1882,7 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
     * decrypt). */
   def depthPolicy(name: String, panel: Seq[(Long, Array[Float])],
                   k: Int): Map[Long, Int] =
-    depthPolicyStatus(name, panel, k) match {
-      case IvfIndex.PolicyFresh =>
-        spark.read.parquet(s"${encDepthsPath(name)}/rows")
-          .select(col("pid"), decryptStr(col("depth_ct")).cast("int").as("d"))
-          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      case IvfIndex.PolicyStale => sys.error(
-        s"encrypted depth policy for $name is STALE — the collection " +
-          "changed since calibration (append/delete/compact/retrain/rotate), " +
-          "so the stored depths no longer guarantee exact serving; " +
-          "persistDepthPolicy() again or route through depthPolicyOrRecalibrate()")
-      case IvfIndex.PolicyAbsent => sys.error(
-        s"no committed encrypted depth policy for this panel at k=$k for " +
-          s"$name — persistDepthPolicy() first")
-    }
+    depthSidecar(name).read(panel, k, k)
 
   /** [[depthPolicy]] with LOUD self-healing — a fresh policy reads from
     * the sidecar (|panel| decrypts, zero calibration jobs); an absent or
@@ -1936,14 +1890,8 @@ final class EncryptedStore(spark: SparkSession, basePath: String, key: String) {
     * re-persists under THIS store's key. */
   def depthPolicyOrRecalibrate(name: String, panel: Seq[(Long, Array[Float])],
                                k: Int, probe0: Int = 4): Map[Long, Int] =
-    depthPolicyStatus(name, panel, k) match {
-      case IvfIndex.PolicyFresh => depthPolicy(name, panel, k)
-      case status =>
-        System.err.println(s"[graft] EncryptedStore collection $name: depth " +
-          s"policy $status for k=$k panel — recalibrating ${panel.length} " +
-          "probes and re-persisting")
-        persistDepthPolicy(name, panel, k, probe0)
-    }
+    depthSidecar(name).readOrRecalibrate(panel, k, k)(
+      persistDepthPolicy(name, panel, k, probe0))
 
   private def encPolicyPath(name: String) = s"$basePath/__enc_policy/$name"
 
