@@ -361,11 +361,18 @@ object SearchQueries {
     * (sq desc, doc_id) total order); sem ranks come from the per-probe
     * exact-depth L2 shortlist re-ranked by cosine (unit vectors:
     * cos = 1 − d²/2, the [[RagCosMargin]] slack argument), so both
-    * fusion inputs are exactly the persisted arms' answers. */
+    * fusion inputs are exactly the persisted arms' answers.
+    *
+    * Routing: when both arms fit the hot budget the answer comes from
+    * their resident tiers ([[hybridServeHot]]) as a local relation BOUND
+    * AT CALL TIME (like [[graft.operators.Percolate.matches]]'s eager
+    * stage); otherwise it is the Spark plan below, evaluated when an
+    * action runs. */
   private[graft] def hybridServeIndexed(s: SparkSession,
       tidx: graft.store.TextIndex, vidx: graft.store.IvfIndex,
       qe: Array[Float], depths: Map[Long, Int],
       terms: Seq[String] = QueryTerms): org.apache.spark.sql.DataFrame = {
+    if (tidx.hotFits() && vidx.hotFits()) return hybridServeHot(s, tidx, vidx, qe, depths, terms)
     val kw = tidx.queryRanked(terms, ShortlistK)
       .select(col("doc_id"), col("rank").as("rank_kw"))
     val kk = ShortlistK + RagCosMargin
@@ -387,6 +394,39 @@ object SearchQueries {
         coalesce(col("rank_kw"), lit(0)).as("rank_kw"),
         coalesce(col("rank_sem"), lit(0)).as("rank_sem"),
         round(col("rrf"), 6).as("rrf"))
+  }
+
+  /** [[hybridServeIndexed]] from the resident tiers, step for step: the
+    * keyword arm is the resident ranked top-[[ShortlistK]]
+    * ([[graft.store.TextIndex.hotQuery]]) with its integer ranks; the
+    * semantic arm is the IVF hot tier's top ShortlistK + [[RagCosMargin]]
+    * at the probe's depth, re-ranked by [[graft.attack.Inversion.cosine]]
+    * (the driver twin of `cosine_sim`) under Spark's double order; RRF
+    * then sums the same doubles and rounds as Spark's `round(rrf, 6)`. */
+  private def hybridServeHot(s: SparkSession,
+      tidx: graft.store.TextIndex, vidx: graft.store.IvfIndex,
+      qe: Array[Float], depths: Map[Long, Int],
+      terms: Seq[String]): org.apache.spark.sql.DataFrame = {
+    // Spark's double order: -0.0 equals 0.0, NaN is the largest value
+    def cmp(x: Double, y: Double): Int = if (x == y) 0 else java.lang.Double.compare(x, y)
+    val kw = tidx.hotQuery(terms, ShortlistK).zipWithIndex
+      .map { case ((d, _, _), i) => d -> (i + 1) }.toMap
+    val sem = vidx.hotQueryEmb(qe, ShortlistK + RagCosMargin, depths.getOrElse(0L, vidx.numCells))
+      .map { case (d, e) => (d, graft.attack.Inversion.cosine(e, qe)) }
+      .sortWith { case ((da, ca), (db, cb)) => val c = cmp(cb, ca); c < 0 || (c == 0 && da < db) }
+      .take(ShortlistK).zipWithIndex.map { case ((d, _), i) => d -> (i + 1) }.toMap
+    def rrf(rank: Option[Int]) = rank.fold(0.0)(r => 1.0 / (RrfK.toDouble + r.toDouble))
+    val rows = (kw.keySet ++ sem.keySet).toSeq
+      .map(d => (d, kw.get(d), sem.get(d), rrf(kw.get(d)) + rrf(sem.get(d))))
+      .sortWith { case (a, b) => val c = cmp(b._4, a._4); c < 0 || (c == 0 && a._1 < b._1) }
+      .take(10)
+      .map { case (d, k, m, f) =>
+        org.apache.spark.sql.Row(d, k.getOrElse(0), m.getOrElse(0),
+          java.math.BigDecimal.valueOf(f).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+      }
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(rows.asJava, org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id BIGINT, rank_kw INT, rank_sem INT, rrf DOUBLE"))
   }
 
   /** The standing hybrid probe (the query string's hash embedding). */

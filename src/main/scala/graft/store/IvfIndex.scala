@@ -829,17 +829,22 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
 
   /** JVM-resident serving state — [[GraphIndex]]'s hot tier, IVF shape:
     * live rows grouped by cell, the centroids, and (when the index
-    * carries the routed collection's metadata) the (cid, doc) payload.
-    * Keyed on the publish fingerprint; every append/delete/compact/build
-    * invalidates. The reference serves exactly this way — hnswlib keeps
-    * its whole index memory-resident per process
-    * (/root/reference/src/chromadb_store.py:4). */
+    * carries the routed collection's payload, `cid` and `doc`) every live
+    * row as read, keyed by id, with its `emb` slot left to `cells` — the
+    * input of the filtered route ([[hotFilter]]), typed by the data tree's
+    * `schema`. Keyed on the publish fingerprint; every
+    * append/delete/compact/build invalidates. The reference serves
+    * exactly this way — hnswlib keeps its whole index memory-resident per
+    * process (/root/reference/src/chromadb_store.py:4). */
   private final class HotState(
       val key: String,
       val cells: java.util.HashMap[java.lang.Long, Array[(Long, Array[Float])]],
-      val payload: java.util.HashMap[java.lang.Long, (String, String, Map[String, String])],
-      val hasMeta: Boolean,
-      val cents: Array[(Long, Array[Float])])
+      val rows: java.util.HashMap[java.lang.Long, Array[Any]],
+      val schema: org.apache.spark.sql.types.StructType,
+      val cents: Array[(Long, Array[Float])]) {
+    private def at(name: String) = schema.fieldIndex(name)
+    lazy val (embAt, cidAt, docAt) = (at("emb"), at("cid"), at("doc"))
+  }
 
   @volatile private var hot: HotState = null
 
@@ -872,27 +877,24 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
       val live = tombstones().fold(raw)(ts =>
         raw.join(broadcast(ts), Seq("id"), "left_anti"))
       val hasPayload = live.columns.contains("cid") && live.columns.contains("doc")
-      val hasMeta = hasPayload && live.columns.contains("meta")
       // partition-dir type inference reads `cell` back as INT; pin to LONG
-      val cellL = col("cell").cast("long").as("cell")
-      val sel =
-        if (hasMeta) live.select(cellL, col("id"), col("emb"), col("cid"), col("doc"), col("meta"))
-        else if (hasPayload) live.select(cellL, col("id"), col("emb"), col("cid"), col("doc"))
-        else live.select(cellL, col("id"), col("emb"))
+      val sel = live.select(col("cell").cast("long").as("__cell") +:
+        (if (hasPayload) live.columns.toSeq.map(col) else Seq(col("id"), col("emb"))): _*)
+      val idAt = sel.schema.fieldIndex("id")
+      val embAt = sel.schema.fieldIndex("emb")
       val cells = new java.util.HashMap[java.lang.Long, Array[(Long, Array[Float])]]()
-      val payload = new java.util.HashMap[java.lang.Long, (String, String, Map[String, String])]()
-      sel.collect().groupBy(_.getLong(0)).foreach { case (cid, rows) =>
-        cells.put(cid, rows.map { r =>
+      val rows = new java.util.HashMap[java.lang.Long, Array[Any]]()
+      sel.collect().groupBy(_.getLong(0)).foreach { case (cid, rs) =>
+        cells.put(cid, rs.map { r =>
           if (hasPayload) {
-            val meta: Map[String, String] =
-              if (hasMeta && !r.isNullAt(5)) r.getMap[String, String](5).toMap
-              else Map.empty
-            payload.put(r.getLong(1), (r.getString(3), r.getString(4), meta))
+            val v = r.toSeq.tail.toArray
+            v(embAt - 1) = null
+            rows.put(r.getLong(idAt), v)
           }
-          (r.getLong(1), r.getSeq[Float](2).toArray)
+          (r.getLong(idAt), r.getSeq[Float](embAt).toArray)
         })
       }
-      h = new HotState(key, cells, payload, hasMeta, centroids())
+      h = new HotState(key, cells, rows, live.schema, centroids())
       hot = h
     }
     h
@@ -904,29 +906,38 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * (id, cell, distance) like the no-include [[query]] projection. */
   def hotQuery(qe: Array[Float], k: Int, nprobe: Int): Seq[(Long, Long, Double)] = {
     val h = hotState()
-    val probed = h.cents.map { case (cid, c) => (l2(c, qe), cid) }
-      .sorted.take(nprobe).map(_._2)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Double, Long, Long)]
-    probed.foreach { cid =>
-      val arr = h.cells.get(cid)
-      if (arr != null) arr.foreach { case (id, emb) => buf += ((l2(emb, qe), id, cid)) }
-    }
-    buf.sortBy { case (d, id, _) => (d, id) }.take(k)
-      .map { case (d, id, c) => (id, c, d) }.toSeq
+    hotScanCells(h, qe, probedCells(h, qe, nprobe), k).map { case (d, id, c, _) => (id, c, d) }
   }
 
-  /** In-memory scored scan of `cells` — the shared tail of the hot exact
-    * surfaces: (distance, id, cell) ascending, cut to `k` (negative k =
-    * no cut). */
-  private def hotScanCells(h: HotState, qe: Array[Float], cells: Seq[Long],
-                           k: Int): Seq[(Double, Long, Long)] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Double, Long, Long)]
+  /** The `nprobe` nearest cells by centroid distance — [[probeCellsOf]]
+    * over the resident centroids. */
+  private def probedCells(h: HotState, qe: Array[Float], nprobe: Int): Seq[Long] =
+    h.cents.map { case (cid, c) => (l2(c, qe), cid) }.sorted.take(nprobe).map(_._2).toSeq
+
+  /** In-memory scored scan of `cells`' rows that `keep` accepts — the
+    * shared tail of the hot surfaces: (distance, id, cell, emb) ascending
+    * by (distance, id), cut to `k` (negative k = no cut). */
+  private def hotScanCells(h: HotState, qe: Array[Float], cells: Seq[Long], k: Int,
+                           keep: Long => Boolean = _ => true): Seq[(Double, Long, Long, Array[Float])] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(Double, Long, Long, Array[Float])]
     cells.foreach { cid =>
       val arr = h.cells.get(cid)
-      if (arr != null) arr.foreach { case (id, emb) => buf += ((l2(emb, qe), id, cid)) }
+      if (arr != null) arr.foreach { case (id, emb) =>
+        if (keep(id)) buf += ((l2(emb, qe), id, cid, emb))
+      }
     }
-    val sorted = buf.sortBy { case (d, id, _) => (d, id) }
+    val sorted = buf.sortBy { case (d, id, _, _) => (d, id) }
     (if (k < 0) sorted else sorted.take(k)).toSeq
+  }
+
+  /** [[hotQuery]]'s answers with their embeddings — the semantic arm of
+    * the routed hybrid pipeline
+    * ([[graft.queries.SearchQueries.hybridServeIndexed]]), which re-ranks
+    * them by cosine. Returns (id, emb). */
+  private[graft] def hotQueryEmb(qe: Array[Float], k: Int,
+                                 nprobe: Int): Seq[(Long, Array[Float])] = {
+    val h = hotState()
+    hotScanCells(h, qe, probedCells(h, qe, nprobe), k).map { case (_, id, _, e) => (id, e) }
   }
 
   /** [[queryExact]] served entirely from JVM memory: the same
@@ -941,7 +952,7 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     val h = hotState()
     val cand = ExactPrune.topkCells(h.cents, cellRadii(), qe, k, probe0,
       cells => hotScanCells(h, qe, cells, k).map(_._1))
-    hotScanCells(h, qe, cand, k).map { case (d, id, c) => (id, c, d) }
+    hotScanCells(h, qe, cand, k).map { case (d, id, c, _) => (id, c, d) }
   }
 
   /** [[rangeSearch]] served entirely from JVM memory — every live row
@@ -954,7 +965,7 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     val h = hotState()
     hotScanCells(h, qe, rangeCandidateCells(qe, radius), k = -1)
       .filter(_._1 <= radius * radius)
-      .map { case (d, id, c) => (id, c, d) }
+      .map { case (d, id, c, _) => (id, c, d) }
   }
 
   /** Admission check for routed hot serving — see
@@ -962,63 +973,72 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * [[StoreIO.hotBudgetBytes]]; over budget the router falls back to
     * the partition-pruned Spark probe, and the explicit [[hotQuery]]
     * surface stays available. */
-  private def hotFits(): Boolean =
+  private[graft] def hotFits(): Boolean =
     StoreIO.treeBytes(dataPath) <= StoreIO.hotBudgetBytes()
 
   /** [[hotServe]] over a probe batch (the `Collection.queryBatch` hot
-    * path): one state check, rows tagged by query index. */
+    * path): one state check, rows tagged by query index. None as soon as
+    * one probe declines, so the answer source stays uniform. */
   private[store] def hotServeBatch(probes: Seq[(Long, Array[Float])], k: Int,
-                                   nprobe: Int): Option[Seq[(Long, String, String, Double)]] = {
-    if (!hotFits()) return None
-    if (hotState().payload.isEmpty) None
-    else Some(probes.flatMap { case (qi, qe) =>
-      hotServe(qe, k, nprobe).getOrElse(Seq.empty)
-        .map { case (cid, doc, d) => (qi, cid, doc, d) }
-    })
+                                   nprobe: Int, where: Option[Column] = None)
+      : Option[Seq[(Long, String, String, Double)]] = {
+    val per = probes.iterator.map { case (qi, qe) =>
+      hotServe(qe, k, nprobe, where).map(_.map { case (cid, doc, d) => (qi, cid, doc, d) })
+    }.takeWhile(_.isDefined).toSeq
+    if (per.length == probes.length) Some(per.flatMap(_.get)) else None
   }
 
   /** Hot routed serving (the `Collection.query` path): top-k with the
-    * collection payload in the cold path's exact order ((distance, id)).
-    * None when the index has no routing metadata. */
-  private[store] def hotServe(qe: Array[Float], k: Int,
-                              nprobe: Int): Option[Seq[(String, String, Double)]] = {
+    * collection payload in the cold path's exact order ((distance, id)),
+    * `where` applied BEFORE the top-k within the probed cells, as on the
+    * Spark route ([[query]] with `where`). None — the Spark route serves —
+    * when the index has no routing payload, exceeds the hot byte budget,
+    * or `where` does not fold at plan time ([[hotFilter]]). */
+  private[store] def hotServe(qe: Array[Float], k: Int, nprobe: Int,
+                              where: Option[Column] = None): Option[Seq[(String, String, Double)]] = {
     if (!hotFits()) return None
     val h = hotState()
-    if (h.payload.isEmpty) None
-    else Some(hotQuery(qe, k, nprobe).flatMap { case (id, _, d) =>
-      Option(h.payload.get(id)).map { case (cid, doc, _) => (cid, doc, d) }
-    })
+    if (h.rows.isEmpty) return None
+    def payload(id: Long, d: Double) = {
+      val v = h.rows.get(id)
+      (v(h.cidAt).asInstanceOf[String], v(h.docAt).asInstanceOf[String], d)
+    }
+    val probed = probedCells(h, qe, nprobe)
+    val keep: Option[Long => Boolean] = where match {
+      case None => Some(_ => true)
+      case Some(p) => hotFilter(h, probed, p).map(kept => (id: Long) => kept.contains(id))
+    }
+    keep.map(hotScanCells(h, qe, probed, k, _).map { case (d, id, _, _) => payload(id, d) })
   }
 
-  /** FILTERED hot serving — [[GraphIndex.hotServeFiltered]]'s IVF twin,
-    * enabled by the compilable dict filter dialect
-    * (graft.functions.ChromaWhere). Semantics replicate the Spark path
-    * exactly ([[query]] with `where`): the predicate applies BEFORE the
-    * top-k, within the probed cells. None when the index lacks payload /
-    * metadata for a metadata filter / exceeds the hot byte budget. */
-  private[store] def hotServeFiltered(qe: Array[Float], k: Int, nprobe: Int,
-                                      whereOk: Option[Map[String, String] => Boolean],
-                                      docOk: Option[String => Boolean]): Option[Seq[(String, String, Double)]] = {
-    if (!hotFits()) return None
-    val h = hotState()
-    if (h.payload.isEmpty) return None
-    if (whereOk.nonEmpty && !h.hasMeta) return None // meta-less index: Spark path decides
-    val probed = h.cents.map { case (cid, c) => (l2(c, qe), cid) }
-      .sorted.take(nprobe).map(_._2)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
-    probed.foreach { cid =>
+  /** The ids among `cells`' resident rows that `where` keeps, decided by
+    * Spark's own optimizer at plan time: the rows become a local relation
+    * with the data tree's schema — the Spark route's input — so the Column
+    * resolves and coerces exactly as it does there, NULL metadata
+    * included, and `ConvertToLocalRelation` folds the filter into the
+    * relation without a job. None when the predicate is nondeterministic or
+    * the optimized plan is anything but a local relation (a predicate the
+    * fold cannot evaluate, such as a subquery): the Spark route decides. */
+  private def hotFilter(h: HotState, cells: Seq[Long],
+                        where: Column): Option[java.util.HashSet[Long]] = {
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    cells.foreach { cid =>
       val arr = h.cells.get(cid)
       if (arr != null) arr.foreach { case (id, emb) =>
-        val keep = Option(h.payload.get(id)).exists { case (_, doc, meta) =>
-          whereOk.forall(_(meta)) && docOk.forall(f => f(doc))
-        }
-        if (keep) buf += ((l2(emb, qe), id))
+        val v = h.rows.get(id).clone()
+        v(h.embAt) = scala.collection.immutable.ArraySeq.unsafeWrapArray(emb)
+        rows.add(org.apache.spark.sql.Row.fromSeq(v.toSeq))
       }
     }
-    Some(buf.sortBy { case (d, id) => (d, id) }.take(k).toSeq
-      .flatMap { case (d, id) =>
-        Option(h.payload.get(id)).map { case (cid, doc, _) => (cid, doc, d) }
-      })
+    val kept = spark.createDataFrame(rows, h.schema).filter(where).select("id")
+    kept.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if kept.queryExecution.analyzed.deterministic =>
+        val ids = new java.util.HashSet[Long]()
+        lr.data.foreach(r => ids.add(r.getLong(0)))
+        Some(ids)
+      case _ => None
+    }
   }
 
   // ------------------------------------- codes-resident hot tier (SQ8)

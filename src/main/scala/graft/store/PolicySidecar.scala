@@ -1,6 +1,7 @@
 package graft.store
 
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /**
@@ -43,6 +44,14 @@ private[store] final class PolicySidecar(
   private val valueCol = if (seal.isEmpty) knob else s"${knob}_ct"
   private def persistCall = s"persist${knob.capitalize}Policy()"
 
+  /** The schemas [[write]] lays down, read back with them: no footer
+    * schema-inference job, and a missing column reads as NULL. */
+  private val rowsSchema = StructType.fromDDL(
+    s"pid BIGINT, $valueCol ${if (seal.isEmpty) "INT" else "BINARY"}")
+  private val identityCols = (if (keyedByK) Seq("k") else Nil) ++ Seq("panel_fp", "data_fp")
+  private val metaSchema = StructType.fromDDL(
+    (if (keyedByK) "k INT, " else "") + "panel_fp BIGINT, data_fp STRING")
+
   /** Commit `values` for (panel, k) under the current content fingerprint;
     * `seed` is the panel fingerprint's seed ([[PolicySidecar.panelFp]]). */
   def write(panel: Seq[(Long, Array[Float])], k: Int, seed: Long,
@@ -66,10 +75,14 @@ private[store] final class PolicySidecar(
   }
 
   /** Freshness of the committed policy for (panel, k, seed): driver-side
-    * file metadata plus one tiny `meta` read — no corpus jobs. */
+    * file metadata plus one tiny `meta` read — no corpus jobs. A NULL
+    * identity column is Absent, never Fresh. */
   def status(panel: Seq[(Long, Array[Float])], k: Int, seed: Long): PolicyStatus = {
     if (!new java.io.File(s"$dir/meta/_SUCCESS").exists()) return PolicyAbsent
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = spark.read.schema(metaSchema).parquet(s"$dir/meta").head(1).headOption match {
+      case Some(r) if identityCols.forall(c => !r.isNullAt(r.fieldIndex(c))) => r
+      case _ => return PolicyAbsent
+    }
     if ((keyedByK && m.getAs[Int]("k") != k) ||
         m.getAs[Long]("panel_fp") != PolicySidecar.panelFp(panel, seed)) PolicyAbsent
     else if (m.getAs[String]("data_fp") == contentFp()) PolicyFresh
@@ -102,7 +115,7 @@ private[store] final class PolicySidecar(
       otherwise: PolicyStatus => Map[Long, Int]): Map[Long, Int] =
     status(panel, k, seed) match {
       case PolicyFresh =>
-        val v = spark.read.parquet(s"$dir/rows")
+        val v = spark.read.schema(rowsSchema).parquet(s"$dir/rows")
         seal.fold(v) { case (_, dec) =>
           v.select(col("pid"), dec(col(valueCol)).cast("int")) }
           .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap

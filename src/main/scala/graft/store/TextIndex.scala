@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.functions.{TextFunctions => TF, TextHashOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -533,10 +533,13 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
 
   /** JVM-resident serving state — the [[GraphIndex]]/[[IvfIndex]] hot
     * tier, text shape: corpus stats corrected for pending tombstones at
-    * load, the dead-doc set, and postings loaded PER TERM on first use
-    * (one bucket+term-pruned read each, then pure memory — the common
-    * serving case is a stable query vocabulary). Keyed on the publish
-    * fingerprint; append/delete/compact/build invalidate wholesale. */
+    * load, the dead-doc set, and postings. An index inside the hot budget
+    * ([[hotFits]]) holds EVERY term's postings and positions, filled by
+    * [[loadAll]] from one read of each tree, so a warmed index serves any
+    * term with no Spark job; a larger one loads postings PER TERM on first
+    * use (one bucket+term-pruned read each) into a byte-bounded cache.
+    * Keyed on the publish fingerprint; append/delete/compact/build
+    * invalidate wholesale. */
   /** One term's postings with the quantized contribution PRE-COMPUTED:
     * idf and avgdl are constants of the hot state, so the per-posting
     * double pipeline + HALF_UP quantization run ONCE at term load —
@@ -550,10 +553,18 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
   private final class TermPositions(
       val docIds: Array[Long], val offs: Array[Int], val flat: Array[Int])
 
+  /** What a fully loaded state serves for a term the index does not hold. */
+  private val NoPostings = new TermPostings(Array.empty, Array.empty, Array.empty)
+  private val NoPositions = new TermPositions(Array.empty, Array(0), Array.empty)
+
+  /** `total` is the committed doc count, `n` the live one; `full` marks a
+    * state that holds every term ([[loadAll]]). */
   private final class HotText(
-      val key: String, val n: Long, val avgdl: Double,
+      val key: String, val total: Long, val n: Long, val avgdl: Double,
       val dead: java.util.HashSet[java.lang.Long],
-      val postings: java.util.concurrent.ConcurrentHashMap[String, TermPostings],
+      val full: Boolean,
+      val postings: java.util.concurrent.ConcurrentHashMap[String, TermPostings] =
+        new java.util.concurrent.ConcurrentHashMap(),
       val positions: java.util.concurrent.ConcurrentHashMap[String, TermPositions] =
         new java.util.concurrent.ConcurrentHashMap(),
       val bytes: java.util.concurrent.atomic.AtomicLong =
@@ -568,107 +579,161 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       s"${mt(postingsPath)}|${mt(statsPath)}|${mt(termstatsPath)}"
   }
 
+  /** Admission for routed hot serving — the IVF/graph rule: the on-disk
+    * postings and term-stats trees fit [[StoreIO.hotBudgetBytes]]. A
+    * jobless driver-side size probe, re-read per call, so a changed
+    * budget takes effect at once. */
+  private[graft] def hotFits(): Boolean =
+    StoreIO.treeBytes(postingsPath) + StoreIO.treeBytes(termstatsPath) <=
+      StoreIO.hotBudgetBytes()
+
   private def hotState(): HotText = {
     val key = hotKey()
+    val fits = hotFits()
     var h = hotCache
-    if (h == null || h.key != key) {
+    if (h == null || h.key != key || h.full != fits) {
       require(StoreIO.committedBatchDirs(statsPath).nonEmpty,
         s"TextIndex at $path has no committed corpus stats — build() first")
-      val st = spark.read.parquet(statsPath)
+      val st = spark.read.schema(TextIndex.StatsSchema).parquet(statsPath)
         .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("sumdl")).head()
       val dead = new java.util.HashSet[java.lang.Long]()
       var deadDl = 0L
       tombstones().foreach(_.select("doc_id", "dl").collect().foreach { r =>
         dead.add(r.getLong(0)); deadDl += r.getInt(1).toLong
       })
-      val n = st.getLong(0) - dead.size()
-      require(n > 0, s"TextIndex at $path has zero live documents")
-      val avgdl = (st.getLong(1) - deadDl).toDouble / n.toDouble
-      h = new HotText(key, n, avgdl, dead,
-        new java.util.concurrent.ConcurrentHashMap())
+      val total = if (st.isNullAt(0)) 0L else st.getLong(0)
+      val sumDl = if (st.isNullAt(1)) 0L else st.getLong(1)
+      val n = total - dead.size()
+      h = new HotText(key, total, n, (sumDl - deadDl).toDouble / n.toDouble, dead, fits)
+      if (fits) loadAll(h)
       hotCache = h
     }
     h
   }
 
+  /** The corpus-stat refusals every ranked surface shares: an index with
+    * no documents, or with every document tombstoned, has no avgdl. */
+  private def requireLive(total: Long, n: Long): Unit = {
+    require(total > 0,
+      s"TextIndex at $path indexes zero documents — build() over a non-empty corpus first")
+    require(n > 0, s"TextIndex at $path has zero live documents — every doc is tombstoned")
+  }
+
+  /** Fill `h` with EVERY term from one read of each admitted tree: the
+    * postings (positions included when every batch carries them) and the
+    * `_termstats` df. Same per-term arithmetic as the per-term loads
+    * ([[termPostings]], [[termPositions]]), so a fully loaded state
+    * serves bit-equal answers. */
+  private def loadAll(h: HotText): Unit = {
+    val withPos = positionsEverywhere()
+    val dfRaw = scala.collection.mutable.HashMap.empty[String, Long]
+    spark.read.schema(TextIndex.TermStatsSchema).parquet(termstatsPath)
+      .select("term", "df").collect()
+      .foreach(r => dfRaw(r.getString(0)) = dfRaw.getOrElse(r.getString(0), 0L) + r.getLong(1))
+    val cols = Seq("term", "doc_id", "dl", "tf") ++ (if (withPos) Seq("pos") else Nil)
+    spark.read.schema(TextIndex.PostingsSchema).parquet(postingsPath)
+      .select(cols.map(col): _*).collect()
+      .groupBy(_.getString(0)).foreach { case (t, rs) =>
+        val tp = termPostings(h, rs.map(r => (r.getLong(1), r.getInt(2), r.getLong(3))),
+          dfRaw.getOrElse(t, 0L))
+        h.postings.put(t, tp)
+        h.bytes.addAndGet(termBytes(tp))
+        if (withPos) {
+          val pp = termPositions(h, rs.map(r => (r.getLong(1), r.getSeq[Int](4))))
+          h.positions.put(t, pp)
+          h.bytes.addAndGet(posBytes(pp))
+        }
+      }
+  }
+
+  /** One term's postings, bucket+term-pruned, read with the writer's
+    * schema. */
+  private def termRows(term: String, cols: String*): Array[Row] =
+    spark.read.schema(TextIndex.PostingsSchema).parquet(postingsPath)
+      .filter(col("bucket") === bucketOf(term) && col("term") === term)
+      .select(cols.map(col): _*).collect()
+
   /** ~bytes a loaded term pins: 20 bytes/posting (long id + int dl +
     * long quantized contribution) + fixed overhead. */
   private def termBytes(tp: TermPostings): Long = 20L * tp.docIds.length + 64L
 
-  /** Load one term's postings (one pruned read on first use), fold the
-    * tombstone df correction into idf, and pre-quantize every posting's
-    * contribution with [[query]]'s EXACT arithmetic — same stat
-    * corrections, same double expression tree, same HALF_UP rounding.
+  /** A term's postings from a partial state, loaded on first use.
     *
     * The cache is BYTE-BOUNDED by [[StoreIO.hotBudgetBytes]]: unlike the
-    * Graph/IVF hot tiers (whole-index, admission-checked up front), the
-    * text tier grows with the query vocabulary, so an unbounded cache
-    * would eventually pin every posting list — at 100 TB a df≈n term
-    * alone is corpus-sized. Over budget, the cache resets wholesale
+    * Graph/IVF hot tiers (whole-index, admission-checked up front), a
+    * partial text tier grows with the query vocabulary, so an unbounded
+    * cache would eventually pin every posting list — at 100 TB a df≈n
+    * term alone is corpus-sized. Over budget, the cache resets wholesale
     * keeping only the term just loaded (generation flip, not LRU —
     * entries are immutable derived state, so eviction can never be
-    * wrong, only cause a reload). */
-  private def hotTerm(h: HotText, term: String): TermPostings = {
-    val tp = hotTermLoad(h, term)
-    if (h.bytes.get() > StoreIO.hotBudgetBytes()) {
-      h.postings.clear()
-      h.positions.clear()
-      h.bytes.set(0L)
-      h.postings.put(term, tp)
-      h.bytes.addAndGet(termBytes(tp))
+    * wrong, only cause a reload). A full state holds every term and never
+    * loads. */
+  private def hotTerm(h: HotText, term: String): TermPostings =
+    if (h.full) h.postings.getOrDefault(term, NoPostings)
+    else {
+      val tp = hotTermLoad(h, term)
+      if (h.bytes.get() > StoreIO.hotBudgetBytes()) {
+        h.postings.clear()
+        h.positions.clear()
+        h.bytes.set(0L)
+        h.postings.put(term, tp)
+        h.bytes.addAndGet(termBytes(tp))
+      }
+      tp
     }
-    tp
-  }
 
   /** ~bytes a loaded positions entry pins: 8/doc id + 4/offset + 4/position. */
   private def posBytes(tp: TermPositions): Long =
     12L * tp.docIds.length + 4L * tp.flat.length + 64L
 
-  /** Load one term's POSITION lists (one bucket+term-pruned read on first
-    * use) for the hot phrase/proximity probes — tombstoned docs excluded
-    * at load like [[hotTermLoad]]; byte-bounded by the same generation-flip
-    * budget as the BM25 postings cache. */
-  private def hotPosTerm(h: HotText, term: String): TermPositions = {
-    val tp = h.positions.computeIfAbsent(term, { t =>
-      val rows = spark.read.parquet(postingsPath)
-        .filter(col("bucket") === bucketOf(t) && col("term") === t)
-        .select("doc_id", "pos").collect()
-        .filter(r => !h.dead.contains(r.getLong(0)))
-      // the documented orphan-replay state (a checkpointed micro-batch
-      // replayed after compact() re-lands its postings until the next
-      // fold) can surface the same (term, doc) in TWO batch dirs — merge
-      // to the distinct sorted position set so the probe walks each doc
-      // ONCE, matching the Spark probes' distinct-position counting
-      // (duplicate docIds would otherwise emit duplicate ranked rows AND
-      // break the binary searches' unique-key assumption)
-      val merged = rows.groupBy(_.getLong(0)).toArray.sortBy(_._1).map {
-        case (doc, rs) =>
-          (doc,
-            if (rs.length == 1) rs(0).getSeq[Int](1).toArray
-            else rs.flatMap(_.getSeq[Int](1)).distinct.sorted)
+  /** A term's POSITION lists for the hot phrase/proximity probes — from a
+    * full state, or loaded on first use (one bucket+term-pruned read) into
+    * a partial state's byte-bounded cache ([[hotTerm]]'s generation flip). */
+  private def hotPosTerm(h: HotText, term: String): TermPositions =
+    if (h.full) h.positions.getOrDefault(term, NoPositions)
+    else {
+      val tp = h.positions.computeIfAbsent(term, { t =>
+        val out = termPositions(h,
+          termRows(t, "doc_id", "pos").map(r => (r.getLong(0), r.getSeq[Int](1))))
+        h.bytes.addAndGet(posBytes(out))
+        out
+      })
+      if (h.bytes.get() > StoreIO.hotBudgetBytes()) {
+        h.postings.clear()
+        h.positions.clear()
+        h.bytes.set(0L)
+        h.positions.put(term, tp)
+        h.bytes.addAndGet(posBytes(tp))
       }
-      val docIds = merged.map(_._1)
-      val posArrs = merged.map(_._2)
-      val offs = new Array[Int](merged.length + 1)
-      var i = 0
-      while (i < merged.length) { offs(i + 1) = offs(i) + posArrs(i).length; i += 1 }
-      val flat = new Array[Int](offs(merged.length))
-      i = 0
-      while (i < merged.length) {
-        System.arraycopy(posArrs(i), 0, flat, offs(i), posArrs(i).length); i += 1
-      }
-      val out = new TermPositions(docIds, offs, flat)
-      h.bytes.addAndGet(posBytes(out))
-      out
-    })
-    if (h.bytes.get() > StoreIO.hotBudgetBytes()) {
-      h.postings.clear()
-      h.positions.clear()
-      h.bytes.set(0L)
-      h.positions.put(term, tp)
-      h.bytes.addAndGet(posBytes(tp))
+      tp
     }
-    tp
+
+  /** One term's position lists from its (doc_id, pos) posting rows,
+    * tombstoned docs excluded. The documented orphan-replay state (a
+    * checkpointed micro-batch replayed after compact() re-lands its
+    * postings until the next fold) can surface the same (term, doc) in TWO
+    * batch dirs — merged to the distinct sorted position set so the probe
+    * walks each doc ONCE, matching the Spark probes' distinct-position
+    * counting (duplicate docIds would otherwise emit duplicate ranked rows
+    * AND break the binary searches' unique-key assumption). */
+  private def termPositions(h: HotText, rows: Array[(Long, Seq[Int])]): TermPositions = {
+    val merged = rows.filter(r => !h.dead.contains(r._1))
+      .groupBy(_._1).toArray.sortBy(_._1).map { case (doc, rs) =>
+        (doc,
+          if (rs.length == 1) rs(0)._2.toArray
+          else rs.flatMap(_._2).distinct.sorted)
+      }
+    val docIds = merged.map(_._1)
+    val posArrs = merged.map(_._2)
+    val offs = new Array[Int](merged.length + 1)
+    var i = 0
+    while (i < merged.length) { offs(i + 1) = offs(i) + posArrs(i).length; i += 1 }
+    val flat = new Array[Int](offs(merged.length))
+    i = 0
+    while (i < merged.length) {
+      System.arraycopy(posArrs(i), 0, flat, offs(i), posArrs(i).length); i += 1
+    }
+    new TermPositions(docIds, offs, flat)
   }
 
   /** Is `v` present in `flat[lo, hi)` (an ascending slice)? */
@@ -683,9 +748,9 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     false
   }
 
-  /** Bounded top-k (cnt desc, doc asc) selection for the hot positional
-    * probes — [[hotQuery]]'s buffer rationale: a full sort of every
-    * matching doc would dominate the warm probe at corpus scale. */
+  /** Bounded top-k (cnt desc, doc asc) selection for the hot probes —
+    * [[hotQuery]]'s buffer rationale: a full sort of every matching doc
+    * would dominate the warm probe at corpus scale. */
   private final class TopCounts(k: Int) {
     private val doc = new Array[Long](k)
     private val cnt = new Array[Long](k)
@@ -715,35 +780,25 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       (0 until n).map(i => (doc(i), cnt(i))).sortBy { case (d, c) => (-c, d) }
   }
 
-  /** [[phraseQuery]] served from JVM memory after each term's first
-    * position-list load: candidate docs come from the RAREST phrase
+  /** Every live doc holding `phrase`, with its occurrence count, from the
+    * resident position lists: candidate docs come from the RAREST phrase
     * term's postings (a phrase led by a stop-word would otherwise walk
-    * df("the") candidates — the blow-up [[hotQuery]]'s top-k rationale
-    * bounds), each candidate checked against every slot by binary search;
-    * a start s counts iff every slot j finds its term at s + j — binary
-    * searches over the resident ascending position slices, zero Spark
-    * jobs warm, selection df-bounded by the rarest term. Identical
-    * occurrence counts and (n_occ desc, doc asc) ranking to the Spark
-    * path (spec-pinned). Returns (doc_id, n_occ). */
-  def hotPhraseQuery(phrase: Seq[String], k: Int): Seq[(Long, Long)] = {
-    require(phrase.nonEmpty, "phrase needs at least one term")
-    require(positionsEverywhere(),
-      s"TextIndex at $path has batches without positional postings — rebuild to serve phrase queries")
-    val h = hotState()
+    * df("the") candidates), each candidate checked against every slot by
+    * binary search; a start s counts iff every slot j finds its term at
+    * s + j. The occurrence counts of [[phraseOccurrences]] (spec-pinned). */
+  private def phraseWalk(h: HotText, phrase: Seq[String])(emit: (Long, Long) => Unit): Unit = {
     val tps: Map[String, TermPositions] =
       phrase.distinct.map(t => t -> hotPosTerm(h, t)).toMap
     val slots = phrase.toArray
     val t0 = tps(slots(0))
     val rare = tps.values.minBy(_.docIds.length)
-    val out = new TopCounts(k)
     var di = 0
     while (di < rare.docIds.length) {
       val doc = rare.docIds(di)
       // per-slot position slices for this doc; a slot whose term misses
       // the doc kills every start
       val slotIdx = slots.map { t =>
-        val tp = tps(t)
-        val j = java.util.Arrays.binarySearch(tp.docIds, doc)
+        val j = java.util.Arrays.binarySearch(tps(t).docIds, doc)
         if (j < 0) -1 else j
       }
       if (!slotIdx.contains(-1)) {
@@ -762,24 +817,33 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
           if (ok) cnt += 1
           pi += 1
         }
-        if (cnt > 0) out.push(doc, cnt)
+        if (cnt > 0) emit(doc, cnt)
       }
       di += 1
     }
+  }
+
+  /** [[phraseQuery]]'s resident twin, the route it takes inside the hot
+    * budget: [[phraseWalk]] cut to the top k by (n_occ desc, doc asc).
+    * Returns (doc_id, n_occ). */
+  private[graft] def hotPhraseQuery(phrase: Seq[String], k: Int): Seq[(Long, Long)] = {
+    require(phrase.nonEmpty, "phrase needs at least one term")
+    requirePositions("phrase queries")
+    val out = new TopCounts(k)
+    phraseWalk(hotState(), phrase)(out.push)
     out.result()
   }
 
-  /** [[nearQuery]] served from JVM memory — qualifying position-pair
-    * counts per doc via a bounded two-pointer window walk over the
-    * resident ascending lists, driven from the RARER term's doc list
-    * (the pair count is symmetric in A and B, so the outer loop is
-    * df-bounded by min(df_A, df_B)). Identical counts and ranking to the
-    * Spark path (spec-pinned). Returns (doc_id, n_pairs). */
-  def hotNearQuery(termA: String, termB: String, window: Int, k: Int): Seq[(Long, Long)] = {
-    require(window >= 1, "window must be at least 1")
-    require(termA != termB, "NEAR needs two distinct terms")
-    require(positionsEverywhere(),
-      s"TextIndex at $path has batches without positional postings — rebuild to serve proximity queries")
+  /** [[nearQuery]]'s resident twin, the route it takes inside the hot
+    * budget — qualifying position-pair counts per doc via a bounded
+    * two-pointer window walk over the resident ascending lists, driven
+    * from the RARER term's doc list (the pair count is symmetric in A and
+    * B, so the outer loop is df-bounded by min(df_A, df_B)). Identical
+    * counts and ranking to the Spark path (spec-pinned). Returns
+    * (doc_id, n_pairs). */
+  private[graft] def hotNearQuery(termA: String, termB: String, window: Int,
+                                  k: Int): Seq[(Long, Long)] = {
+    requireNear(termA, termB, window)
     val h = hotState()
     val la = hotPosTerm(h, termA)
     val lb = hotPosTerm(h, termB)
@@ -811,57 +875,69 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
 
   private def hotTermLoad(h: HotText, term: String): TermPostings =
     h.postings.computeIfAbsent(term, { t =>
-      val rows = spark.read.parquet(postingsPath)
-        .filter(col("bucket") === bucketOf(t) && col("term") === t)
-        .select("doc_id", "dl", "tf").collect()
-      var deadCnt = 0L
-      val live = rows.filter { r =>
-        val isDead = h.dead.contains(r.getLong(0))
-        if (isDead) deadCnt += 1
-        !isDead
-      }
-      val dfRaw = spark.read.parquet(termstatsPath)
+      val dfRaw = spark.read.schema(TextIndex.TermStatsSchema).parquet(termstatsPath)
         .filter(col("bucket") === bucketOf(t) && col("term") === t)
         .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0)
-      val df = (dfRaw - deadCnt).toDouble
-      // StrictMath.log — the SAME function Spark's `log` expression calls
-      // (catalyst UnaryLogExpression), so the hot tier, the Seq route, and
-      // the frame route quantize bit-identical cq from identical idf
-      val idf = StrictMath.log((h.n.toDouble - df + 0.5) / (df + 0.5) + 1.0)
-      val docIds = new Array[Long](live.length)
-      val dls = new Array[Int](live.length)
-      val cqs = new Array[Long](live.length)
-      var i = 0
-      while (i < live.length) {
-        val r = live(i)
-        val dl = r.getInt(1)
-        val tf = r.getLong(2).toDouble
-        // mirror query()'s expression tree op for op
-        val contrib = idf * ((tf * (K1 + 1.0)) /
-          (tf + K1 * ((1.0 - B) + B * dl.toDouble / h.avgdl)))
-        docIds(i) = r.getLong(0)
-        dls(i) = dl
-        cqs(i) = java.math.BigDecimal.valueOf(contrib * Scale.toDouble)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        i += 1
-      }
-      val tp = new TermPostings(docIds, dls, cqs)
+      val tp = termPostings(h, termRows(t, "doc_id", "dl", "tf")
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))), dfRaw)
       h.bytes.addAndGet(termBytes(tp))
       tp
     })
 
-  /** [[query]] served from JVM memory after each term's first load — the
-    * probe itself is a primitive integer-sum loop over the pre-quantized
-    * postings (no doubles, no allocation per posting), with [[query]]'s
-    * exact integer scores and (score desc, doc asc) tie-break, so hot and
-    * cold answers are bit-equal (spec-pinned). */
-  def hotQuery(terms: Seq[String], k: Int): Seq[(Long, Int, Double)] = {
+  /** One term's resident postings from its (doc_id, dl, tf) rows and
+    * committed df: the tombstone df correction folds into idf, and every
+    * posting's contribution is pre-quantized with [[query]]'s EXACT
+    * arithmetic — same stat corrections, same double expression tree,
+    * same HALF_UP rounding. */
+  private def termPostings(h: HotText, rows: Array[(Long, Int, Long)],
+                           dfRaw: Long): TermPostings = {
+    var deadCnt = 0L
+    val live = rows.filter { r =>
+      val isDead = h.dead.contains(r._1)
+      if (isDead) deadCnt += 1
+      !isDead
+    }
+    val df = (dfRaw - deadCnt).toDouble
+    // StrictMath.log — the SAME function Spark's `log` expression calls
+    // (catalyst UnaryLogExpression), so the hot tier, the Seq route, and
+    // the frame route quantize bit-identical cq from identical idf
+    val idf = StrictMath.log((h.n.toDouble - df + 0.5) / (df + 0.5) + 1.0)
+    val docIds = new Array[Long](live.length)
+    val dls = new Array[Int](live.length)
+    val cqs = new Array[Long](live.length)
+    var i = 0
+    while (i < live.length) {
+      val (doc, dl, tfL) = live(i)
+      val tf = tfL.toDouble
+      // mirror query()'s expression tree op for op
+      val contrib = idf * ((tf * (K1 + 1.0)) /
+        (tf + K1 * ((1.0 - B) + B * dl.toDouble / h.avgdl)))
+      docIds(i) = doc
+      dls(i) = dl
+      cqs(i) = java.math.BigDecimal.valueOf(contrib * Scale.toDouble)
+        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+      i += 1
+    }
+    new TermPostings(docIds, dls, cqs)
+  }
+
+  /** Quantized BM25 sum / 2^20, rounded to 4 places as Spark's `round`
+    * rounds a DOUBLE (HALF_UP on its shortest decimal string). */
+  private def bm25q(sq: Long): Double =
+    java.math.BigDecimal.valueOf(sq.toDouble / Scale.toDouble)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** [[queryRanked]]'s resident twin, the route it takes inside the hot
+    * budget: a primitive integer-sum loop over the pre-quantized postings
+    * (no doubles, no allocation per posting), with [[query]]'s exact
+    * integer scores and (score desc, doc asc) tie-break, so hot and cold
+    * answers are bit-equal (spec-pinned). Returns (doc_id, dl, bm25q). */
+  private[graft] def hotQuery(terms: Seq[String], k: Int): Seq[(Long, Int, Double)] = {
     val h = hotState()
-    val uniq = terms.distinct
-    val loaded = uniq.map(t => hotTerm(h, t))
+    requireLive(h.total, h.n)
     val sums = new scala.collection.mutable.LongMap[Long]()
     val dlOf = new scala.collection.mutable.LongMap[Int]()
-    loaded.foreach { tp =>
+    terms.distinct.map(t => hotTerm(h, t)).foreach { tp =>
       var i = 0
       while (i < tp.docIds.length) {
         val doc = tp.docIds(i)
@@ -873,55 +949,19 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     // bounded top-k selection (score desc, doc asc): a full sort of the
     // candidate docs would dominate the probe at corpus scale (common
     // terms accumulate hundreds of thousands of docs)
-    def better(sqA: Long, docA: Long, sqB: Long, docB: Long): Boolean =
-      sqA > sqB || (sqA == sqB && docA < docB)
-    val topDoc = new Array[Long](k)
-    val topSq = new Array[Long](k)
-    var nTop = 0
-    var worst = -1
-    def recomputeWorst(): Unit = {
-      worst = 0
-      var i = 1
-      while (i < nTop) {
-        if (better(topSq(worst), topDoc(worst), topSq(i), topDoc(i))) worst = i
-        i += 1
-      }
-    }
-    sums.foreach { case (doc, sq) =>
-      if (nTop < k) {
-        topDoc(nTop) = doc; topSq(nTop) = sq; nTop += 1
-        if (nTop == k) recomputeWorst()
-      } else if (better(sq, doc, topSq(worst), topDoc(worst))) {
-        topDoc(worst) = doc; topSq(worst) = sq
-        recomputeWorst()
-      }
-    }
-    (0 until nTop).map(i => (topDoc(i), topSq(i)))
-      .sortBy { case (doc, sq) => (-sq, doc) }
-      .map { case (doc, sq) =>
-        (doc, dlOf(doc), java.math.BigDecimal.valueOf(sq.toDouble / Scale.toDouble)
-          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue())
-      }
+    val top = new TopCounts(k)
+    sums.foreach { case (doc, sq) => top.push(doc, sq) }
+    top.result().map { case (doc, sq) => (doc, dlOf(doc), bm25q(sq)) }
   }
 
-  /** Ranked EXACT-PHRASE search — the first thing a search user types,
-    * served from the SAME pruned term buckets as [[query]] (the postings
-    * carry sorted position arrays): a phrase occurrence at start position
-    * s exists iff every phrase slot j finds its term at position s + j, so
-    * each queried term's positions shift by its slot offset and a
-    * (doc, start) group counting all |phrase| distinct slots is a match.
-    * Docs rank by exact integer occurrence count (ties: doc_id asc).
-    *
-    * Scale shape: the scan is bucket-PRUNED to the phrase terms' partition
-    * dirs (PartitionFilters — spec-asserted) with the term filter inside,
-    * so the exploded position volume is df-bounded by the QUERIED terms
-    * (the q/numBuckets contract of [[query]], never the corpus); the only
-    * shuffles are keyed on (doc, start) and doc — cardinality bounded by
-    * the phrase terms' posting volume. A duplicated term in the phrase
-    * ("the cat the") is handled by slot offsets: each occurrence must
-    * cover all slots, including both of a repeated term's. Pending
-    * deletes anti-join exactly like [[query]]. Requires an index built
-    * after positions landed (rebuild adds them). */
+  /** A hot-routed answer as a DataFrame over a local relation. It is
+    * bound at call time, so collecting it launches no Spark job. */
+  private def local(schema: org.apache.spark.sql.types.StructType,
+                    rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
   // memoized per committed-dir set (names + mtimes — a rebuild republishes
   // batch=0 under the same name): one footer read per batch dir, once —
   // not per probe
@@ -956,13 +996,7 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     val buckets = terms.map(bucketOf).distinct
     val slots = spark.createDataFrame(phrase.zipWithIndex.map { case (t, j) => (t, j) })
       .toDF("term", "j")
-    // EVERY committed batch must carry positions, not just whichever
-    // footer schema inference happened to pick: on a mixed generation
-    // (pre-positions build + post-positions append) the union read would
-    // surface old postings' pos as NULL and explode() would SILENTLY drop
-    // every pre-upgrade doc from the ranked result — fail loudly instead
-    require(positionsEverywhere(),
-      s"TextIndex at $path has batches without positional postings — rebuild (or compact after a rebuild) to serve phrase queries")
+    requirePositions("phrase queries")
     val pruned = spark.read.parquet(postingsPath)
       .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
     val live = tombstones() match {
@@ -978,10 +1012,55 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       .groupBy("doc_id").agg(count(lit(1)).as("n_occ"))
   }
 
-  def phraseQuery(phrase: Seq[String], k: Int): DataFrame =
-    phraseOccurrences(phrase)
+  /** Ranked EXACT-PHRASE search — the first thing a search user types,
+    * served from the SAME pruned term buckets as [[query]] (the postings
+    * carry sorted position arrays): a phrase occurrence at start position
+    * s exists iff every phrase slot j finds its term at position s + j, so
+    * each queried term's positions shift by its slot offset and a
+    * (doc, start) group counting all |phrase| distinct slots is a match.
+    * Docs rank by exact integer occurrence count (ties: doc_id asc).
+    *
+    * Scale shape: the scan is bucket-PRUNED to the phrase terms' partition
+    * dirs (PartitionFilters — spec-asserted) with the term filter inside,
+    * so the exploded position volume is df-bounded by the QUERIED terms
+    * (the q/numBuckets contract of [[query]], never the corpus); the only
+    * shuffles are keyed on (doc, start) and doc — cardinality bounded by
+    * the phrase terms' posting volume. A duplicated term in the phrase
+    * ("the cat the") is handled by slot offsets: each occurrence must
+    * cover all slots, including both of a repeated term's. Pending
+    * deletes anti-join exactly like [[query]]. Requires an index built
+    * after positions landed (rebuild adds them).
+    *
+    * Routing: inside the hot budget ([[hotFits]]) the answer comes from the
+    * resident position lists ([[hotPhraseQuery]]) as a local relation
+    * BOUND AT CALL TIME — the way [[graft.operators.Percolate.matches]]
+    * runs its eager stage, a later write does not change an answer already
+    * returned. Over budget the DataFrame is the Spark plan above, evaluated
+    * when an action runs. */
+  def phraseQuery(phrase: Seq[String], k: Int): DataFrame = {
+    require(phrase.nonEmpty, "phrase needs at least one term")
+    requirePositions("phrase queries")
+    if (k > 0 && hotFits())
+      local(TextIndex.PhraseSchema, hotPhraseQuery(phrase, k).map { case (d, c) => Row(d, c) })
+    else phraseOccurrences(phrase)
       .orderBy(desc("n_occ"), asc("doc_id"))
       .limit(k)
+  }
+
+  /** EVERY committed batch must carry positions, not just whichever footer
+    * schema inference happened to pick: on a mixed generation
+    * (pre-positions build + post-positions append) the union read would
+    * surface old postings' pos as NULL and explode() would SILENTLY drop
+    * every pre-upgrade doc from the ranked result — fail loudly instead. */
+  private def requirePositions(surface: String): Unit =
+    require(positionsEverywhere(),
+      s"TextIndex at $path has batches without positional postings — rebuild (or compact after a rebuild) to serve $surface")
+
+  private def requireNear(termA: String, termB: String, window: Int): Unit = {
+    require(window >= 1, "window must be at least 1")
+    require(termA != termB, "NEAR needs two distinct terms (use phraseQuery for repeats)")
+    requirePositions("proximity queries")
+  }
 
   /** Ranked PROXIMITY search (the `NEAR/n` operator): docs where `termA`
     * and `termB` co-occur within `window` token positions, ranked by the
@@ -989,12 +1068,14 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * asc). Same serving shape as [[phraseQuery]]: the scan prunes to the
     * two terms' buckets, the per-doc position join is bounded by
     * tf(A)·tf(B) of the QUERIED terms (df-bounded, never the corpus), and
-    * pending deletes anti-join. Requires positional postings. */
+    * pending deletes anti-join. Requires positional postings. Routed like
+    * [[phraseQuery]]: inside the hot budget the answer is
+    * [[hotNearQuery]]'s, a local relation bound at call time. */
   def nearQuery(termA: String, termB: String, window: Int, k: Int): DataFrame = {
-    require(window >= 1, "window must be at least 1")
-    require(termA != termB, "NEAR needs two distinct terms (use phraseQuery for repeats)")
-    require(positionsEverywhere(),
-      s"TextIndex at $path has batches without positional postings — rebuild (or compact after a rebuild) to serve proximity queries")
+    requireNear(termA, termB, window)
+    if (k > 0 && hotFits())
+      return local(TextIndex.NearSchema,
+        hotNearQuery(termA, termB, window, k).map { case (d, c) => Row(d, c) })
     val terms = Seq(termA, termB)
     val buckets = terms.map(bucketOf).distinct
     val pruned = spark.read.parquet(postingsPath)
@@ -1033,8 +1114,7 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       s"TextIndex at $path has no committed corpus stats — build() first")
     val st = spark.read.parquet(statsPath)
       .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("sumdl")).head()
-    require(!st.isNullAt(0) && st.getLong(0) > 0,
-      s"TextIndex at $path indexes zero documents — build() over a non-empty corpus first")
+    val total = if (st.isNullAt(0)) 0L else st.getLong(0)
     val ts = tombstones()
     val (dead, deadDl) = ts match {
       case None => (0L, 0L)
@@ -1042,8 +1122,8 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
         val r = t.agg(count(lit(1)), coalesce(sum(col("dl").cast("long")), lit(0L))).head()
         (r.getLong(0), r.getLong(1))
     }
-    val n = st.getLong(0) - dead
-    require(n > 0, s"TextIndex at $path has zero live documents — every doc is tombstoned")
+    val n = total - dead
+    requireLive(total, n)
     (n, (st.getLong(1) - deadDl).toDouble / n.toDouble, ts)
   }
 
@@ -1157,8 +1237,16 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * round to the same 4-dp bm25q, so ranking the rounded column would be
     * ambiguous exactly where ranks must never be). The window runs over
     * the already-cut k-row answer, not the corpus. Returns
-    * (doc_id, dl, bm25q, rank) in rank order. */
+    * (doc_id, dl, bm25q, rank) in rank order.
+    *
+    * Routing: inside the hot budget ([[hotFits]]) the answer is
+    * [[hotQuery]]'s with its positions as ranks, a local relation BOUND AT
+    * CALL TIME (like [[graft.operators.Percolate.matches]]'s eager stage);
+    * over budget it is the Spark plan, evaluated when an action runs. */
   def queryRanked(terms: Seq[String], k: Int): DataFrame = {
+    if (k > 0 && hotFits())
+      return local(TextIndex.RankedSchema, hotQuery(terms, k).zipWithIndex.map {
+        case ((d, dl, s), i) => Row(d, dl, s, i + 1) })
     val aggregated = aggregatedSq(terms)
       .orderBy(desc("sq"), asc("doc_id")).limit(k)
     aggregated
@@ -1676,35 +1764,36 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * Same output and arithmetic as [[query]] — `booleanQuery(Nil, terms)`
     * IS `query(terms)` (spec-pinned).
     *
-    * Scale shape: ONE bucket+term-pruned scan over all three clauses'
-    * terms feeds the score sum, the MUST membership count, and the
-    * MUST_NOT exclusion set — every frame df-bounded by the QUERIED
-    * terms (the q/numBuckets contract), every join keyed on doc_id,
-    * nothing corpus-sized and nothing on the driver. MUST semantics use
-    * countDistinct(term) == |must| over the live postings, so pending
-    * deletes are honored by the same anti-join as scoring. */
+    * MUST-phrase clauses (the quoted segments of a search box): a result
+    * doc contains every phrase EXACTLY at least once; the phrases' terms
+    * join the scoring terms, so a phrase both filters and contributes.
+    * NOT-phrases exclude docs containing the exact phrase — the
+    * consecutive-position twin of MUST_NOT (their terms do NOT score, and
+    * MAY also appear as scored terms: excluding "data stream" while
+    * ranking on "stream" is a coherent ask, unlike a scored MUST_NOT
+    * term). The top-k cut comes after every clause.
+    *
+    * Routing: inside the hot budget ([[hotFits]]) the answer comes from
+    * the resident postings and positions ([[hotBoolean]]) as a local
+    * relation BOUND AT CALL TIME (like [[graft.operators.Percolate.matches]]'s
+    * eager stage). Over budget it is ONE bucket+term-pruned scan over all
+    * three clauses' terms feeding the score sum, the MUST membership count
+    * and the MUST_NOT exclusion set — every frame df-bounded by the
+    * QUERIED terms (the q/numBuckets contract), every join keyed on
+    * doc_id, nothing corpus-sized and nothing on the driver — evaluated
+    * when an action runs. MUST semantics use countDistinct(term) == |must|
+    * over the live postings, so pending deletes are honored by the same
+    * anti-join as scoring. */
   def booleanQuery(must: Seq[String], should: Seq[String] = Nil,
                    mustNot: Seq[String] = Nil, k: Int = 10,
                    phrases: Seq[Seq[String]] = Nil,
                    notPhrases: Seq[Seq[String]] = Nil): DataFrame = {
-    val m = must.distinct; val s = should.distinct; val x = mustNot.distinct
-    // MUST-phrase clauses (the quoted segments of a search box): a result
-    // doc contains every phrase EXACTLY at least once; the phrases' terms
-    // join the scoring terms, so a phrase both filters and contributes.
-    // NOT-phrases exclude docs containing the exact phrase — the
-    // consecutive-position twin of MUST_NOT (their terms do NOT score,
-    // and MAY also appear as scored terms: excluding "data stream" while
-    // ranking on "stream" is a coherent ask, unlike a scored MUST_NOT
-    // term).
-    val ph = phrases.map(_.filter(_.nonEmpty)).filter(_.nonEmpty)
-    val nx = notPhrases.map(_.filter(_.nonEmpty)).filter(_.nonEmpty)
-    require(m.nonEmpty || s.nonEmpty || ph.nonEmpty,
-      "boolean query needs at least one MUST or SHOULD term (or a phrase)")
-    require((m ++ s ++ ph.flatten).intersect(x).isEmpty,
-      s"terms ${ (m ++ s ++ ph.flatten).intersect(x).mkString(", ") } are both scored and MUST_NOT")
-    require(!nx.exists(p => ph.contains(p)),
-      "a phrase cannot be both MUST and MUST_NOT")
-    val scoreTerms = (m ++ s ++ ph.flatten).distinct
+    val c = new BoolClauses(must, should, mustNot, phrases, notPhrases)
+    if (k > 0 && hotFits())
+      return local(TextIndex.ScoredSchema,
+        hotBoolean(c, k).map { case (d, dl, sc) => Row(d, dl, sc) })
+    val (m, x) = (c.must, c.mustNot)
+    val scoreTerms = c.scoreTerms
     val (n, avgdl, ts) = liveCorpusStats()
     val idf = idfMapOf(scoreTerms, n, ts)
     val base = ts match {
@@ -1729,9 +1818,9 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     // each phrase constraint (semi-)joins its occurrence frame (df-bounded
     // by the phrase terms' posting volume, keyed on doc_id); negated
     // phrases anti-join the same frame
-    val mustConstrained = ph.foldLeft(agg)((acc, p) =>
+    val mustConstrained = c.phrases.foldLeft(agg)((acc, p) =>
       acc.join(phraseOccurrences(p).select("doc_id"), Seq("doc_id"), "left_semi"))
-    val constrained = nx.foldLeft(mustConstrained)((acc, p) =>
+    val constrained = c.notPhrases.foldLeft(mustConstrained)((acc, p) =>
       acc.join(phraseOccurrences(p).select("doc_id"), Seq("doc_id"), "left_anti"))
     rankedTail(constrained, k)
   }
@@ -1741,7 +1830,8 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * a MUST-phrase, and `-"quoted segment"` EXCLUDES the exact phrase
     * (`+table "data stream" -"slow scan" -hash`). Terms must already be
     * tokenizer-normalized (the index stores what
-    * [[graft.functions.TextFunctions.tokens]] produced). */
+    * [[graft.functions.TextFunctions.tokens]] produced). Routed and bound
+    * like [[booleanQuery]]. */
   def booleanQueryString(q: String, k: Int = 10): DataFrame = {
     // the sign binds to the quote: -"a b" EXCLUDES the phrase, +"a b" and
     // bare "a b" require it (silently treating a negated phrase as MUST —
@@ -1761,36 +1851,42 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       notPhrases = signed.collect { case ("-", p) => p })
   }
 
-  /** [[booleanQuery]] served from the resident tier (term clauses only —
-    * phrase clauses serve through the Spark path, or compose caller-side
-    * with [[hotPhraseQuery]]) — [[hotQuery]]'s sum
-    * loop over the pre-quantized postings plus membership predicates from
-    * the same loaded lists (a doc qualifies iff every MUST term's posting
-    * set contains it and no MUST_NOT term's does); tombstoned docs are
+  /** [[booleanQuery]] over term clauses only, from the resident tier —
+    * the twin specs and the benchmark gate compare against. */
+  private[graft] def hotBooleanQuery(must: Seq[String], should: Seq[String] = Nil,
+                                     mustNot: Seq[String] = Nil,
+                                     k: Int = 10): Seq[(Long, Int, Double)] =
+    hotBoolean(new BoolClauses(must, should, mustNot, Nil, Nil), k)
+
+  /** [[booleanQuery]] served from the resident tier — [[hotQuery]]'s sum
+    * loop over the pre-quantized postings, restricted to docs that hold
+    * every MUST term and MUST-phrase ([[phraseWalk]] over the resident
+    * positions) and no MUST_NOT term or NOT-phrase; tombstoned docs are
     * excluded at load, so hot and cold answers are bit-equal
     * (spec-pinned). Zero Spark jobs warm. */
-  def hotBooleanQuery(must: Seq[String], should: Seq[String] = Nil,
-                      mustNot: Seq[String] = Nil, k: Int = 10): Seq[(Long, Int, Double)] = {
-    val m = must.distinct; val s = should.distinct; val x = mustNot.distinct
-    require(m.nonEmpty || s.nonEmpty,
-      "boolean query needs at least one MUST or SHOULD term")
-    require((m ++ s).intersect(x).isEmpty,
-      s"terms ${ (m ++ s).intersect(x).mkString(", ") } are both scored and MUST_NOT")
+  private def hotBoolean(c: BoolClauses, k: Int): Seq[(Long, Int, Double)] = {
     val h = hotState()
-    val mustSets: Seq[scala.collection.mutable.HashSet[Long]] = m.map { t =>
+    requireLive(h.total, h.n)
+    if (c.phrases.nonEmpty || c.notPhrases.nonEmpty) requirePositions("phrase queries")
+    def termDocs(t: String): scala.collection.mutable.HashSet[Long] = {
       val set = new scala.collection.mutable.HashSet[Long]()
       hotTerm(h, t).docIds.foreach(set.add)
       set
     }
-    val notSet = new scala.collection.mutable.HashSet[Long]()
-    x.foreach(t => hotTerm(h, t).docIds.foreach(notSet.add))
+    def phraseDocs(p: Seq[String]): scala.collection.mutable.HashSet[Long] = {
+      val set = new scala.collection.mutable.HashSet[Long]()
+      phraseWalk(h, p)((doc, _) => set.add(doc): Unit)
+      set
+    }
+    val required = c.must.map(termDocs) ++ c.phrases.map(phraseDocs)
+    val excluded = c.mustNot.map(termDocs) ++ c.notPhrases.map(phraseDocs)
     val sums = new scala.collection.mutable.LongMap[Long]()
     val dlOf = new scala.collection.mutable.LongMap[Int]()
-    (m ++ s).distinct.map(t => hotTerm(h, t)).foreach { tp =>
+    c.scoreTerms.map(t => hotTerm(h, t)).foreach { tp =>
       var i = 0
       while (i < tp.docIds.length) {
         val doc = tp.docIds(i)
-        if (mustSets.forall(_.contains(doc)) && !notSet.contains(doc)) {
+        if (required.forall(_.contains(doc)) && !excluded.exists(_.contains(doc))) {
           sums(doc) = sums.getOrElse(doc, 0L) + tp.cqs(i)
           dlOf(doc) = tp.dls(i)
         }
@@ -1801,9 +1897,48 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     // a full sort of every candidate doc would dominate at corpus scale
     val top = new TopCounts(k)
     sums.foreach { case (doc, sq) => top.push(doc, sq) }
-    top.result().map { case (doc, sq) =>
-      (doc, dlOf(doc), java.math.BigDecimal.valueOf(sq.toDouble / Scale.toDouble)
-        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue())
-    }
+    top.result().map { case (doc, sq) => (doc, dlOf(doc), bm25q(sq)) }
   }
+
+  /** A boolean query's clauses, de-duplicated and validated: empty phrase
+    * words and empty phrases drop; a scored term may not also be MUST_NOT,
+    * and a phrase may not be both required and excluded. */
+  private final class BoolClauses(must0: Seq[String], should0: Seq[String],
+      mustNot0: Seq[String], phrases0: Seq[Seq[String]], notPhrases0: Seq[Seq[String]]) {
+    val must: Seq[String] = must0.distinct
+    val should: Seq[String] = should0.distinct
+    val mustNot: Seq[String] = mustNot0.distinct
+    val phrases: Seq[Seq[String]] = phrases0.map(_.filter(_.nonEmpty)).filter(_.nonEmpty)
+    val notPhrases: Seq[Seq[String]] = notPhrases0.map(_.filter(_.nonEmpty)).filter(_.nonEmpty)
+    val scoreTerms: Seq[String] = (must ++ should ++ phrases.flatten).distinct
+    require(must.nonEmpty || should.nonEmpty || phrases.nonEmpty,
+      "boolean query needs at least one MUST or SHOULD term (or a phrase)")
+    require(scoreTerms.intersect(mustNot).isEmpty,
+      s"terms ${ scoreTerms.intersect(mustNot).mkString(", ") } are both scored and MUST_NOT")
+    require(!notPhrases.exists(p => phrases.contains(p)),
+      "a phrase cannot be both MUST and MUST_NOT")
+  }
+}
+
+/** The schemas of the index's own files, each defined once next to its
+  * writer in [[TextIndex]] and read back with it, so a read never runs a
+  * schema-inference job; and the schemas of the hot-routed answers, equal
+  * to those of the Spark routes they stand in for. Partition columns
+  * (`batch`, `bucket`) are left to partition discovery. */
+private[store] object TextIndex {
+  import org.apache.spark.sql.types.StructType
+  /** `postings/batch=N/bucket=B/` — [[TextIndex.postingFrames]]. */
+  val PostingsSchema: StructType =
+    StructType.fromDDL("term STRING, doc_id BIGINT, dl INT, tf BIGINT, pos ARRAY<INT>")
+  /** `_termstats/batch=N/bucket=B/` — [[TextIndex.termStatsOf]]. */
+  val TermStatsSchema: StructType =
+    StructType.fromDDL("term STRING, df BIGINT, max_tf BIGINT, min_dl INT")
+  /** `_stats/batch=N/` — one (n_docs, sum_dl) row per batch. */
+  val StatsSchema: StructType = StructType.fromDDL("n_docs BIGINT, sum_dl BIGINT")
+
+  val RankedSchema: StructType =
+    StructType.fromDDL("doc_id BIGINT, dl INT, bm25q DOUBLE, rank INT")
+  val ScoredSchema: StructType = StructType.fromDDL("doc_id BIGINT, dl INT, bm25q DOUBLE")
+  val PhraseSchema: StructType = StructType.fromDDL("doc_id BIGINT, n_occ BIGINT")
+  val NearSchema: StructType = StructType.fromDDL("doc_id BIGINT, n_pairs BIGINT")
 }

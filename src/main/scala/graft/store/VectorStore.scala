@@ -364,12 +364,11 @@ final class VectorStore(spark: SparkSession, val basePath: String) {
 
     /** [[query]] taking chroma's dict filter dialect as JSON strings; the
       * translated predicates flow into the routed/pruned index scan exactly
-      * like Column-form `where`/`whereDocument` — EXCEPT that the dict
-      * form also compiles to a plain JVM evaluator
-      * (ChromaWhere.compileWhere), so a FILTERED probe against an attached
-      * graph index can stay on the sub-millisecond hot tier. An opaque
-      * Column predicate can never do that (only Catalyst can run it);
-      * declarative filters are strictly more servable. Falls back to the
+      * like Column-form `where`/`whereDocument`, which an attached IVF
+      * index filters on its hot tier. Against an attached GRAPH index the
+      * dict form also compiles to a plain JVM evaluator
+      * (ChromaWhere.compileWhere), so a FILTERED probe stays on the
+      * sub-millisecond hot tier inside the beam walk. Falls back to the
       * Spark path whenever the hot tier declines (no payload/meta, over
       * byte budget). Answers are identical either way — the hot filter
       * applies the Catalyst cast/NULL semantics (ChromaWhereSpec pins the
@@ -380,18 +379,15 @@ final class VectorStore(spark: SparkSession, val basePath: String) {
       if (metric == "l2" && (whereJson != null || whereDocumentJson != null)) {
         val wOk = Option(whereJson).map(graft.functions.ChromaWhere.compileWhere)
         val dOk = Option(whereDocumentJson).map(graft.functions.ChromaWhere.compileWhereDocument)
-        val served = attachedIdx.get(name) match {
+        attachedIdx.get(name) match {
           case Some(VectorStore.AttachedGraph(idx, beamWidth, hops, _)) =>
-            idx.hotServeFiltered(queryEmb, k, beamWidth, hops, wOk, dOk)
-          case Some(VectorStore.AttachedIvf(idx, nprobe, None)) =>
-            idx.hotServeFiltered(queryEmb, k, nprobe, wOk, dOk)
-          case _ => None
-        }
-        served match {
-          case Some(rows) =>
-            import spark.implicits._
-            return rows.toDF("id", "doc", "distance")
-          case None => ()
+            idx.hotServeFiltered(queryEmb, k, beamWidth, hops, wOk, dOk) match {
+              case Some(rows) =>
+                import spark.implicits._
+                return rows.toDF("id", "doc", "distance")
+              case None => ()
+            }
+          case _ => ()
         }
       }
       query(queryEmb, k, metric,
@@ -801,7 +797,15 @@ final class VectorStore(spark: SparkSession, val basePath: String) {
       * probe / beam walk instead of a corpus scan — the Chroma serving
       * model), predicates included: the index stores doc/meta, so `where`/
       * `whereDocument` apply inside the pruned index scan. Cosine queries
-      * keep the exact brute-force path (the indexes are L2-keyed). */
+      * keep the exact brute-force path (the indexes are L2-keyed).
+      *
+      * Inside the hot budget an attached IVF index answers from its
+      * JVM-resident rows, filters included when they fold at plan time
+      * ([[IvfIndex.hotServe]]), and an attached graph index answers
+      * unfiltered probes the same way: the DataFrame is then a local
+      * relation BOUND AT CALL TIME (like
+      * [[graft.operators.Percolate.matches]]'s eager stage), not a plan
+      * re-evaluated per action. */
     def query(queryEmb: Array[Float], k: Int, metric: String = "l2",
               where: Option[Column] = None,
               whereDocument: Option[Column] = None): DataFrame =
@@ -813,9 +817,9 @@ final class VectorStore(spark: SparkSession, val basePath: String) {
 
     /** [[queryBatch]] in the dict filter dialect — and, like
       * [[queryJson]], FILTERED batches stay on the hot tier when the
-      * dialect compiles and the attached index accepts (all probes share
-      * one JVM state load); any per-probe decline falls the whole batch
-      * back to the Spark path so the answer source is uniform. */
+      * attached index accepts (all probes share one JVM state load); any
+      * per-probe decline falls the whole batch back to the Spark path so
+      * the answer source is uniform. */
     def queryBatchJson(queryEmbs: Seq[Array[Float]], k: Int, metric: String = "l2",
                        whereJson: String = null,
                        whereDocumentJson: String = null): DataFrame = {
@@ -823,25 +827,17 @@ final class VectorStore(spark: SparkSession, val basePath: String) {
       if (metric == "l2" && (whereJson != null || whereDocumentJson != null)) {
         val wOk = Option(whereJson).map(graft.functions.ChromaWhere.compileWhere)
         val dOk = Option(whereDocumentJson).map(graft.functions.ChromaWhere.compileWhereDocument)
-        def gather(serve: Array[Float] => Option[Seq[(String, String, Double)]])
-          : Option[Seq[(Long, String, String, Double)]] = {
-          val per = queryEmbs.zipWithIndex.map { case (qe, i) =>
-            serve(qe).map(_.map { case (cid, doc, d) => (i.toLong, cid, doc, d) })
-          }
-          if (per.forall(_.isDefined)) Some(per.flatMap(_.get)) else None
-        }
-        val served = attachedIdx.get(name) match {
+        attachedIdx.get(name) match {
           case Some(VectorStore.AttachedGraph(idx, beamWidth, hops, _)) =>
-            gather(idx.hotServeFiltered(_, k, beamWidth, hops, wOk, dOk))
-          case Some(VectorStore.AttachedIvf(idx, nprobe, None)) =>
-            gather(idx.hotServeFiltered(_, k, nprobe, wOk, dOk))
-          case _ => None
-        }
-        served match {
-          case Some(rows) =>
-            import spark.implicits._
-            return rows.toDF("query_idx", "id", "doc", "distance")
-          case None => ()
+            val per = queryEmbs.zipWithIndex.map { case (qe, i) =>
+              idx.hotServeFiltered(qe, k, beamWidth, hops, wOk, dOk)
+                .map(_.map { case (cid, doc, d) => (i.toLong, cid, doc, d) })
+            }
+            if (per.forall(_.isDefined)) {
+              import spark.implicits._
+              return per.flatMap(_.get).toDF("query_idx", "id", "doc", "distance")
+            }
+          case _ => ()
         }
       }
       queryBatch(queryEmbs, k, metric,
@@ -864,28 +860,24 @@ final class VectorStore(spark: SparkSession, val basePath: String) {
       val pred = (where.toSeq ++ whereDocument.toSeq).reduceOption(_ && _)
       import spark.implicits._
       attachedIdx.get(name) match {
-        case Some(ai) if metric == "l2" && pred.isEmpty =>
+        case Some(ai) if metric == "l2" =>
           val hotRows: Option[Seq[(Long, String, String, Double)]] = ai match {
             case VectorStore.AttachedIvf(idx, nprobe, None) =>
-              idx.hotServeBatch(probes, k, nprobe)
-            case VectorStore.AttachedIvf(_, _, Some(_)) => None
-            case VectorStore.AttachedGraph(idx, beamWidth, hops, _) =>
+              idx.hotServeBatch(probes, k, nprobe, pred)
+            case VectorStore.AttachedGraph(idx, beamWidth, hops, _) if pred.isEmpty =>
               idx.hotServeBatch(probes, k, beamWidth, hops)
+            case _ => None
           }
           hotRows match {
             case Some(rows) => rows.toDF("query_idx", "id", "doc", "distance")
-            case None => // no routing payload: per-probe routed fallback
+            case None =>
+              // no routing payload, or predicate probes on the pushed-down
+              // index scans: per-probe routed fallback
               probes.map { case (qi, qe) =>
-                routedQuery(ai, qe, k, None, None)
+                routedQuery(ai, qe, k, where, whereDocument)
                   .select(lit(qi).as("query_idx"), col("id"), col("doc"), col("distance"))
               }.reduce(_ unionByName _)
           }
-        case Some(ai) if metric == "l2" =>
-          // predicate probes keep the pushed-down index scans, per probe
-          probes.map { case (qi, qe) =>
-            routedQuery(ai, qe, k, where, whereDocument)
-              .select(lit(qi).as("query_idx"), col("id"), col("doc"), col("distance"))
-          }.reduce(_ unionByName _)
         case _ =>
           // brute: ONE scan for the whole batch
           val probeDf = broadcast(
@@ -932,10 +924,11 @@ final class VectorStore(spark: SparkSession, val basePath: String) {
       val pred = (where.toSeq ++ whereDocument.toSeq).reduceOption(_ && _)
       ai match {
         case VectorStore.AttachedIvf(idx, nprobe, qs) =>
-          // unfiltered probes serve from the JVM-resident hot tier (the
-          // GraphIndex discipline; bit-equal to the pruned scan); the
-          // quantized route goes straight to the two-phase codes probe
-          (if (pred.isEmpty && qs.isEmpty) idx.hotServe(qe, k, nprobe) else None) match {
+          // probes serve from the JVM-resident hot tier (the GraphIndex
+          // discipline; bit-equal to the pruned scan), a predicate
+          // included when it folds at plan time; the quantized route goes
+          // straight to the two-phase codes probe
+          (if (qs.isEmpty) idx.hotServe(qe, k, nprobe, pred) else None) match {
             case Some(rows) =>
               import spark.implicits._
               rows.toDF("id", "doc", "distance")

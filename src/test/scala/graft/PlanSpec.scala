@@ -69,8 +69,10 @@ class PlanSpec extends AnyFunSuite with SparkTest {
   test("boolean and prefix probes stay bucket-pruned; percolate never cross-joins") {
     // the r8 text surfaces inherit the q/numBuckets contract: the postings
     // scan lists only the queried (or expanded) terms' bucket partitions
+    // (the Spark route's plan: inside the hot budget q_boolean answers
+    // from the resident tier)
     Seq("q_boolean", "q_prefix").foreach { q =>
-      val p = plan(q)
+      val p = withHotBudget(1L)(plan(q))
       assert(p.contains("PartitionFilters: [bucket#") ||
         p.contains("PartitionFilters: [isnotnull(bucket"),
         s"$q must prune to its terms' bucket partitions:\n$p")

@@ -28,4 +28,17 @@ trait SparkTest {
   }
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
+
+  /** Run `body` under the hot-tier admission budget `bytes`
+    * (`graft.hot.maxBytes`); 1 forces every routed entry onto its Spark
+    * route. */
+  def withHotBudget[A](bytes: Long)(body: => A): A = {
+    val prev = System.getProperty("graft.hot.maxBytes")
+    System.setProperty("graft.hot.maxBytes", bytes.toString)
+    try body
+    finally {
+      if (prev == null) System.clearProperty("graft.hot.maxBytes")
+      else System.setProperty("graft.hot.maxBytes", prev)
+    }
+  }
 }

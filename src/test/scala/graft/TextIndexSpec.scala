@@ -87,7 +87,9 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
       (6L, "go go")                                 // "go go go" must NOT match
     ).toDF("doc_id", "text"))
 
-    val hits = idx.phraseQuery(Seq("big", "data"), 10)
+    // the Spark route's plan: inside the hot budget the entry answers from
+    // the resident positions instead
+    val hits = withHotBudget(1L)(idx.phraseQuery(Seq("big", "data"), 10))
     val plan = hits.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [bucket#") ||
       plan.contains("PartitionFilters: [isnotnull(bucket"),
@@ -125,7 +127,7 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
       (3L, "big data big"),          // two pairs (both bigs within 3 of data)
       (4L, "data alone here")        // no co-occurrence
     ).toDF("doc_id", "text"))
-    val hits = idx.nearQuery("big", "data", window = 3, k = 10)
+    val hits = withHotBudget(1L)(idx.nearQuery("big", "data", window = 3, k = 10))
     val plan = hits.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [bucket#") ||
       plan.contains("PartitionFilters: [isnotnull(bucket"),

@@ -130,7 +130,7 @@ class PolicySidecarSpec extends AnyFunSuite with SparkTest {
     assert(encGraph.beamPolicyStatus(moved, k, ladder, hops) == PolicyAbsent)
   }
 
-  test("a fresh IvfIndex.depthPolicyOrRecalibrate reads meta once: 4 Spark jobs") {
+  test("a fresh IvfIndex.depthPolicyOrRecalibrate reads meta once: 2 Spark jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     val persisted = ivf.persistDepthPolicy(panel, k)
     val sc = spark.sparkContext
@@ -161,8 +161,9 @@ class PolicySidecarSpec extends AnyFunSuite with SparkTest {
       val got = try ivf.depthPolicyOrRecalibrate(panel, k) finally sc.clearJobGroup()
       drain()
       assert(got == persisted)
-      // one meta read (schema + head) and one rows read (schema + collect)
-      assert(ended.size == 4)
+      // one meta head and one rows collect: both read with the writer's
+      // schema, so neither runs a schema-inference job
+      assert(ended.size == 2)
     } finally sc.removeSparkListener(listener)
   }
 
