@@ -977,13 +977,16 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     StoreIO.treeBytes(dataPath) <= StoreIO.hotBudgetBytes()
 
   /** [[hotServe]] over a probe batch (the `Collection.queryBatch` hot
-    * path): one state check, rows tagged by query index. None as soon as
-    * one probe declines, so the answer source stays uniform. */
+    * path): one admission check and state load, rows tagged by query
+    * index. None as soon as one probe declines, so the answer source stays
+    * uniform. */
   private[store] def hotServeBatch(probes: Seq[(Long, Array[Float])], k: Int,
                                    nprobe: Int, where: Option[Column] = None)
       : Option[Seq[(Long, String, String, Double)]] = {
+    if (!hotFits()) return None
+    val h = hotState()
     val per = probes.iterator.map { case (qi, qe) =>
-      hotServe(qe, k, nprobe, where).map(_.map { case (cid, doc, d) => (qi, cid, doc, d) })
+      hotServeIn(h, qe, k, nprobe, where).map(_.map { case (cid, doc, d) => (qi, cid, doc, d) })
     }.takeWhile(_.isDefined).toSeq
     if (per.length == probes.length) Some(per.flatMap(_.get)) else None
   }
@@ -995,9 +998,11 @@ final class IvfIndex(spark: SparkSession, val path: String, val numCells: Int) {
     * when the index has no routing payload, exceeds the hot byte budget,
     * or `where` does not fold at plan time ([[hotFilter]]). */
   private[store] def hotServe(qe: Array[Float], k: Int, nprobe: Int,
-                              where: Option[Column] = None): Option[Seq[(String, String, Double)]] = {
-    if (!hotFits()) return None
-    val h = hotState()
+                              where: Option[Column] = None): Option[Seq[(String, String, Double)]] =
+    if (!hotFits()) None else hotServeIn(hotState(), qe, k, nprobe, where)
+
+  private def hotServeIn(h: HotState, qe: Array[Float], k: Int, nprobe: Int,
+                         where: Option[Column]): Option[Seq[(String, String, Double)]] = {
     if (h.rows.isEmpty) return None
     def payload(id: Long, d: Double) = {
       val v = h.rows.get(id)

@@ -535,11 +535,12 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * tier, text shape: corpus stats corrected for pending tombstones at
     * load, the dead-doc set, and postings. An index inside the hot budget
     * ([[hotFits]]) holds EVERY term's postings and positions, filled by
-    * [[loadAll]] from one read of each tree, so a warmed index serves any
-    * term with no Spark job; a larger one loads postings PER TERM on first
-    * use (one bucket+term-pruned read each) into a byte-bounded cache.
-    * Keyed on the publish fingerprint; append/delete/compact/build
-    * invalidate wholesale. */
+    * [[loadAll]] from one streamed read of each tree, so a warmed index
+    * serves any term with no Spark job; a larger one — on disk, or once
+    * decompressed into memory — loads postings PER TERM on first use (one
+    * bucket+term-pruned read each) into a byte-bounded cache. Keyed on the
+    * publish fingerprint; append/delete/compact/build invalidate
+    * wholesale. */
   /** One term's postings with the quantized contribution PRE-COMPUTED:
     * idf and avgdl are constants of the hot state, so the per-posting
     * double pipeline + HALF_UP quantization run ONCE at term load —
@@ -572,6 +573,11 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
 
   @volatile private var hotCache: HotText = null
 
+  /** (publish fingerprint, budget) at which [[loadAll]] outgrew the budget
+    * in memory: [[hotFits]] declines there, so the routed entries serve
+    * from Spark rather than through a per-term cache. */
+  @volatile private var hotOverflow: (String, Long) = null
+
   private def hotKey(): String = {
     def names(p: String) = StoreIO.committedBatchDirs(p).map(_.getName).mkString(",")
     def mt(p: String) = new java.io.File(p).lastModified()
@@ -580,12 +586,18 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
   }
 
   /** Admission for routed hot serving — the IVF/graph rule: the on-disk
-    * postings and term-stats trees fit [[StoreIO.hotBudgetBytes]]. A
+    * postings and term-stats trees fit [[StoreIO.hotBudgetBytes]], and the
+    * last full load at this fingerprint and budget did not outgrow it in
+    * memory (position lists decompress well past their disk bytes). A
     * jobless driver-side size probe, re-read per call, so a changed
     * budget takes effect at once. */
-  private[graft] def hotFits(): Boolean =
-    StoreIO.treeBytes(postingsPath) + StoreIO.treeBytes(termstatsPath) <=
-      StoreIO.hotBudgetBytes()
+  private[graft] def hotFits(): Boolean = {
+    val budget = StoreIO.hotBudgetBytes()
+    StoreIO.treeBytes(postingsPath) + StoreIO.treeBytes(termstatsPath) <= budget && {
+      val o = hotOverflow
+      o == null || o._2 != budget || o._1 != hotKey()
+    }
+  }
 
   private def hotState(): HotText = {
     val key = hotKey()
@@ -604,8 +616,13 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       val total = if (st.isNullAt(0)) 0L else st.getLong(0)
       val sumDl = if (st.isNullAt(1)) 0L else st.getLong(1)
       val n = total - dead.size()
-      h = new HotText(key, total, n, (sumDl - deadDl).toDouble / n.toDouble, dead, fits)
-      if (fits) loadAll(h)
+      def fresh(full: Boolean) =
+        new HotText(key, total, n, (sumDl - deadDl).toDouble / n.toDouble, dead, full)
+      h = fresh(fits)
+      if (fits && !loadAll(h)) {
+        hotOverflow = (key, StoreIO.hotBudgetBytes())
+        h = fresh(false)
+      }
       hotCache = h
     }
     h
@@ -619,31 +636,69 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     require(n > 0, s"TextIndex at $path has zero live documents — every doc is tombstoned")
   }
 
+  /** One term's posting rows as primitive parallel arrays, buffered by
+    * [[loadAll]]'s pass. */
+  private final class TermRowsBuf {
+    val docs = Array.newBuilder[Long]
+    val dls = Array.newBuilder[Int]
+    val tfs = Array.newBuilder[Long]
+    val pos = Array.newBuilder[Array[Int]]
+  }
+
   /** Fill `h` with EVERY term from one read of each admitted tree: the
     * postings (positions included when every batch carries them) and the
     * `_termstats` df. Same per-term arithmetic as the per-term loads
     * ([[termPostings]], [[termPositions]]), so a fully loaded state
-    * serves bit-equal answers. */
-  private def loadAll(h: HotText): Unit = {
+    * serves bit-equal answers. The postings stream in partition by
+    * partition and land in primitive per-term buffers, counted with the
+    * resident-size estimates ([[termBytes]], [[posBytes]]); the pass stops
+    * and returns false, leaving `h` empty, once they pass
+    * [[StoreIO.hotBudgetBytes]], so driver heap stays near the budget. */
+  private def loadAll(h: HotText): Boolean = {
+    val budget = StoreIO.hotBudgetBytes()
     val withPos = positionsEverywhere()
+    val bufs = new java.util.HashMap[String, TermRowsBuf]()
+    var bytes = 0L
+    val cols = Seq("term", "doc_id", "dl", "tf") ++ (if (withPos) Seq("pos") else Nil)
+    val it = spark.read.schema(TextIndex.PostingsSchema).parquet(postingsPath)
+      .select(cols.map(col): _*).toLocalIterator()
+    while (bytes <= budget && it.hasNext) {
+      val r = it.next()
+      var b = bufs.get(r.getString(0))
+      if (b == null) {
+        b = new TermRowsBuf
+        bufs.put(r.getString(0), b)
+        bytes += (if (withPos) 128L else 64L)
+      }
+      b.docs += r.getLong(1); b.dls += r.getInt(2); b.tfs += r.getLong(3)
+      bytes += 20L
+      if (withPos) {
+        val p = r.getSeq[Int](4).toArray
+        b.pos += p
+        bytes += 12L + 4L * p.length
+      }
+    }
+    if (bytes > budget) return false
     val dfRaw = scala.collection.mutable.HashMap.empty[String, Long]
     spark.read.schema(TextIndex.TermStatsSchema).parquet(termstatsPath)
       .select("term", "df").collect()
       .foreach(r => dfRaw(r.getString(0)) = dfRaw.getOrElse(r.getString(0), 0L) + r.getLong(1))
-    val cols = Seq("term", "doc_id", "dl", "tf") ++ (if (withPos) Seq("pos") else Nil)
-    spark.read.schema(TextIndex.PostingsSchema).parquet(postingsPath)
-      .select(cols.map(col): _*).collect()
-      .groupBy(_.getString(0)).foreach { case (t, rs) =>
-        val tp = termPostings(h, rs.map(r => (r.getLong(1), r.getInt(2), r.getLong(3))),
-          dfRaw.getOrElse(t, 0L))
-        h.postings.put(t, tp)
-        h.bytes.addAndGet(termBytes(tp))
-        if (withPos) {
-          val pp = termPositions(h, rs.map(r => (r.getLong(1), r.getSeq[Int](4))))
-          h.positions.put(t, pp)
-          h.bytes.addAndGet(posBytes(pp))
-        }
+    val terms = bufs.entrySet().iterator()
+    while (terms.hasNext) {
+      val e = terms.next()
+      terms.remove()
+      val (t, b) = (e.getKey, e.getValue)
+      val docs = b.docs.result()
+      val tp = termPostings(h, docs, b.dls.result(), b.tfs.result(), dfRaw.getOrElse(t, 0L))
+      h.postings.put(t, tp)
+      h.bytes.addAndGet(termBytes(tp))
+      if (withPos) {
+        val pp = termPositions(h, docs, b.pos.result())
+        h.positions.put(t, pp)
+        h.bytes.addAndGet(posBytes(pp))
       }
+    }
+    true
   }
 
   /** One term's postings, bucket+term-pruned, read with the writer's
@@ -693,8 +748,8 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     if (h.full) h.positions.getOrDefault(term, NoPositions)
     else {
       val tp = h.positions.computeIfAbsent(term, { t =>
-        val out = termPositions(h,
-          termRows(t, "doc_id", "pos").map(r => (r.getLong(0), r.getSeq[Int](1))))
+        val rows = termRows(t, "doc_id", "pos")
+        val out = termPositions(h, rows.map(_.getLong(0)), rows.map(_.getSeq[Int](1).toArray))
         h.bytes.addAndGet(posBytes(out))
         out
       })
@@ -716,12 +771,13 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * walks each doc ONCE, matching the Spark probes' distinct-position
     * counting (duplicate docIds would otherwise emit duplicate ranked rows
     * AND break the binary searches' unique-key assumption). */
-  private def termPositions(h: HotText, rows: Array[(Long, Seq[Int])]): TermPositions = {
-    val merged = rows.filter(r => !h.dead.contains(r._1))
-      .groupBy(_._1).toArray.sortBy(_._1).map { case (doc, rs) =>
+  private def termPositions(h: HotText, docs: Array[Long],
+                            pos: Array[Array[Int]]): TermPositions = {
+    val merged = docs.indices.filter(i => !h.dead.contains(docs(i)))
+      .groupBy(docs(_)).toArray.sortBy(_._1).map { case (doc, is) =>
         (doc,
-          if (rs.length == 1) rs(0)._2.toArray
-          else rs.flatMap(_._2).distinct.sorted)
+          if (is.length == 1) pos(is(0))
+          else is.flatMap(pos(_)).distinct.sorted.toArray)
       }
     val docIds = merged.map(_._1)
     val posArrs = merged.map(_._2)
@@ -878,8 +934,9 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
       val dfRaw = spark.read.schema(TextIndex.TermStatsSchema).parquet(termstatsPath)
         .filter(col("bucket") === bucketOf(t) && col("term") === t)
         .agg(coalesce(sum(col("df")), lit(0L))).head().getLong(0)
-      val tp = termPostings(h, termRows(t, "doc_id", "dl", "tf")
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))), dfRaw)
+      val rows = termRows(t, "doc_id", "dl", "tf")
+      val tp = termPostings(h, rows.map(_.getLong(0)), rows.map(_.getInt(1)),
+        rows.map(_.getLong(2)), dfRaw)
       h.bytes.addAndGet(termBytes(tp))
       tp
     })
@@ -889,15 +946,10 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     * posting's contribution is pre-quantized with [[query]]'s EXACT
     * arithmetic — same stat corrections, same double expression tree,
     * same HALF_UP rounding. */
-  private def termPostings(h: HotText, rows: Array[(Long, Int, Long)],
-                           dfRaw: Long): TermPostings = {
-    var deadCnt = 0L
-    val live = rows.filter { r =>
-      val isDead = h.dead.contains(r._1)
-      if (isDead) deadCnt += 1
-      !isDead
-    }
-    val df = (dfRaw - deadCnt).toDouble
+  private def termPostings(h: HotText, docs: Array[Long], dlsIn: Array[Int],
+                           tfs: Array[Long], dfRaw: Long): TermPostings = {
+    val live = docs.indices.filter(i => !h.dead.contains(docs(i))).toArray
+    val df = (dfRaw - (docs.length - live.length)).toDouble
     // StrictMath.log — the SAME function Spark's `log` expression calls
     // (catalyst UnaryLogExpression), so the hot tier, the Seq route, and
     // the frame route quantize bit-identical cq from identical idf
@@ -907,12 +959,13 @@ final class TextIndex(spark: SparkSession, path: String, numBuckets: Int) {
     val cqs = new Array[Long](live.length)
     var i = 0
     while (i < live.length) {
-      val (doc, dl, tfL) = live(i)
-      val tf = tfL.toDouble
+      val j = live(i)
+      val dl = dlsIn(j)
+      val tf = tfs(j).toDouble
       // mirror query()'s expression tree op for op
       val contrib = idf * ((tf * (K1 + 1.0)) /
         (tf + K1 * ((1.0 - B) + B * dl.toDouble / h.avgdl)))
-      docIds(i) = doc
+      docIds(i) = docs(j)
       dls(i) = dl
       cqs(i) = java.math.BigDecimal.valueOf(contrib * Scale.toDouble)
         .setScale(0, java.math.RoundingMode.HALF_UP).longValue()

@@ -871,10 +871,10 @@ final class VectorStore(spark: SparkSession, val basePath: String) {
           hotRows match {
             case Some(rows) => rows.toDF("query_idx", "id", "doc", "distance")
             case None =>
-              // no routing payload, or predicate probes on the pushed-down
-              // index scans: per-probe routed fallback
+              // no routing payload, over budget, or a predicate the hot
+              // tier declined: every probe takes the Spark route
               probes.map { case (qi, qe) =>
-                routedQuery(ai, qe, k, where, whereDocument)
+                sparkRoutedQuery(ai, qe, k, pred)
                   .select(lit(qi).as("query_idx"), col("id"), col("doc"), col("distance"))
               }.reduce(_ unionByName _)
           }
@@ -922,49 +922,52 @@ final class VectorStore(spark: SparkSession, val basePath: String) {
                             k: Int, where: Option[Column],
                             whereDocument: Option[Column]): DataFrame = {
       val pred = (where.toSeq ++ whereDocument.toSeq).reduceOption(_ && _)
-      ai match {
-        case VectorStore.AttachedIvf(idx, nprobe, qs) =>
-          // probes serve from the JVM-resident hot tier (the GraphIndex
-          // discipline; bit-equal to the pruned scan), a predicate
-          // included when it folds at plan time; the quantized route goes
-          // straight to the two-phase codes probe
-          (if (qs.isEmpty) idx.hotServe(qe, k, nprobe, pred) else None) match {
-            case Some(rows) =>
-              import spark.implicits._
-              rows.toDF("id", "doc", "distance")
-            case None =>
-              val hits = qs match {
-                case Some(sl) =>
-                  idx.queryQuantized(qe, k, nprobe, sl, pred, include = Seq("cid", "doc"))
-                case None =>
-                  idx.query(qe, k, nprobe, pred, include = Seq("cid", "doc"))
-              }
-              hits.select(col("cid").as("id"), col("doc"), col("distance"))
-          }
-        case VectorStore.AttachedGraph(idx, beamWidth, hops, _) =>
-          // unfiltered probes serve from the JVM-resident hot tier (zero
-          // Spark jobs warm; answers bit-equal to the cold path —
-          // RoutedQuerySpec pins it); predicates keep the pushed-down
-          // index scan, which is where a filter belongs
-          val hotRows =
-            if (pred.isEmpty) idx.hotServe(qe, k, beamWidth, hops) else None
-          hotRows match {
-            case Some(rows) =>
-              import spark.implicits._
-              rows.toDF("id", "doc", "distance")
-            case None =>
-              val hits = idx.query(qe, k, beamWidth, hops, where = pred)
-              val lids = hits.select("id").collect().map(_.getLong(0)).toSeq
-              // payload comes from an In-PRUNED point read of the index's
-              // own id-sorted vectors — never a store scan
-              idx.vectors.filter(col("id").isin(lids: _*))
-                .select(col("id"), col("cid"), col("doc"))
-                .join(broadcast(hits.withColumnRenamed("dist", "distance")), "id")
-                .orderBy(asc("distance"), asc("cid"))
-                .select(col("cid").as("id"), col("doc"), col("distance"))
-          }
+      val hotRows = ai match {
+        // probes serve from the JVM-resident hot tier (the GraphIndex
+        // discipline; bit-equal to the pruned scan), a predicate included
+        // when it folds at plan time; the quantized route goes straight
+        // to the two-phase codes probe
+        case VectorStore.AttachedIvf(idx, nprobe, None) => idx.hotServe(qe, k, nprobe, pred)
+        // unfiltered probes serve from the JVM-resident hot tier (zero
+        // Spark jobs warm; answers bit-equal to the cold path —
+        // RoutedQuerySpec pins it); predicates keep the pushed-down index
+        // scan, which is where a filter belongs
+        case VectorStore.AttachedGraph(idx, beamWidth, hops, _) if pred.isEmpty =>
+          idx.hotServe(qe, k, beamWidth, hops)
+        case _ => None
+      }
+      hotRows match {
+        case Some(rows) =>
+          import spark.implicits._
+          rows.toDF("id", "doc", "distance")
+        case None => sparkRoutedQuery(ai, qe, k, pred)
       }
     }
+
+    /** [[routedQuery]]'s Spark route: the cell-pruned (or codes) IVF probe,
+      * or the graph beam walk plus an In-pruned payload read. */
+    private def sparkRoutedQuery(ai: VectorStore.AttachedIndex, qe: Array[Float],
+                                 k: Int, pred: Option[Column]): DataFrame =
+      ai match {
+        case VectorStore.AttachedIvf(idx, nprobe, qs) =>
+          val hits = qs match {
+            case Some(sl) =>
+              idx.queryQuantized(qe, k, nprobe, sl, pred, include = Seq("cid", "doc"))
+            case None =>
+              idx.query(qe, k, nprobe, pred, include = Seq("cid", "doc"))
+          }
+          hits.select(col("cid").as("id"), col("doc"), col("distance"))
+        case VectorStore.AttachedGraph(idx, beamWidth, hops, _) =>
+          val hits = idx.query(qe, k, beamWidth, hops, where = pred)
+          val lids = hits.select("id").collect().map(_.getLong(0)).toSeq
+          // payload comes from an In-PRUNED point read of the index's
+          // own id-sorted vectors — never a store scan
+          idx.vectors.filter(col("id").isin(lids: _*))
+            .select(col("id"), col("cid"), col("doc"))
+            .join(broadcast(hits.withColumnRenamed("dist", "distance")), "id")
+            .orderBy(asc("distance"), asc("cid"))
+            .select(col("cid").as("id"), col("doc"), col("distance"))
+      }
   }
 }
 

@@ -159,14 +159,39 @@ class HotRouteSpec extends AnyFunSuite with SparkTest {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("routed answers equal the Spark route after a delete plus compact") {
+  test("routed answers equal the Spark route with pending deletes and after compact") {
     val dead = (0 until 500 by 9).map(_.toString)
     coll.delete(dead)
-    ivf.compact()
     text.delete(rows.filter(col("id").isin(dead: _*))
       .select(xxhash64(col("id"))).collect().map(_.getLong(0)).toSeq)
+    routedEqualsSpark("pending deletes")
+    ivf.compact()
     text.compact()
     routedEqualsSpark("after delete + compact")
+  }
+
+  test("a text index inside the budget on disk but not in memory serves from Spark") {
+    // fifty identical 2000-token docs: their position lists compress to a
+    // few KB on disk and decompress to ~400 KB resident
+    val idx = new TextIndex(spark, Scratch.dir("graft_hr_txt_wide"), numBuckets = 4)
+    idx.build(spark.range(0, 50).select(col("id").as("doc_id"),
+      concat_ws(" ", array_repeat(lit("w v"), 1000)).as("text")))
+    def calls() = Seq(
+      idx.queryRanked(Seq("w", "v"), 10), idx.booleanQueryString("+w \"w v\"", 10),
+      idx.phraseQuery(Seq("w", "v"), 10), idx.nearQuery("w", "v", 1, 10))
+    val cold = withHotBudget(1L)(calls().map(rowsOf))
+    assert(cold.forall(_.nonEmpty), "vacuous case")
+    withHotBudget(100000L) {
+      assert(idx.hotFits(), "the on-disk trees fit the budget")
+      assert(calls().map(rowsOf) == cold, "the overflowing load still answers like Spark")
+      assert(!idx.hotFits(), "once the resident state overflows, admission declines")
+      val routed = calls()
+      assert(!routed.exists(isLocal), "over the budget in memory the entries must take Spark")
+      assert(routed.map(rowsOf) == cold)
+    }
+    assert(idx.hotFits(), "a larger budget admits the index again")
+    val routed = calls()
+    assert(routed.forall(isLocal) && routed.map(rowsOf) == cold)
   }
 
   test("a policy sidecar whose meta holds a NULL identity column reads as Absent") {

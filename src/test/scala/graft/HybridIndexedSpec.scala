@@ -39,18 +39,20 @@ class HybridIndexedSpec extends AnyFunSuite with SparkTest {
     def fused(d: Map[Long, Int]) =
       SearchQueries.hybridServeIndexed(spark, tidx, vidx, qe, d)
         .collect().map(_.toSeq).toSeq
-    assert(fused(depths) == fused(Map(0L -> vidx.numCells)),
-      "the calibrated per-probe depth was MEASURED exact — full depth " +
-        "must not change the fusion")
-    // queryRanked == query() + the 1..k rank in the same integer order
-    val plain = tidx.query(SearchQueries.QueryTerms, 10).collect()
-      .map(r => (r.getLong(0), r.getAs[Number](1).longValue, r.getDouble(2))).toSeq
-    val ranked = tidx.queryRanked(SearchQueries.QueryTerms, 10).collect()
-      .map(r => (r.getLong(0), r.getAs[Number](1).longValue, r.getDouble(2), r.getInt(3))).toSeq
-    assert(ranked.map(t => (t._1, t._2, t._3)) == plain,
-      "queryRanked must rank exactly query()'s answer")
-    assert(ranked.map(_._4) == (1 to ranked.length).toSeq,
-      "ranks are the 1..k positions of the (sq desc, doc_id) order")
+    onBothRoutes {
+      assert(fused(depths) == fused(Map(0L -> vidx.numCells)),
+        "the calibrated per-probe depth was MEASURED exact — full depth " +
+          "must not change the fusion")
+      // queryRanked == query() + the 1..k rank in the same integer order
+      val plain = tidx.query(SearchQueries.QueryTerms, 10).collect()
+        .map(r => (r.getLong(0), r.getAs[Number](1).longValue, r.getDouble(2))).toSeq
+      val ranked = tidx.queryRanked(SearchQueries.QueryTerms, 10).collect()
+        .map(r => (r.getLong(0), r.getAs[Number](1).longValue, r.getDouble(2), r.getInt(3))).toSeq
+      assert(ranked.map(t => (t._1, t._2, t._3)) == plain,
+        "queryRanked must rank exactly query()'s answer")
+      assert(ranked.map(_._4) == (1 to ranked.length).toSeq,
+        "ranks are the 1..k positions of the (sq desc, doc_id) order")
+    }
   }
 
   test("batched hybrid serving: the panel surface equals per-probe hybridServeIndexed at its own terms and persisted depth") {

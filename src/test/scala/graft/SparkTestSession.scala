@@ -41,4 +41,8 @@ trait SparkTest {
       else System.setProperty("graft.hot.maxBytes", prev)
     }
   }
+
+  /** Run `check` on the routed entries as they are (hot inside the
+    * budget), then again with every entry forced onto its Spark route. */
+  def onBothRoutes(check: => Unit): Unit = { check; withHotBudget(1L)(check) }
 }

@@ -97,24 +97,27 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     assert(hits.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((1L, 2L), (4L, 1L)),
       "exact consecutive positions only, ranked by occurrence count")
+    assert(idx.phraseQuery(Seq("big", "data"), 10).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L), (4L, 1L)),
+      "the hot route serves the same consecutive-position answer")
 
     // repeated term in the phrase: every slot must be covered
-    assert(idx.phraseQuery(Seq("go", "go", "go"), 10).collect()
+    onBothRoutes(assert(idx.phraseQuery(Seq("go", "go", "go"), 10).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((5L, 1L)),
-      "'go go go' matches doc 5 once (positions 0-2), never the 2-token doc 6")
+      "'go go go' matches doc 5 once (positions 0-2), never the 2-token doc 6"))
 
     // a delete stops serving immediately; an appended doc joins the ranking
     idx.delete(Seq(1L))
-    assert(idx.phraseQuery(Seq("big", "data"), 10).collect()
-      .map(_.getLong(0)).toSeq == Seq(4L))
+    onBothRoutes(assert(idx.phraseQuery(Seq("big", "data"), 10).collect()
+      .map(_.getLong(0)).toSeq == Seq(4L)))
     idx.appendBatch(Seq((7L, "big data big data big data")).toDF("doc_id", "text"), 1L)
-    assert(idx.phraseQuery(Seq("big", "data"), 10).collect()
+    onBothRoutes(assert(idx.phraseQuery(Seq("big", "data"), 10).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((7L, 3L), (4L, 1L)),
-      "cross-batch phrase ranking: appended doc outranks by occurrence count")
+      "cross-batch phrase ranking: appended doc outranks by occurrence count"))
     // compact preserves positions
     idx.compact()
-    assert(idx.phraseQuery(Seq("big", "data"), 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((7L, 3L), (4L, 1L)))
+    onBothRoutes(assert(idx.phraseQuery(Seq("big", "data"), 10).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((7L, 3L), (4L, 1L))))
   }
 
   test("proximity query: windowed position pairs only, ranked, pruned scan") {
@@ -135,10 +138,13 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     assert(hits.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((3L, 2L), (2L, 1L)),
       "only position pairs within the window count, ranked by pair count")
-    idx.delete(Seq(3L))
     assert(idx.nearQuery("big", "data", window = 3, k = 10).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((3L, 2L), (2L, 1L)),
+      "the hot route serves the same windowed pair counts")
+    idx.delete(Seq(3L))
+    onBothRoutes(assert(idx.nearQuery("big", "data", window = 3, k = 10).collect()
       .map(_.getLong(0)).toSeq == Seq(2L),
-      "a deleted doc stops serving immediately")
+      "a deleted doc stops serving immediately"))
   }
 
   test("hot phrase/proximity serving equals the Spark probes; mutations invalidate") {
@@ -153,10 +159,11 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
       (5L, "go go go stop"),
       (6L, "go go")
     ).toDF("doc_id", "text"))
-    def sparkPhrase(p: Seq[String]) = idx.phraseQuery(p, 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    def sparkNear(a: String, b: String, w: Int) = idx.nearQuery(a, b, w, 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def sparkPhrase(p: Seq[String]) = withHotBudget(1L)(idx.phraseQuery(p, 10).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    def sparkNear(a: String, b: String, w: Int) =
+      withHotBudget(1L)(idx.nearQuery(a, b, w, 10).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq)
     // warm and cold, incl. a repeated-term phrase
     assert(idx.hotPhraseQuery(Seq("big", "data"), 10) == sparkPhrase(Seq("big", "data")))
     assert(idx.hotPhraseQuery(Seq("big", "data"), 10) == sparkPhrase(Seq("big", "data")))
@@ -209,16 +216,18 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     assert(idx.query(Seq("big", "data"), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toSeq == scoresBefore,
       "BM25 must be bit-identical across the upgrade")
-    val upgraded = idx.phraseQuery(Seq("big", "data"), 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
     // ... and equals a fresh positional rebuild bit-for-bit
     val fresh = new TextIndex(spark,
       graft.store.Scratch.dir("graft_tidx_upg_ref"),
       numBuckets = 4)
     fresh.build(corpus)
-    assert(upgraded == fresh.phraseQuery(Seq("big", "data"), 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq,
-      "upgraded index must serve phrases exactly like a fresh positional rebuild")
+    onBothRoutes {
+      val upgraded = idx.phraseQuery(Seq("big", "data"), 10).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(upgraded == fresh.phraseQuery(Seq("big", "data"), 10).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq,
+        "upgraded index must serve phrases exactly like a fresh positional rebuild")
+    }
     // idempotent: nothing left to upgrade
     assert(idx.upgradePositions(corpus) == 0)
 
@@ -358,8 +367,9 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     // both positional probes count DISTINCT positions, so the duplicated
     // postings change nothing and each doc appears exactly once
     val fresh = freshIndex()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // the Spark probes, forced over the hot budget
+    def rows(df: => org.apache.spark.sql.DataFrame) =
+      withHotBudget(1L)(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
     val wantPhrase = rows(fresh.phraseQuery(SearchQueries.PhraseTerms, 10))
     val gotPhrase = rows(idx.phraseQuery(SearchQueries.PhraseTerms, 10))
     assert(gotPhrase == wantPhrase, "phrase counts must ignore replayed duplicates")
@@ -440,17 +450,10 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     val must = SearchQueries.BoolMust
     val should = SearchQueries.BoolShould
     val not = SearchQueries.BoolNot
-    val got = idx.booleanQuery(must, should, not, 10).collect()
-    assert(got.nonEmpty, "the clause terms are corpus-frequent — matches must exist")
     // membership semantics against the raw token arrays
     val toksOf = spark.read.parquet(s"$sf001/documents.parquet")
       .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("toks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
-    got.foreach { r =>
-      val t = toksOf(r.getLong(0))
-      assert(must.forall(t.contains), s"doc ${r.getLong(0)} misses a MUST term")
-      assert(not.forall(x => !t.contains(x)), s"doc ${r.getLong(0)} carries a MUST_NOT term")
-    }
     // exhaustiveness + ranking: the boolean result IS query(scoreTerms)
     // over the membership-filtered corpus — brute-filter the unbounded
     // ranked list and compare row-for-row
@@ -461,13 +464,22 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
         must.forall(t.contains) && not.forall(x => !t.contains(x))
       }
       .take(10).map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-    assert(got.map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq == expected,
-      "boolean top-k must equal the brute membership filter over the full ranking")
-    // the one-line syntax parses to the same clauses
-    val parsed = idx.booleanQueryString(
-      (must.map("+" + _) ++ should ++ not.map("-" + _)).mkString(" "), 10).collect()
-    assert(parsed.map(_.getLong(0)).toSeq == got.map(_.getLong(0)).toSeq,
-      "+/-/bare syntax must map to MUST/MUST_NOT/SHOULD")
+    onBothRoutes {
+      val got = idx.booleanQuery(must, should, not, 10).collect()
+      assert(got.nonEmpty, "the clause terms are corpus-frequent — matches must exist")
+      got.foreach { r =>
+        val t = toksOf(r.getLong(0))
+        assert(must.forall(t.contains), s"doc ${r.getLong(0)} misses a MUST term")
+        assert(not.forall(x => !t.contains(x)), s"doc ${r.getLong(0)} carries a MUST_NOT term")
+      }
+      assert(got.map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq == expected,
+        "boolean top-k must equal the brute membership filter over the full ranking")
+      // the one-line syntax parses to the same clauses
+      val parsed = idx.booleanQueryString(
+        (must.map("+" + _) ++ should ++ not.map("-" + _)).mkString(" "), 10).collect()
+      assert(parsed.map(_.getLong(0)).toSeq == got.map(_.getLong(0)).toSeq,
+        "+/-/bare syntax must map to MUST/MUST_NOT/SHOULD")
+    }
     // degenerate clauses fail loudly
     intercept[IllegalArgumentException](idx.booleanQuery(Nil, Nil, Seq("table"), 5))
     intercept[IllegalArgumentException](idx.booleanQuery(Seq("table"), Nil, Seq("table"), 5))
@@ -478,36 +490,38 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     val ph = SearchQueries.PhraseTerms
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-    val got = rows(idx.booleanQuery(Nil, Seq("vector"), Seq("slow"), 10, phrases = Seq(ph)))
-    assert(got.nonEmpty, "the fixture phrase occurs — matches must exist")
-    // every result contains the exact phrase: the independent phrase
-    // probe's doc set is the authority
-    val phraseDocs = idx.phraseQuery(ph, 100000).collect().map(_.getLong(0)).toSet
-    assert(got.forall(r => phraseDocs.contains(r._1)),
-      "every result must contain the exact phrase")
-    // equivalence: the phrase clause IS a membership filter over the
-    // phrase-less ranking with the phrase terms added to the scoring
-    val expected = rows(idx.booleanQuery(Nil, (ph :+ "vector").distinct, Seq("slow"), 100000))
-      .filter(r => phraseDocs.contains(r._1)).take(10)
-    assert(got == expected, "phrase clause must equal filter-over-unbounded-ranking")
-    // the parser maps quoted segments (incl. a dangling '+' before one)
-    val viaParser = rows(idx.booleanQueryString(
-      "\"" + ph.mkString(" ") + "\" vector -slow", 10))
-    assert(viaParser == got, "quoted syntax must map to the phrase clause")
-    // a phrase term that is also MUST_NOT is rejected
-    intercept[IllegalArgumentException](
-      idx.booleanQuery(Nil, Nil, Seq(ph.head), 5, phrases = Seq(ph)))
-    // -"quoted" EXCLUDES the exact phrase (the naive parse would
-    // silently invert it into a MUST) — excluded docs are exactly the
-    // phrase docs, and the remainder ranks like a should-query minus them
-    val negGot = rows(idx.booleanQueryString(
-      "vector -\"" + ph.mkString(" ") + "\"", 10))
-    assert(negGot.nonEmpty && negGot.forall(r => !phraseDocs.contains(r._1)),
-      "a negated phrase must exclude every doc containing it")
-    val negWant = rows(idx.booleanQuery(Nil, Seq("vector"), Nil, 100000))
-      .filterNot(r => phraseDocs.contains(r._1)).take(10)
-    assert(negGot == negWant,
-      "negated-phrase ranking must equal exclusion over the unbounded ranking")
+    onBothRoutes {
+      val got = rows(idx.booleanQuery(Nil, Seq("vector"), Seq("slow"), 10, phrases = Seq(ph)))
+      assert(got.nonEmpty, "the fixture phrase occurs — matches must exist")
+      // every result contains the exact phrase: the independent phrase
+      // probe's doc set is the authority
+      val phraseDocs = idx.phraseQuery(ph, 100000).collect().map(_.getLong(0)).toSet
+      assert(got.forall(r => phraseDocs.contains(r._1)),
+        "every result must contain the exact phrase")
+      // equivalence: the phrase clause IS a membership filter over the
+      // phrase-less ranking with the phrase terms added to the scoring
+      val expected = rows(idx.booleanQuery(Nil, (ph :+ "vector").distinct, Seq("slow"), 100000))
+        .filter(r => phraseDocs.contains(r._1)).take(10)
+      assert(got == expected, "phrase clause must equal filter-over-unbounded-ranking")
+      // the parser maps quoted segments (incl. a dangling '+' before one)
+      val viaParser = rows(idx.booleanQueryString(
+        "\"" + ph.mkString(" ") + "\" vector -slow", 10))
+      assert(viaParser == got, "quoted syntax must map to the phrase clause")
+      // a phrase term that is also MUST_NOT is rejected
+      intercept[IllegalArgumentException](
+        idx.booleanQuery(Nil, Nil, Seq(ph.head), 5, phrases = Seq(ph)))
+      // -"quoted" EXCLUDES the exact phrase (the naive parse would
+      // silently invert it into a MUST) — excluded docs are exactly the
+      // phrase docs, and the remainder ranks like a should-query minus them
+      val negGot = rows(idx.booleanQueryString(
+        "vector -\"" + ph.mkString(" ") + "\"", 10))
+      assert(negGot.nonEmpty && negGot.forall(r => !phraseDocs.contains(r._1)),
+        "a negated phrase must exclude every doc containing it")
+      val negWant = rows(idx.booleanQuery(Nil, Seq("vector"), Nil, 100000))
+        .filterNot(r => phraseDocs.contains(r._1)).take(10)
+      assert(negGot == negWant,
+        "negated-phrase ranking must equal exclusion over the unbounded ranking")
+    }
     // a phrase cannot be both required and excluded
     intercept[IllegalArgumentException](
       idx.booleanQuery(Nil, Seq("vector"), Nil, 5,
@@ -519,12 +533,12 @@ class TextIndexSpec extends AnyFunSuite with SparkTest {
     val terms = SearchQueries.QueryTerms
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-    assert(rows(idx.booleanQuery(Nil, terms, Nil, 10)) == rows(idx.query(terms, 10)),
-      "with no MUST/MUST_NOT clauses booleanQuery must BE query")
+    onBothRoutes(assert(rows(idx.booleanQuery(Nil, terms, Nil, 10)) == rows(idx.query(terms, 10)),
+      "with no MUST/MUST_NOT clauses booleanQuery must BE query"))
     val must = SearchQueries.BoolMust
     val should = SearchQueries.BoolShould
     val not = SearchQueries.BoolNot
-    def cold() = rows(idx.booleanQuery(must, should, not, 10))
+    def cold() = withHotBudget(1L)(rows(idx.booleanQuery(must, should, not, 10)))
     assert(idx.hotBooleanQuery(must, should, not, 10) == cold(),
       "hot boolean must equal the pruned-scan path (first load)")
     assert(idx.hotBooleanQuery(must, should, not, 10) == cold(), "and warm")
